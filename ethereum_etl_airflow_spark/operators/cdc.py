@@ -18,12 +18,14 @@ once the feed guarantees no older events can arrive (watermark).
 
 Execution strategy (Spark-first, scale-first — merge-on-read):
 
-  1. **delta write, not table rewrite**: the batch lands as per-bucket
-     DELTA files (bucket = pmod(xxhash64(doc_id), B)) with exactly ONE
-     shuffle (the bucket repartition). Write cost is O(batch)
-     regardless of table size — at 10^10 accumulated events a
-     copy-on-write MERGE would rewrite the full table every batch;
-     merge-on-read keeps per-batch cost flat.
+  1. **delta write, not table rewrite**: the batch lands as a few
+     level-0 (L0) DELTA files — one per write task, each spanning many
+     buckets (bucket = pmod(xxhash64(doc_id), B)), sorted by
+     ``(_bucket, doc_id)`` — with exactly ONE shuffle (the bucket
+     repartition). Write cost is O(batch) regardless of table size and
+     of B — at 10^10 accumulated events a copy-on-write MERGE would
+     rewrite the full table every batch; merge-on-read keeps per-batch
+     cost flat.
   2. **read-side LWW fold**: readers and compaction collapse rows with
      one hash aggregation ``groupBy(doc_id).agg(max_by(row, (_seq,
      _epoch)))`` (``sinks.snapshot_table.fold_lww``) — duplicates,
@@ -35,8 +37,9 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      in-batch fold (``fold_batch=True``) moves that work to the write
      side when batches carry many updates per key.
   3. **threshold compaction**: buckets whose file count reaches
-     ``table.compact_files`` are folded back to one file INSIDE the
-     same atomic commit — amortized O(log) rewrite like an LSM tree.
+     ``table.compact_files`` are folded back to one level-1 (L1) file
+     per bucket INSIDE the same atomic commit — amortized O(log)
+     rewrite like an LSM tree.
   4. **exactly-once**: the commit is fenced by (app_id, epoch) in the
      snapshot manifest; a replayed epoch is skipped before any work.
      The fold itself is idempotent at event level (same (doc_id, seq)

@@ -179,10 +179,10 @@ def _commit_max_seq(table: SnapshotTable, snap: dict) -> int | None:
             b: [f for f in fs if f not in prev]
             for b, fs in snap["bucket_files"].items()
         }
-    maxes = [
-        int(ranges[f][1]) for fs in added.values() for f in fs if f in ranges
-    ]
-    n_added = sum(len(fs) for fs in added.values())
+    # a multi-bucket (L0) file is listed under every bucket it holds
+    files = {f for fs in added.values() for f in fs}
+    maxes = [int(ranges[f][1]) for f in files if f in ranges]
+    n_added = len(files)
     if n_added and not maxes:
         # ADVICE r4: a cdc_apply commit that ADDED data files but has
         # zero seq-range coverage (e.g. the commit-time footer-stats
@@ -265,9 +265,10 @@ def _revert_to_base(
         )
         return {"base_version": base_v, "buckets_reverted": 0, "version": snap["version"]}
 
-    # byte-identical pre-reorg content of the affected buckets: the raw
-    # file rows at the base version, full LWW history included — the
-    # replace commit swaps the buckets' file lists back in one shot
+    # row-identical pre-reorg content of the affected buckets: the raw
+    # file rows visible to those buckets at the base version, full LWW
+    # history included — the replace commit rewrites them as one file
+    # per bucket and swaps the buckets' file lists in one shot
     restored = table.read_files(buckets=sorted(affected), version=base_v)
     out = restored.withColumn(
         "_bucket", bucket_expr(F.col("doc_id"), head["num_buckets"])

@@ -17,7 +17,7 @@ primitives:
 * **full refresh** recompiles the spec over the whole feed up to
   ``upto_pos`` and replaces every bucket in ONE atomic commit;
 * **incremental** compiles only the new slice ``(last_pos, upto_pos]``
-  and lands it as per-bucket deltas (write cost O(slice), the
+  and lands it as level-0 delta runs (write cost O(slice), the
   merge-on-read property that keeps a 10^10-event history sustainable);
 * epoch fencing makes ``run`` idempotent: a crash-replay with the same
   ``upto_pos`` skips specs whose history already carries that epoch;

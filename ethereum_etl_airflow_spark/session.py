@@ -15,6 +15,26 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+#: ceiling of the derived driver heap, in GiB
+MAX_DRIVER_MEM_GB = 32
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap that fits the host: half of ``MemTotal`` in whole
+    GiB, at least 1g and at most ``MAX_DRIVER_MEM_GB``. In local mode
+    the driver JVM holds every executor too, and the Python workers and
+    the OS need the other half. Hosts without ``/proc/meminfo`` get the
+    ceiling."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, min(MAX_DRIVER_MEM_GB, kib // 2 // 1024**2))}g"
+    except OSError:
+        pass
+    return f"{MAX_DRIVER_MEM_GB}g"
+
 
 def get_spark(
     app_name: str = "ethereum_etl_airflow_spark",
@@ -56,7 +76,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # zstd: ~2x smaller files than snappy for token-array payloads —
         # at 100 TB the scan-IO saving dominates the extra encode CPU
         .config(

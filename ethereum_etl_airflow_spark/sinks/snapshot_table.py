@@ -11,15 +11,23 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
   * per-bucket file manifests: the table is hash-bucketed by
     ``pmod(xxhash64(doc_id), num_buckets)`` (reference:
     ``MOD(ABS(FARM_FINGERPRINT(key)), 3999)``, build_partition_dag.py:119);
-  * **merge-on-read writes**: a change batch lands as per-bucket DELTA
-    files (write cost = O(batch), independent of table size — the
-    property that keeps 10^10-event replay sustainable); readers fold
-    all files of a bucket with one hash aggregation
-    (``max_by(row, (_seq, _epoch))`` = last-writer-wins). When a
-    bucket accumulates ``compact_files`` files, it is compacted back
-    to a single file inside the same atomic commit (amortized O(log)
-    rewrites, LSM-style — the Hudi-MOR / Paimon pattern, and Iceberg's
-    MERGE + maintenance compaction);
+    ``bucket_files[b]`` lists every data file holding rows of bucket b;
+  * **merge-on-read writes, LSM levels**: a change batch lands as a
+    few level-0 (L0) sorted runs — one parquet file per write task,
+    each spanning many buckets, sorted by ``(_bucket, doc_id)`` and
+    storing ``_bucket`` as a column (write cost = O(batch), independent
+    of table size and of the bucket count). An L0 file is listed under
+    every bucket it holds. Readers fold all files of a bucket with one
+    hash aggregation (``max_by(row, (_seq, _epoch))`` = last-writer-
+    wins). When a bucket accumulates ``compact_files`` files, it is
+    compacted back to a single level-1 (L1) file of its own inside the
+    same atomic commit (amortized O(log) rewrites — the Hudi-MOR /
+    Paimon pattern, and Iceberg's MERGE + maintenance compaction). The
+    physical file need not follow the logical bucket (Jigsaw's point):
+    a file's rows count only for the buckets whose list still names it
+    (``file_buckets`` records the bucket set of every multi-bucket
+    file, so a scan filters the rows of buckets that were compacted,
+    rewritten or rewound away since);
   * exactly-once epoch fencing: the manifest carries
     ``last_epoch:<app_id>`` exactly like Iceberg snapshot-property
     fencing (``snapshot.summary['epoch']``; reference analogue:
@@ -33,11 +41,15 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
 Swap-in path for real Iceberg: replace ``commit`` internals with
 ``MERGE INTO`` + snapshot properties; the public API is unchanged.
 
-The bucket value is a pure function of doc_id, so it is never stored —
-it is recomputed on read when needed (no partition-column plumbing).
+The bucket value is a pure function of doc_id (or, for a value-bucketed
+index table, of the value), so it is recomputed on read when needed;
+only the visibility filter of a multi-bucket file reads the stored
+``_bucket`` column, which every such file carries. Files written by
+older versions, and per-bucket files staged by other writers, do not
+carry it and need no filter: a per-bucket file is simply a file whose
+bucket set has one entry, so tables written before L0 runs read as-is.
 
-Scale note on the read-side fold: delta files of one bucket share the
-same doc_id hash bucket, so with Iceberg bucket-partitioning +
+Scale note on the read-side fold: with Iceberg bucket-partitioning +
 storage-partitioned aggregation the fold shuffle disappears entirely;
 here the fold is a hash aggregation whose partial (map-side) combine
 already collapses each file's rows before the exchange.
@@ -76,6 +88,20 @@ def bucket_expr(doc_id_col, num_buckets: int):
     """Salted hash bucket: pmod(xxhash64(key), B) — Spark's stable 64-bit
     hash standing in for BigQuery FARM_FINGERPRINT (SURVEY §2.2 P10)."""
     return F.pmod(F.xxhash64(doc_id_col), F.lit(num_buckets)).cast("int")
+
+
+def _distinct_files(bucket_files: dict[str, list[str]]) -> list[str]:
+    """Every file a ``{bucket: [files]}`` map names, each once, in
+    first-listed order (an L0 file is listed under many buckets)."""
+    return list(dict.fromkeys(f for fs in bucket_files.values() for f in fs))
+
+
+def _outside(rng: list | None, lo, hi) -> bool:
+    """True when a recorded [min, max, ...] range provably misses
+    ``[lo, hi]`` (None bounds are open; no range = never skipped)."""
+    return rng is not None and (
+        (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo)
+    )
 
 
 def fold_lww(df: DataFrame) -> DataFrame:
@@ -196,7 +222,7 @@ class SnapshotTable:
                     int(s["parent_version"]),
                     float(s.get("committed_at") or 0.0),
                     int(s.get("num_buckets") or 0),
-                    sum(len(fs) for fs in s["bucket_files"].values()),
+                    len(_distinct_files(s["bucket_files"])),
                     len(s.get("commit_buckets") or []),
                     str((s.get("lineage") or {}).get("op") or ""),
                 )
@@ -208,24 +234,28 @@ class SnapshotTable:
         )
 
     def meta_files(self, version: int | None = None) -> DataFrame:
-        """One row per live data file of a snapshot (bucket, path, and
-        the per-file _seq skip range when tracked)."""
+        """One row per live data file of a snapshot (the buckets whose
+        list names it, path, and the per-file _seq skip range when
+        tracked)."""
         snap = self.snapshot(version)
         seq_ranges = snap.get("file_seq_ranges") or {}
-        rows = []
+        listed: dict[str, list[int]] = {}
         for b, fs in snap["bucket_files"].items():
             for f in fs:
-                rng = seq_ranges.get(f)
-                rows.append(
-                    (
-                        int(b),
-                        f,
-                        int(rng[0]) if rng else None,
-                        int(rng[1]) if rng else None,
-                    )
+                listed.setdefault(f, []).append(int(b))
+        rows = []
+        for f, bs in listed.items():
+            rng = seq_ranges.get(f)
+            rows.append(
+                (
+                    sorted(bs),
+                    f,
+                    int(rng[0]) if rng else None,
+                    int(rng[1]) if rng else None,
                 )
+            )
         return self.spark.createDataFrame(
-            rows, "bucket int, path string, min_seq long, max_seq long"
+            rows, "buckets array<int>, path string, min_seq long, max_seq long"
         )
 
     def meta_refs(self) -> DataFrame:
@@ -512,13 +542,13 @@ class SnapshotTable:
         locally-written files, absolute for clone references). Scan and
         layer-scope matching must use this canonical form — joining to
         the root and relpath-ing back mangles a clone's absolute entries
-        into '../..' forms that no layer scope contains."""
-        keys = (
-            [str(b) for b in buckets]
-            if buckets is not None
-            else list(snap["bucket_files"])
+        into '../..' forms that no layer scope contains. Each file
+        appears once, however many of the buckets list it."""
+        if buckets is None:
+            return _distinct_files(snap["bucket_files"])
+        return _distinct_files(
+            {str(b): snap["bucket_files"].get(str(b), []) for b in buckets}
         )
-        return [rel for k in keys for rel in snap["bucket_files"].get(k, [])]
 
     def read_files(
         self,
@@ -546,7 +576,7 @@ class SnapshotTable:
         if schema is None or not rels:
             empty_schema = schema or T.StructType([T.StructField("doc_id", T.StringType())])
             return self.spark.createDataFrame([], empty_schema)
-        df = self._scan_rels(snap, rels)
+        df = self._scan_rels(snap, rels, buckets)
         if columns is not None:
             need = ["doc_id", *INTERNAL_COLS]
             sel = need + [c for c in columns if c not in need]
@@ -564,28 +594,62 @@ class SnapshotTable:
                 col = r["new"]
         return col
 
-    def _scan_rels(self, snap: dict, rels: list[str]) -> DataFrame:
-        """Scan data files through the snapshot's CURRENT schema,
-        translating files written before a metadata-only column rename
-        (:meth:`rename_column`): each rename layer scopes the files
-        that carry the old name, so a scoped file is read through a
-        schema with the old name substituted back, then the column is
-        renamed forward. Files sharing the same applicable-rename
-        signature scan together — one read per generation, not per
-        file."""
+    def _scan_rels(
+        self, snap: dict, rels: list[str], buckets: list[int] | None = None
+    ) -> DataFrame:
+        """Scan data files (each at most once) through the snapshot's
+        CURRENT schema, for ``buckets`` (None = every bucket).
+
+        Visibility: a file's rows count only for the buckets whose list
+        still names it. A multi-bucket (L0) file that a compaction,
+        rewrite or rewind has since dropped from some of its buckets —
+        or that is read for a subset of its buckets — is filtered on
+        its stored ``_bucket`` column (``isin(visible buckets)``; every
+        multi-bucket file carries it, and it is the bucket the writer
+        chose even for tables not bucketed by doc_id, such as a value-
+        bucketed secondary index), so rows the rewrite replaced (expired
+        tombstones, physically deleted rows) never resurface. Files
+        listed under every bucket they hold scan unfiltered.
+
+        Renames: files written before a metadata-only column rename
+        (:meth:`rename_column`) are translated — each rename layer
+        scopes the files that carry the old name, so a scoped file is
+        read through a schema with the old name substituted back, then
+        the column is renamed forward.
+
+        Files sharing the same rename signature and bucket filter scan
+        together — one read per group, not per file."""
         schema = T.StructType.fromJson(snap["schema"])
         layers = snap.get("rename_layers") or []
         scoped = [
             (i, {f for fs in lay["files"].values() for f in fs})
             for i, lay in enumerate(layers)
         ]
-        groups: dict[frozenset, list[str]] = {}
-        for rel in rels:
+        held = snap.get("file_buckets") or {}
+        want = None if buckets is None else {str(b) for b in buckets}
+        visible: dict[str, set[int]] = {}
+        if held:
+            for b, fs in snap["bucket_files"].items():
+                if want is None or b in want:
+                    for f in fs:
+                        if f in held:
+                            visible.setdefault(f, set()).add(int(b))
+        groups: dict[tuple, list[str]] = {}
+        for rel in dict.fromkeys(rels):
             sig = frozenset(i for i, files in scoped if rel in files)
-            groups.setdefault(sig, []).append(rel)
+            keep = None
+            if rel in held:
+                vis = visible.get(rel, set())
+                if vis != set(held[rel]):
+                    keep = tuple(sorted(vis))
+            groups.setdefault((sig, keep), []).append(rel)
         parts: list[DataFrame] = []
-        for sig, group in groups.items():
+        for (sig, keep), group in groups.items():
             read_schema = schema
+            if keep is not None:
+                read_schema = T.StructType(
+                    [*schema.fields, T.StructField("_bucket", T.LongType())]
+                )
             # walk renames newest-first to recover the names the files
             # were written under (a column renamed twice unwinds fully)
             for i in sorted(sig, reverse=True):
@@ -605,6 +669,8 @@ class SnapshotTable:
             )
             for i in sorted(sig):  # replay forward
                 df = df.withColumnRenamed(layers[i]["old"], layers[i]["new"])
+            if keep is not None:
+                df = df.where(F.col("_bucket").isin(list(keep)))
             parts.append(df.select(*[f.name for f in schema.fields]))
         out = parts[0]
         for p in parts[1:]:
@@ -733,10 +799,12 @@ class SnapshotTable:
             if lay.get("col")
         ]
 
+        req_buckets = sorted(int(b) for b in req)
+
         def scan(rels: list[str]) -> DataFrame | None:
             if not rels:
                 return None
-            df = self._scan_rels(snap, rels)
+            df = self._scan_rels(snap, rels, req_buckets)
             if columns is not None:
                 need = ["doc_id", *INTERNAL_COLS, *pred_cols]
                 sel = need + [c for c in columns if c not in need]
@@ -833,7 +901,12 @@ class SnapshotTable:
           a key's 3 probe bits cannot contain that key; files WITHOUT a
           bloom entry (written before blooms were enabled, or under a
           different bloom_bits) are always kept — enabling blooms on a
-          table with history never produces a false absent."""
+          table with history never produces a false absent. Entries are
+          keyed by bucket within a file (``{bucket: words}``), so a
+          multi-bucket L0 file is probed only with the words of the
+          key's own bucket; legacy entries are a bare word list.
+
+        Each file is returned at most once."""
         from ethereum_etl_airflow_spark.functions.hashing import (
             bucket_of,
             spark_xxhash64,
@@ -850,6 +923,10 @@ class SnapshotTable:
                 if rel in seen:
                     continue
                 words = blooms.get(rel)
+                if isinstance(words, dict):
+                    # a multi-bucket file keeps one bloom per bucket;
+                    # a bucket without one stays always-scanned
+                    words = words.get(str(b))
                 if words is not None and bits:
                     may_contain = any(
                         all(
@@ -925,17 +1002,17 @@ class SnapshotTable:
         (pre-feature commits, missing stats) are always kept — never a
         false skip."""
         ranges = snap.get("file_seq_ranges") or {}
-        out: list[str] = []
-        for b in sorted(snap["bucket_files"], key=int):
-            for rel in snap["bucket_files"][b]:
-                r = ranges.get(rel)
-                if r is not None and (
-                    (hi is not None and r[0] > hi)
-                    or (lo is not None and r[1] < lo)
-                ):
-                    continue
-                out.append(rel)
-        return out
+        return [
+            rel
+            for rel in cls._sorted_files(snap)
+            if not _outside(ranges.get(rel), lo, hi)
+        ]
+
+    @staticmethod
+    def _sorted_files(snap: dict) -> list[str]:
+        """Every live file once, in bucket order of first listing."""
+        bf = snap["bucket_files"]
+        return _distinct_files({b: bf[b] for b in sorted(bf, key=int)})
 
     def read_seq_range(
         self,
@@ -974,17 +1051,11 @@ class SnapshotTable:
         ``col`` (pre-stats commits, missing footer stats) are always
         kept — never a false skip."""
         stats = snap.get("file_col_stats") or {}
-        out: list[str] = []
-        for b in sorted(snap["bucket_files"], key=int):
-            for rel in snap["bucket_files"][b]:
-                r = (stats.get(rel) or {}).get(col)
-                if r is not None and (
-                    (hi is not None and r[0] > hi)
-                    or (lo is not None and r[1] < lo)
-                ):
-                    continue
-                out.append(rel)
-        return out
+        return [
+            rel
+            for rel in cls._sorted_files(snap)
+            if not _outside((stats.get(rel) or {}).get(col), lo, hi)
+        ]
 
     def read_where(
         self,
@@ -1050,7 +1121,9 @@ class SnapshotTable:
             return self.spark.createDataFrame(
                 [], schema or T.StructType([T.StructField("doc_id", T.StringType())])
             )
-        pruned = self._scan_rels(snap, rels).where(F.col("doc_id").isin(doc_ids))
+        pruned = self._scan_rels(snap, rels, key_buckets).where(
+            F.col("doc_id").isin(doc_ids)
+        )
         folded = fold_lww(pruned)
         if "_tombstone" in folded.columns:
             folded = folded.where(~F.coalesce(F.col("_tombstone"), F.lit(False)))
@@ -1129,6 +1202,19 @@ class SnapshotTable:
         replaced), for every other bucket they are a DELTA (files
         appended). Epoch fencing property is advanced for ``app_id``.
 
+        File layout: the delta rows land as level-0 sorted runs — one
+        parquet file per write task (``spark.sql.shuffle.partitions``
+        after the bucket repartition), sorted by ``(_bucket, doc_id)``,
+        storing ``_bucket``, and listed in ``bucket_files[b]`` for every
+        bucket b it holds (read back from the file's ``_bucket`` column,
+        so ``bucket_rows_written`` is exact). Rows of replaced buckets
+        (compaction, :meth:`compact`, :meth:`delete_where`,
+        :meth:`rewrite_sorted`, rebucket, reorg rewinds) land as one
+        level-1 file per bucket. Manifests record multi-bucket files'
+        bucket sets in ``file_buckets`` for the read-side visibility
+        rule (see :meth:`_scan_rels`). A failed footer or ``_bucket``
+        read raises before anything is published.
+
         ``align_buckets=False`` skips the bucket repartition — valid
         ONLY when the caller knows ``out_df``'s partitioning already
         groups buckets (pre-bucketed feed, e.g. a key-partitioned
@@ -1172,81 +1258,103 @@ class SnapshotTable:
             if align_buckets:
                 n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
                 out_df = out_df.repartition(n_out, "_bucket")
+            # route each row to its file: rows of a bucket this commit
+            # replaces go to that bucket's own L1 file (_run = bucket);
+            # every other row goes to its write task's L0 run (_run = -1)
+            # — one file per task, spanning many buckets, keeping
+            # _bucket as a column. With aligned buckets each bucket lands
+            # in exactly one file per commit, so per-bucket file counts
+            # (and the compaction cadence) do not depend on the layout.
+            if full_replace:
+                run = F.col("_bucket")
+            elif replace_buckets:
+                run = F.when(
+                    F.col("_bucket").isin(sorted(replace_buckets)), F.col("_bucket")
+                ).otherwise(F.lit(-1))
+            else:
+                run = F.lit(-1)
             # sort within each file: parquet column min/max stats then let
-            # scans skip whole row groups (Iceberg sort-order analogue; the
-            # write already sorts by _bucket for partitionBy, the extra keys
-            # cost nothing extra). Default key = doc_id (point lookups);
-            # ``sort_cols`` overrides for layout rewrites (e.g. a Z-order
-            # key for 2-D pruning, or _seq for replay-range scans).
-            sort_keys = ["_bucket", *(sort_cols or ["doc_id"])]
-            out_df.sortWithinPartitions(*sort_keys).write.partitionBy(
-                "_bucket"
-            ).parquet(out_dir)
+            # scans skip whole row groups (Iceberg sort-order analogue).
+            # Default key = doc_id (point lookups); ``sort_cols``
+            # overrides for layout rewrites (e.g. a Z-order key for 2-D
+            # pruning, or _seq for replay-range scans).
+            sort_keys = ["_run", "_bucket", *(sort_cols or ["doc_id"])]
+            out_df.withColumn("_run", run.cast("int")).sortWithinPartitions(
+                *sort_keys
+            ).write.partitionBy("_run").parquet(out_dir)
 
-        # collect the files each bucket landed in
-        written: dict[str, list[str]] = dict(prewritten or {})
+        # each written file's bucket set and per-bucket row counts (an
+        # L1 file's bucket is its directory; an L0 run's come from its
+        # _bucket column), its _seq skip range and column stats — all
+        # from pyarrow footer/column reads on the driver, no Spark job.
+        # A failed read fails the commit before anything is published:
+        # later seq-range reads and reorg rewinds rely on this evidence.
+        # file -> its one bucket, or None for an L0 run
+        file_bucket: dict[str, str | None] = {
+            f: str(b) for b, files in (prewritten or {}).items() for f in files
+        }
         if os.path.isdir(out_dir):
-            for entry in os.listdir(out_dir):
-                if not entry.startswith("_bucket="):
+            for entry in sorted(os.listdir(out_dir)):
+                if not entry.startswith("_run="):
                     continue
-                b = entry.split("=", 1)[1]
+                run_b = entry.split("=", 1)[1]
                 rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-                files = [
-                    os.path.join(rel_dir, fn)
-                    for fn in os.listdir(os.path.join(out_dir, entry))
-                    if fn.endswith(".parquet")
-                ]
-                written.setdefault(b, []).extend(files)
+                for fn in sorted(os.listdir(os.path.join(out_dir, entry))):
+                    if fn.endswith(".parquet"):
+                        file_bucket[os.path.join(rel_dir, fn)] = (
+                            None if run_b == "-1" else run_b
+                        )
 
-        # per-file Bloom words for THIS commit's rows: one O(batch)
-        # aggregation; each file written for bucket b gets bucket b's
-        # words (with aligned buckets a commit writes one file per
-        # bucket, so the entry is exact; an unaligned multi-file bucket
-        # gets a superset bloom per file — still correct, never false-
-        # absent)
-        new_bloom_entries: dict[str, list[int]] = {}
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        written: dict[str, list[str]] = {}
+        new_file_buckets: dict[str, list[int]] = {}
+        bucket_rows: dict[str, int] = {}
+        new_seq_entries: dict[str, list[int]] = {}
+        new_stat_entries: dict[str, dict] = {}
+        for f, b in file_bucket.items():
+            pf = pq.ParquetFile(os.path.join(self.root, f))
+            md = pf.metadata
+            if b is not None:
+                counts = {b: md.num_rows}
+            else:
+                vc = pc.value_counts(pf.read(columns=["_bucket"]).column(0))
+                counts = {
+                    str(v["values"].as_py()): int(v["counts"].as_py()) for v in vc
+                }
+            for b, n in counts.items():
+                written.setdefault(b, []).append(f)
+                bucket_rows[b] = bucket_rows.get(b, 0) + n
+            if len(counts) > 1:
+                new_file_buckets[f] = sorted(int(b) for b in counts)
+            rng = self._seq_range_from_footer(md)
+            if rng is not None:
+                new_seq_entries[f] = rng
+            if self.stats_cols:
+                stats = {
+                    c: r
+                    for c in self.stats_cols
+                    if (r := self._col_range_from_footer(md, c)) is not None
+                }
+                if stats:
+                    new_stat_entries[f] = stats
+
+        # per-(file, bucket) Bloom words for THIS commit's rows: one
+        # O(batch) aggregation by bucket; a multi-bucket file keeps
+        # each bucket's words separately, so a lookup probes only the
+        # key's own bucket (with aligned buckets each bucket lands in
+        # one file, so every entry is exact; an unaligned bucket spread
+        # over several files gets a superset bloom per file — still
+        # correct, never false-absent)
+        new_bloom_entries: dict[str, dict[str, list[int]]] = {}
         if self.bloom_bits and written and out_df is not None:
             bucket_words = self._commit_bloom_words(out_df)
             for b, files in written.items():
                 words = bucket_words.get(b)
                 if words is not None:
                     for f in files:
-                        new_bloom_entries[f] = words
-
-        # per-partition lineage + per-file _seq skip index, both from
-        # the parquet footers of this commit's files (driver-local
-        # metadata reads, no Spark job): rows landed per bucket (the
-        # north rule's per-partition offset/count/snapshot lineage) and
-        # each file's [min,max] _seq — delta files are written per
-        # epoch, so the ranges are tight and disjoint, making
-        # replay-from-offset scans O(files in range), not O(files)
-        bucket_rows: dict[str, int] = {}
-        new_seq_entries: dict[str, list[int]] = {}
-        new_stat_entries: dict[str, dict] = {}
-        try:
-            import pyarrow.parquet as pq
-
-            for b, files in written.items():
-                n = 0
-                for f in files:
-                    md = pq.ParquetFile(os.path.join(self.root, f)).metadata
-                    n += md.num_rows
-                    rng = self._seq_range_from_footer(md)
-                    if rng is not None:
-                        new_seq_entries[f] = rng
-                    if self.stats_cols:
-                        stats = {
-                            c: r
-                            for c in self.stats_cols
-                            if (r := self._col_range_from_footer(md, c)) is not None
-                        }
-                        if stats:
-                            new_stat_entries[f] = stats
-                bucket_rows[b] = n
-        except Exception:
-            bucket_rows = {}
-            new_seq_entries = {}
-            new_stat_entries = {}
+                        new_bloom_entries.setdefault(f, {})[b] = words
 
         schema = new_schema or self.schema()
         if schema is None:
@@ -1298,7 +1406,17 @@ class SnapshotTable:
                 "properties": props,
                 "lineage": lineage or {},
             }
-            live = {f for fs in bucket_files.values() for f in fs}
+            live = set(_distinct_files(bucket_files))
+            file_buckets = {
+                f: bs
+                for f, bs in {
+                    **(base.get("file_buckets") or {}),
+                    **new_file_buckets,
+                }.items()
+                if f in live
+            }
+            if file_buckets:
+                snap["file_buckets"] = file_buckets
             seq_ranges = {
                 f: r
                 for f, r in {
@@ -1319,37 +1437,37 @@ class SnapshotTable:
             }
             if col_stats:
                 snap["file_col_stats"] = col_stats
+
+            def carry(lays: list[dict]) -> list[dict]:
+                """Layers whose per-bucket file scope, intersected with
+                the bucket's files still live, is not empty."""
+                kept = []
+                for lay in lays:
+                    scope = {}
+                    for b, fs in lay["files"].items():
+                        now = set(bucket_files.get(b, ()))
+                        if fs := [f for f in fs if f in now]:
+                            scope[b] = fs
+                    if scope:
+                        kept.append({**lay, "files": scope})
+                return kept
+
             # merge-on-read delete layers: base layers carry forward with
-            # their file scope intersected against the files still live —
-            # a compaction/rebucket that rewrote a bucket (its read
-            # already materialized the masks via read_raw) drops the
-            # bucket's scope automatically; fully-drained layers vanish
-            kept_layers: list[dict] = []
-            for lay in list(base.get("delete_layers") or []) + list(
-                delete_layers or []
-            ):
-                scope = {
-                    b: [f for f in fs if f in live]
-                    for b, fs in lay["files"].items()
-                }
-                scope = {b: fs for b, fs in scope.items() if fs}
-                if scope:
-                    kept_layers.append({**lay, "files": scope})
+            # each bucket's scope intersected against that bucket's live
+            # files — a compaction/rebucket that rewrote a bucket (its
+            # read already materialized the masks via read_raw) drops
+            # the bucket's scope automatically, even while a multi-bucket
+            # file stays live for other buckets; drained layers vanish
+            kept_layers = carry(
+                list(base.get("delete_layers") or []) + list(delete_layers or [])
+            )
             if kept_layers:
                 snap["delete_layers"] = kept_layers
             # column-rename layers: same carry-forward; a layer drains
             # once every file written under the old name is rewritten
-            kept_renames: list[dict] = []
-            for lay in list(base.get("rename_layers") or []) + list(
-                rename_layers or []
-            ):
-                scope = {
-                    b: [f for f in fs if f in live]
-                    for b, fs in lay["files"].items()
-                }
-                scope = {b: fs for b, fs in scope.items() if fs}
-                if scope:
-                    kept_renames.append({**lay, "files": scope})
+            kept_renames = carry(
+                list(base.get("rename_layers") or []) + list(rename_layers or [])
+            )
             if kept_renames:
                 snap["rename_layers"] = kept_renames
                 # re-introducing a column named like a live layer's OLD
@@ -1759,6 +1877,7 @@ class SnapshotTable:
             "lineage": {"op": "rollback", "to_version": version},
         }
         for key in (
+            "file_buckets",
             "file_seq_ranges",
             "file_col_stats",
             "file_blooms",
@@ -1781,6 +1900,8 @@ class SnapshotTable:
         bucket+Bloom plan as :meth:`lookup`; versions already folded
         away by compaction are gone (history depth = compaction
         cadence, like any LSM)."""
+        from ethereum_etl_airflow_spark.functions.hashing import bucket_of
+
         snap = self.snapshot(version)
         rels = self.plan_lookup(snap, doc_ids)
         schema = T.StructType.fromJson(snap["schema"]) if snap["schema"] else None
@@ -1788,8 +1909,10 @@ class SnapshotTable:
             return self.spark.createDataFrame(
                 [], schema or T.StructType([T.StructField("doc_id", T.StringType())])
             )
+        nb = int(snap.get("num_buckets") or 1)
+        key_buckets = sorted({bucket_of(d, nb) for d in doc_ids})
         return (
-            self._scan_rels(snap, rels)
+            self._scan_rels(snap, rels, key_buckets)
             .where(F.col("doc_id").isin(doc_ids))
             .orderBy("doc_id", F.desc("_seq"), F.desc("_epoch"))
         )
@@ -1830,7 +1953,7 @@ class SnapshotTable:
             b: [absolutize(f) for f in fs]
             for b, fs in snap["bucket_files"].items()
         }
-        for key in ("file_seq_ranges", "file_col_stats", "file_blooms"):
+        for key in ("file_buckets", "file_seq_ranges", "file_col_stats", "file_blooms"):
             if snap.get(key):
                 new_snap[key] = {absolutize(f): v for f, v in snap[key].items()}
         for key in ("delete_layers", "rename_layers"):

@@ -21,7 +21,7 @@ Design:
   re-pointed at a table-to-table edge.
 * **O(changed buckets) per cycle**: table_changes prunes both snapshot
   reads to the buckets the upstream commits touched (manifest lineage);
-  the derived commit writes per-bucket deltas. Nothing scales with
+  the derived commit writes level-0 delta runs. Nothing scales with
   total table size — the property that keeps a 10^10-row derived chain
   sustainable.
 * **transform** is a keyed 1:1 DataFrame transform (projection /

@@ -154,20 +154,23 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
                     for b, files in snap["bucket_files"].items()
                 }
             compacted = {str(b) for b in lin.get("compacted_buckets") or []}
+            # one partition per file: a multi-bucket (L0) file is listed
+            # under every bucket it holds
+            in_compacted: dict[str, bool] = {}
             for b, files in added.items():
                 for rel in files:
-                    out.append(
-                        _FilePartition(
-                            path=os.path.join(self.root, rel),
-                            version=v,
-                            # a compacting CDC commit folds old rows into
-                            # the same new file — emit only this epoch's
-                            epoch_filter=(
-                                int(lin["epoch"]) if b in compacted else None
-                            ),
-                            schema_json=schema_json,
-                        )
+                    in_compacted[rel] = in_compacted.get(rel, False) or b in compacted
+            for rel, folded in in_compacted.items():
+                out.append(
+                    _FilePartition(
+                        path=os.path.join(self.root, rel),
+                        version=v,
+                        # a compacting CDC commit folds old rows into
+                        # the bucket's new file — emit only this epoch's
+                        epoch_filter=int(lin["epoch"]) if folded else None,
+                        schema_json=schema_json,
                     )
+                )
         return out or [
             # Spark requires >= 1 partition per batch; an empty marker
             # partition yields no rows

@@ -106,3 +106,30 @@ def test_bloom_disabled_table_ignores_blooms(spark, tmp_path):
     _write(spark, t, ["a", "b"], seq=1)
     assert "file_blooms" not in t.snapshot()
     assert {r.doc_id for r in t.lookup(["a"]).collect()} == {"a"}
+
+
+def test_bloom_over_multi_bucket_runs_keeps_per_bucket_precision(spark, tmp_path):
+    """A delta commit writes a few files that each hold many buckets;
+    their blooms are kept per (file, bucket), so a lookup never drops a
+    file that holds the key and still prunes negatives."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=32, bloom_bits=4096)
+    for seq in range(3):
+        _write(spark, t, [f"doc-{seq}-{i}" for i in range(200)], seq=seq + 1)
+    snap = t.snapshot()
+    shared = snap.get("file_buckets") or {}
+    assert shared, "expected files spanning several buckets"
+    for f, held in shared.items():
+        assert sorted(int(b) for b in snap["file_blooms"][f]) == held
+    holders: dict[str, set[str]] = {}
+    for f in {f for fs in snap["bucket_files"].values() for f in fs}:
+        for k in pq.read_table(str(tmp_path / "t" / f), columns=["doc_id"]).column(0).to_pylist():
+            holders.setdefault(k, set()).add(f)
+    for k, fs in holders.items():
+        planned = SnapshotTable.plan_lookup(snap, [k])
+        assert fs <= set(planned), k
+        assert len(planned) == len(set(planned))
+    assert SnapshotTable.plan_lookup(snap, ["nope-1", "nope-2"]) == []
+    got = {r.doc_id for r in t.lookup(["doc-0-5", "doc-2-199", "nope-1"]).collect()}
+    assert got == {"doc-0-5", "doc-2-199"}
