@@ -18,14 +18,16 @@ once the feed guarantees no older events can arrive (watermark).
 
 Execution strategy (Spark-first, scale-first — merge-on-read):
 
-  1. **delta write, not table rewrite**: the batch lands as a few
-     level-0 (L0) DELTA files — one per write task, each spanning many
-     buckets (bucket = pmod(xxhash64(doc_id), B)), sorted by
-     ``(_bucket, doc_id)`` — with exactly ONE shuffle (the bucket
-     repartition). Write cost is O(batch) regardless of table size and
-     of B — at 10^10 accumulated events a copy-on-write MERGE would
-     rewrite the full table every batch; merge-on-read keeps per-batch
-     cost flat.
+  1. **delta write, not table rewrite**: the batch is gathered to the
+     driver as Arrow in ONE Spark job with no shuffle, and pyarrow
+     writes it as a few level-0 (L0) DELTA files — one per
+     ``_bucket % P`` class (P grows with the batch, up to the driver's
+     cores), each spanning many buckets
+     (bucket = pmod(xxhash64(doc_id), B)), sorted by
+     ``(_bucket, doc_id)`` (``SnapshotTable.commit``). Write cost is
+     O(batch) regardless of table size and of B — at 10^10 accumulated
+     events a copy-on-write MERGE would rewrite the full table every
+     batch; merge-on-read keeps per-batch cost flat.
   2. **read-side LWW fold**: readers and compaction collapse rows with
      one hash aggregation ``groupBy(doc_id).agg(max_by(row, (_seq,
      _epoch)))`` (``sinks.snapshot_table.fold_lww``) — duplicates,
@@ -33,13 +35,12 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      Partial (map-side) combine means a hot doc_id collapses to one
      row per input partition BEFORE the shuffle — dedup and hot-key
      skew defense in a single operator. (A row_number window would
-     sort and push every hot-key row through the shuffle.) An optional
-     in-batch fold (``fold_batch=True``) moves that work to the write
-     side when batches carry many updates per key.
+     sort and push every hot-key row through the shuffle.)
   3. **threshold compaction**: buckets whose file count reaches
      ``table.compact_files`` are folded back to one level-1 (L1) file
      per bucket INSIDE the same atomic commit — amortized O(log)
-     rewrite like an LSM tree.
+     rewrite like an LSM tree. Such a commit sets its size from the
+     table, not the batch, so it runs a distributed Spark write.
   4. **exactly-once**: the commit is fenced by (app_id, epoch) in the
      snapshot manifest; a replayed epoch is skipped before any work.
      The fold itself is idempotent at event level (same (doc_id, seq)
@@ -80,8 +81,6 @@ def apply_changes(
     app_id: str,
     epoch: int,
     verify: bool = True,
-    fold_batch: bool = False,
-    feed_bucketed: bool = False,
     properties: dict | None = None,
 ) -> dict | None:
     """Apply one change batch; returns lineage dict, or None if the
@@ -131,15 +130,10 @@ def apply_changes(
             for c in ["_seq", "_epoch", "_tombstone", *data_cols]
         ],
     )
-    # LSM append discipline: by default the batch is written UNFOLDED —
-    # the read/compaction-side fold already resolves duplicates and
-    # out-of-order updates, so the write path needs exactly ONE shuffle
-    # (the _bucket repartition inside commit). fold_batch=True adds an
-    # in-batch LWW fold (hash agg with map-side combine) first — worth
-    # it only when a batch carries many updates per key, shrinking the
-    # delta at the cost of a second shuffle.
-    if fold_batch:
-        typed = fold_lww(typed)
+    # LSM append discipline: the batch is written UNFOLDED — the
+    # read/compaction-side fold already resolves duplicates and
+    # out-of-order updates, so a non-compacting apply is one Spark job
+    # with no shuffle (the gather inside commit)
     delta = typed.withColumn(
         "_bucket", bucket_expr(F.col("doc_id"), table.num_buckets)
     )
@@ -181,11 +175,6 @@ def apply_changes(
         F.count_if(F.col("_tombstone")).alias("tombstones_out"),
     )
 
-    # pre-bucketed feed (key-partitioned Kafka topic shape): the batch's
-    # partitioning already groups buckets -> zero-shuffle ingest. A
-    # compaction commit mixes in groupBy output, which is doc_id- not
-    # bucket-partitioned, so those (rare, amortized) commits realign.
-    align = not (feed_bucketed and not compact_set and not fold_batch)
     snap = table.commit(
         out,
         replace_buckets=compact_set,
@@ -201,7 +190,6 @@ def apply_changes(
             "epoch": epoch,
             "compacted_buckets": sorted(compact_set),
         },
-        align_buckets=align,
         properties=properties,
     )
 
@@ -268,7 +256,7 @@ def check_invariants(out: DataFrame) -> DataFrame:
     """Per-batch data-quality guard (reference: verify/sqls/*.sql run
     after every load, build_load_dag.py:220-234): every surviving row
     must satisfy n_tok == size(tokens). Expressed as a fail-fast
-    column so it rides the write job — no extra pass."""
+    column so it rides the commit's Spark job — no extra pass."""
     cols = set(out.columns)
     if {"tokens", "n_tok"} <= cols:
         violation = F.col("n_tok").isNotNull() & (

@@ -12,17 +12,21 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
     ``pmod(xxhash64(doc_id), num_buckets)`` (reference:
     ``MOD(ABS(FARM_FINGERPRINT(key)), 3999)``, build_partition_dag.py:119);
     ``bucket_files[b]`` lists every data file holding rows of bucket b;
-  * **merge-on-read writes, LSM levels**: a change batch lands as a
-    few level-0 (L0) sorted runs — one parquet file per write task,
-    each spanning many buckets, sorted by ``(_bucket, doc_id)`` and
-    storing ``_bucket`` as a column (write cost = O(batch), independent
-    of table size and of the bucket count). An L0 file is listed under
-    every bucket it holds. Readers fold all files of a bucket with one
-    hash aggregation (``max_by(row, (_seq, _epoch))`` = last-writer-
-    wins). When a bucket accumulates ``compact_files`` files, it is
-    compacted back to a single level-1 (L1) file of its own inside the
-    same atomic commit (amortized O(log) rewrites — the Hudi-MOR /
-    Paimon pattern, and Iceberg's MERGE + maintenance compaction). The
+  * **merge-on-read writes, LSM levels**: a change batch is gathered
+    to the driver as Arrow (one Spark job, no shuffle) and lands as a
+    few level-0 (L0) sorted runs written by pyarrow — one parquet file
+    per ``_bucket % P`` class (P = one run per 32k rows, at most one
+    per driver core), each spanning many buckets, sorted by
+    ``(_bucket, doc_id)`` and storing ``_bucket`` as a column (write
+    cost = O(batch), independent of table size and of the bucket
+    count; the driver holds one batch). An L0 file is
+    listed under every bucket it holds. Readers fold all files of a
+    bucket with one hash aggregation (``max_by(row, (_seq, _epoch))``
+    = last-writer-wins). When a bucket accumulates ``compact_files``
+    files, it is compacted back to a single level-1 (L1) file of its
+    own inside the same atomic commit, by a distributed Spark write
+    (amortized O(log) rewrites — the Hudi-MOR / Paimon pattern, and
+    Iceberg's MERGE + maintenance compaction). The
     physical file need not follow the logical bucket (Jigsaw's point):
     a file's rows count only for the buckets whose list still names it
     (``file_buckets`` records the bucket set of every multi-bucket
@@ -63,6 +67,7 @@ import os
 import re
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,6 +125,13 @@ def fold_lww(df: DataFrame) -> DataFrame:
     )
 
 
+def _driver_cores() -> int:
+    """CPUs this process may run on (pure-delta runs are written here)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 class SnapshotTable:
     """A keyed, snapshot-versioned, merge-on-read table on a
     Hadoop-compatible FS."""
@@ -142,9 +154,10 @@ class SnapshotTable:
         before blooms were enabled (or under a different bloom_bits)
         simply have no bloom entry and are always scanned, so coverage
         is correct by construction — enabling blooms on a table with
-        existing data never hides pre-existing keys. Costs one extra
-        O(batch) aggregation per commit — enable for tables serving
-        point lookups.
+        existing data never hides pre-existing keys. A delta commit
+        computes the probe positions inside its gather job and ORs the
+        words on the driver; a rewriting commit costs one extra O(batch)
+        aggregation — enable for tables serving point lookups.
 
         ``stats_cols`` lists payload columns whose per-file [min, max]
         is recorded in the manifest from the parquet footers at commit
@@ -1186,7 +1199,6 @@ class SnapshotTable:
         epoch: int,
         lineage: dict | None = None,
         new_schema: T.StructType | None = None,
-        align_buckets: bool = True,
         full_replace: bool = False,
         new_num_buckets: int | None = None,
         properties: dict | None = None,
@@ -1202,23 +1214,30 @@ class SnapshotTable:
         replaced), for every other bucket they are a DELTA (files
         appended). Epoch fencing property is advanced for ``app_id``.
 
-        File layout: the delta rows land as level-0 sorted runs — one
-        parquet file per write task (``spark.sql.shuffle.partitions``
-        after the bucket repartition), sorted by ``(_bucket, doc_id)``,
-        storing ``_bucket``, and listed in ``bucket_files[b]`` for every
-        bucket b it holds (read back from the file's ``_bucket`` column,
-        so ``bucket_rows_written`` is exact). Rows of replaced buckets
-        (compaction, :meth:`compact`, :meth:`delete_where`,
-        :meth:`rewrite_sorted`, rebucket, reorg rewinds) land as one
-        level-1 file per bucket. Manifests record multi-bucket files'
-        bucket sets in ``file_buckets`` for the read-side visibility
-        rule (see :meth:`_scan_rels`). A failed footer or ``_bucket``
-        read raises before anything is published.
+        File layout and write path follow what the commit writes:
 
-        ``align_buckets=False`` skips the bucket repartition — valid
-        ONLY when the caller knows ``out_df``'s partitioning already
-        groups buckets (pre-bucketed feed, e.g. a key-partitioned
-        Kafka topic): the ingest becomes shuffle-free.
+        * a PURE DELTA commit (no ``replace_buckets``, no
+          ``full_replace``) is gathered to the driver as Arrow in one
+          Spark job without a shuffle, then written by pyarrow as P
+          level-0 (L0) sorted runs (one per 32k rows, at most one per
+          driver core): run r holds the buckets with
+          ``_bucket % P == r``, sorted by
+          ``(_bucket, doc_id)`` and storing ``_bucket``, so each bucket
+          lands in exactly one file per commit (see :meth:`_write_runs`);
+        * a commit that replaces buckets (compaction, :meth:`compact`,
+          :meth:`delete_where`, :meth:`rewrite_sorted`, rebucket, reorg
+          rewinds) sets its size from the table, not one batch, and
+          runs a distributed Spark write: rows of replaced buckets land
+          as one level-1 (L1) file per bucket, the other rows as one L0
+          run per write task after the bucket repartition.
+
+        Every file is listed in ``bucket_files[b]`` for each bucket b it
+        holds (``bucket_rows_written`` is exact), and manifests record
+        multi-bucket files' bucket sets in ``file_buckets`` for the
+        read-side visibility rule (see :meth:`_scan_rels`). Missing
+        footer or bucket evidence raises before anything is published.
+        The commit's Spark jobs carry the tag and description
+        ``cdc:<app_id>:<epoch>:<flush|rewrite>``.
 
         ``properties`` merges extra key/values into the snapshot
         properties in the SAME atomic commit (the Iceberg
@@ -1251,81 +1270,51 @@ class SnapshotTable:
         only atomicity + fencing (the Iceberg-commit seam).
         """
         prev = self.snapshot()
-        commit_id = uuid.uuid4().hex
-        out_dir = os.path.join(self._data, commit_id)
+        out_dir = os.path.join(self._data, uuid.uuid4().hex)
+        rewrite = full_replace or bool(replace_buckets)
 
+        # each new file's per-bucket row counts and parquet footer (its
+        # _seq skip range and column stats), and this commit's Bloom
+        # words per bucket. Missing evidence fails the commit before
+        # anything is published: later seq-range reads and reorg
+        # rewinds rely on it.
+        evidence: dict[str, tuple[dict[str, int], object]] = {}
+        bucket_words: dict[str, list[int]] = {}
         if out_df is not None:
-            if align_buckets:
-                n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-                out_df = out_df.repartition(n_out, "_bucket")
-            # route each row to its file: rows of a bucket this commit
-            # replaces go to that bucket's own L1 file (_run = bucket);
-            # every other row goes to its write task's L0 run (_run = -1)
-            # — one file per task, spanning many buckets, keeping
-            # _bucket as a column. With aligned buckets each bucket lands
-            # in exactly one file per commit, so per-bucket file counts
-            # (and the compaction cadence) do not depend on the layout.
-            if full_replace:
-                run = F.col("_bucket")
-            elif replace_buckets:
-                run = F.when(
-                    F.col("_bucket").isin(sorted(replace_buckets)), F.col("_bucket")
-                ).otherwise(F.lit(-1))
-            else:
-                run = F.lit(-1)
-            # sort within each file: parquet column min/max stats then let
-            # scans skip whole row groups (Iceberg sort-order analogue).
-            # Default key = doc_id (point lookups); ``sort_cols``
-            # overrides for layout rewrites (e.g. a Z-order key for 2-D
-            # pruning, or _seq for replay-range scans).
-            sort_keys = ["_run", "_bucket", *(sort_cols or ["doc_id"])]
-            out_df.withColumn("_run", run.cast("int")).sortWithinPartitions(
-                *sort_keys
-            ).write.partitionBy("_run").parquet(out_dir)
-
-        # each written file's bucket set and per-bucket row counts (an
-        # L1 file's bucket is its directory; an L0 run's come from its
-        # _bucket column), its _seq skip range and column stats — all
-        # from pyarrow footer/column reads on the driver, no Spark job.
-        # A failed read fails the commit before anything is published:
-        # later seq-range reads and reorg rewinds rely on this evidence.
-        # file -> its one bucket, or None for an L0 run
-        file_bucket: dict[str, str | None] = {
-            f: str(b) for b, files in (prewritten or {}).items() for f in files
-        }
-        if os.path.isdir(out_dir):
-            for entry in sorted(os.listdir(out_dir)):
-                if not entry.startswith("_run="):
-                    continue
-                run_b = entry.split("=", 1)[1]
-                rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-                for fn in sorted(os.listdir(os.path.join(out_dir, entry))):
-                    if fn.endswith(".parquet"):
-                        file_bucket[os.path.join(rel_dir, fn)] = (
-                            None if run_b == "-1" else run_b
+            with self._job_label(app_id, epoch, "rewrite" if rewrite else "flush"):
+                if rewrite:
+                    evidence = self._footer_evidence(
+                        self._write_rewrite(
+                            out_df, out_dir, replace_buckets, full_replace, sort_cols
                         )
-
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+                    )
+                    if self.bloom_bits:
+                        bucket_words = self._commit_bloom_words(out_df)
+                else:
+                    evidence, bucket_words = self._write_runs(out_df, out_dir, sort_cols)
+        if prewritten:
+            evidence.update(
+                self._footer_evidence(
+                    {f: str(b) for b, files in prewritten.items() for f in files}
+                )
+            )
 
         written: dict[str, list[str]] = {}
         new_file_buckets: dict[str, list[int]] = {}
         bucket_rows: dict[str, int] = {}
         new_seq_entries: dict[str, list[int]] = {}
         new_stat_entries: dict[str, dict] = {}
-        for f, b in file_bucket.items():
-            pf = pq.ParquetFile(os.path.join(self.root, f))
-            md = pf.metadata
-            if b is not None:
-                counts = {b: md.num_rows}
-            else:
-                vc = pc.value_counts(pf.read(columns=["_bucket"]).column(0))
-                counts = {
-                    str(v["values"].as_py()): int(v["counts"].as_py()) for v in vc
-                }
+        # per-(file, bucket) Bloom words: a multi-bucket file keeps each
+        # bucket's words separately, so a lookup probes only the key's
+        # own bucket (each bucket lands in one file per commit, so every
+        # entry is exact)
+        new_bloom_entries: dict[str, dict[str, list[int]]] = {}
+        for f, (counts, md) in evidence.items():
             for b, n in counts.items():
                 written.setdefault(b, []).append(f)
                 bucket_rows[b] = bucket_rows.get(b, 0) + n
+                if b in bucket_words:
+                    new_bloom_entries.setdefault(f, {})[b] = bucket_words[b]
             if len(counts) > 1:
                 new_file_buckets[f] = sorted(int(b) for b in counts)
             rng = self._seq_range_from_footer(md)
@@ -1339,22 +1328,6 @@ class SnapshotTable:
                 }
                 if stats:
                     new_stat_entries[f] = stats
-
-        # per-(file, bucket) Bloom words for THIS commit's rows: one
-        # O(batch) aggregation by bucket; a multi-bucket file keeps
-        # each bucket's words separately, so a lookup probes only the
-        # key's own bucket (with aligned buckets each bucket lands in
-        # one file, so every entry is exact; an unaligned bucket spread
-        # over several files gets a superset bloom per file — still
-        # correct, never false-absent)
-        new_bloom_entries: dict[str, dict[str, list[int]]] = {}
-        if self.bloom_bits and written and out_df is not None:
-            bucket_words = self._commit_bloom_words(out_df)
-            for b, files in written.items():
-                words = bucket_words.get(b)
-                if words is not None:
-                    for f in files:
-                        new_bloom_entries.setdefault(f, {})[b] = words
 
         schema = new_schema or self.schema()
         if schema is None:
@@ -1523,6 +1496,185 @@ class SnapshotTable:
             self.num_buckets = new_num_buckets
         return snap
 
+    @contextmanager
+    def _job_label(self, app_id: str, epoch: int, phase: str):
+        """Tag and describe this thread's Spark jobs as
+        ``cdc:<app_id>:<epoch>:<phase>``, so Spark's event log and
+        status tracker attribute them to a commit (tags cannot hold
+        commas)."""
+        sc = self.spark.sparkContext
+        label = f"cdc:{app_id}:{epoch}:{phase}".replace(",", ";")
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.addJobTag(label)
+        sc.setJobDescription(label)
+        try:
+            yield
+        finally:
+            sc.removeJobTag(label)
+            sc.setJobDescription(prev)
+
+    # rows per level-0 run of a pure-delta commit: a batch splits into
+    # ceil(rows / _RUN_ROWS) runs, at most one per driver core (the
+    # pyarrow write runs on the driver) and one per bucket
+    _RUN_ROWS = 1 << 15
+
+    def _write_runs(
+        self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None
+    ) -> tuple[dict[str, tuple[dict[str, int], object]], dict[str, list[int]]]:
+        """Pure-delta write. ``out_df`` is gathered with ``toArrow()``:
+        one Spark job and no shuffle, and the observations and
+        fail-fast guards it carries evaluate inside that job. The rows
+        split into P level-0 runs by ``_bucket % P``, where P is
+        ``ceil(rows / _RUN_ROWS)`` capped at the driver's cores and the
+        bucket count, so the layout follows the batch and the machine
+        that writes it. Each run is sorted by ``(_bucket, doc_id)``
+        (``sort_cols`` replaces doc_id) and written by pyarrow on a pool
+        of P threads with the codec of
+        ``spark.sql.parquet.compression.codec``.
+
+        Returns each file's per-bucket row counts and the writer's own
+        footer metadata (no file is reopened), and with blooms on each
+        bucket's Bloom words, from probe positions computed in the same
+        job. A batch larger than ``spark.driver.maxResultSize`` fails in
+        the gather, before any file is written."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        probes = (
+            [f"_bloom{si}" for si in range(len(self._BLOOM_SEEDS))]
+            if self.bloom_bits
+            else []
+        )
+        if probes:
+            out_df = out_df.select(
+                "*",
+                *[
+                    p.alias(name)
+                    for p, name in zip(self._bloom_positions(F.col("doc_id")), probes)
+                ],
+            )
+        batch = out_df.toArrow()
+        buckets = batch.column("_bucket").to_numpy()
+        bucket_words = (
+            self._bloom_words(buckets, [batch.column(c).to_numpy() for c in probes])
+            if probes
+            else {}
+        )
+        batch = batch.drop_columns(probes)
+
+        n_runs = max(
+            1,
+            min(-(-batch.num_rows // self._RUN_ROWS), _driver_cores(), self.num_buckets),
+        )
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        codec = {"uncompressed": "none"}.get(codec, codec)
+        sort_keys = ["_bucket", *(sort_cols or ["doc_id"])]
+        order = [(c, "ascending") for c in sort_keys]
+        # one stable split of the batch into runs: run r is
+        # by_run[ends[r-1]:ends[r]]
+        run_of = buckets % n_runs
+        by_run = np.argsort(run_of, kind="stable")
+        ends = np.cumsum(np.bincount(run_of, minlength=n_runs))
+        rel_dir = os.path.relpath(out_dir, self.root)
+
+        def write(r: int):
+            rows = by_run[(ends[r - 1] if r else 0) : ends[r]]
+            if not len(rows):
+                return None
+            # sort on the key columns only, then copy the run once
+            keys = batch.select(sort_keys).take(rows)
+            rows = rows[pc.sort_indices(keys, sort_keys=order).to_numpy()]
+            rel = os.path.join(rel_dir, f"run-{r:05d}.parquet")
+            footers: list = []
+            pq.write_table(
+                batch.take(rows),
+                os.path.join(self.root, rel),
+                compression=codec,
+                metadata_collector=footers,
+            )
+            if not footers:
+                raise RuntimeError(f"parquet writer returned no footer for {rel}")
+            held, counts = np.unique(buckets[rows], return_counts=True)
+            return rel, ({str(b): int(n) for b, n in zip(held, counts)}, footers[0])
+
+        if batch.num_rows:
+            os.makedirs(out_dir)
+        with ThreadPoolExecutor(n_runs) as pool:
+            runs = [e for e in pool.map(write, range(n_runs)) if e is not None]
+        return dict(runs), bucket_words
+
+    def _write_rewrite(
+        self,
+        out_df: DataFrame,
+        out_dir: str,
+        replace_buckets: set[int],
+        full_replace: bool,
+        sort_cols: list[str] | None,
+    ) -> dict[str, str | None]:
+        """Distributed Spark write of a commit that replaces buckets.
+        Rows of a replaced bucket go to that bucket's own L1 file
+        (``_run`` = bucket); every other row goes to its write task's L0
+        run (``_run`` = -1), one file per task after the bucket
+        repartition, spanning many buckets and keeping ``_bucket`` as a
+        column. Returns each written file's one bucket, or None for an
+        L0 run."""
+        n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        if full_replace:
+            run = F.col("_bucket")
+        else:
+            run = F.when(
+                F.col("_bucket").isin(sorted(replace_buckets)), F.col("_bucket")
+            ).otherwise(F.lit(-1))
+        # sort within each file: parquet column min/max stats then let
+        # scans skip whole row groups (Iceberg sort-order analogue).
+        # Default key = doc_id (point lookups); ``sort_cols`` overrides
+        # for layout rewrites (e.g. a Z-order key for 2-D pruning, or
+        # _seq for replay-range scans).
+        sort_keys = ["_run", "_bucket", *(sort_cols or ["doc_id"])]
+        out_df.repartition(n_out, "_bucket").withColumn(
+            "_run", run.cast("int")
+        ).sortWithinPartitions(*sort_keys).write.partitionBy("_run").parquet(out_dir)
+        file_bucket: dict[str, str | None] = {}
+        if os.path.isdir(out_dir):
+            for entry in sorted(os.listdir(out_dir)):
+                if not entry.startswith("_run="):
+                    continue
+                run_b = entry.split("=", 1)[1]
+                rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
+                for fn in sorted(os.listdir(os.path.join(out_dir, entry))):
+                    if fn.endswith(".parquet"):
+                        file_bucket[os.path.join(rel_dir, fn)] = (
+                            None if run_b == "-1" else run_b
+                        )
+        return file_bucket
+
+    def _footer_evidence(
+        self, file_bucket: dict[str, str | None]
+    ) -> dict[str, tuple[dict[str, int], object]]:
+        """Per-bucket row counts and footer metadata of files already on
+        disk, read with pyarrow on the driver (no Spark job): a
+        single-bucket file's count is its row count, an L0 run's come
+        from its ``_bucket`` column. A failed read raises."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        out: dict[str, tuple[dict[str, int], object]] = {}
+        for f, b in file_bucket.items():
+            pf = pq.ParquetFile(os.path.join(self.root, f))
+            md = pf.metadata
+            if b is not None:
+                counts = {b: md.num_rows}
+            else:
+                vc = pc.value_counts(pf.read(columns=["_bucket"]).column(0))
+                counts = {
+                    str(v["values"].as_py()): int(v["counts"].as_py()) for v in vc
+                }
+            out[f] = (counts, md)
+        return out
+
     def rebucket(self, new_num_buckets: int, app_id: str = "maintenance") -> dict:
         """Online partition-spec evolution: rewrite the table into a new
         hash-bucket fan-out in ONE atomic commit (Iceberg partition
@@ -1593,6 +1745,20 @@ class SnapshotTable:
                     words[w] |= r[f"s{si}w{w}"] or 0
             out[str(r["_bucket"])] = words
         return out
+
+    def _bloom_words(self, buckets, positions: list) -> dict[str, list[int]]:
+        """Per-bucket Bloom words from numpy probe positions — the same
+        words :meth:`_commit_bloom_words` aggregates in Spark (signed
+        64-bit, bit p % 64 of word p // 64), ORed on the driver."""
+        import numpy as np
+
+        bits = self.bloom_bits
+        n_buckets = int(buckets.max()) + 1 if len(buckets) else 0
+        bitmap = np.zeros((n_buckets, bits), dtype=bool)
+        for pos in positions:
+            bitmap[buckets, pos] = True
+        words = np.packbits(bitmap, axis=1, bitorder="little").view("<i8")
+        return {str(b): words[b].tolist() for b in np.unique(buckets)}
 
     # -------------------------------------------------------- maintenance
 

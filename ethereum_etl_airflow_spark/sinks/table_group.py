@@ -81,9 +81,9 @@ class TableGroup:
         """Commit every member write, then publish ONE group manifest.
 
         ``writes``: {table name -> kwargs for SnapshotTable.commit
-        (out_df, replace_buckets, optional new_schema/lineage/
-        align_buckets)}. Members not written this epoch keep their
-        current version in the manifest.
+        (out_df, replace_buckets, optional new_schema/lineage)}.
+        Members not written this epoch keep their current version in
+        the manifest.
 
         Returns the group manifest, or None when the epoch is already
         group-committed (fenced replay)."""

@@ -152,28 +152,15 @@ def write_feed(
     cfg: FeedConfig,
     feed_dir: str,
     batches: range | None = None,
-    bucketed_for: int | None = None,
 ) -> list[str]:
     """Materialize batches as parquet dirs ``feed_dir/batch-N/`` —
     the file-stream layout the tailer consumes (the reference's
     ``export/{table}/block_date={ds}/`` layout, build_export_dag.py:87-90).
     Deliberately NOT Hive ``batch_id=N`` syntax: the in-file batch_id
-    column (int64) would clash with partition-column inference.
-
-    ``bucketed_for=B`` pre-partitions each batch by the target table's
-    bucket function (pmod(xxhash64(doc_id), B)) — the layout a
-    key-partitioned Kafka topic delivers. The tailer can then apply
-    with ``feed_bucketed=True``: zero ingest-side shuffle (the shuffle
-    moved to the producer, where Kafka does it for free)."""
-    from ethereum_etl_airflow_spark.sinks.snapshot_table import bucket_expr
-
+    column (int64) would clash with partition-column inference."""
     paths = []
     for b in batches or range(cfg.n_batches):
         p = os.path.join(feed_dir, f"batch-{b:06d}")
-        df = generate_batch(spark, cfg, b)
-        if bucketed_for:
-            n_part = spark.sparkContext.defaultParallelism
-            df = df.repartition(n_part, bucket_expr(F.col("doc_id"), bucketed_for))
-        df.write.mode("overwrite").parquet(p)
+        generate_batch(spark, cfg, b).write.mode("overwrite").parquet(p)
         paths.append(p)
     return paths

@@ -34,6 +34,20 @@ from ethereum_etl_airflow_spark.operators.cdc import apply_changes
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
 
+#: ``run_stream`` admits at most ``spark.driver.maxResultSize`` / this
+#: many feed bytes per trigger unless the caller sets a limit. A
+#: micro-batch gathered as Arrow measured 2.0-2.4x its zstd feed bytes
+#: on the benchmark feed (10k-120k events); 16 leaves room for feeds
+#: that compress better.
+TRIGGER_BYTES_DIVISOR = 16
+
+
+def _byte_size(spark: SparkSession, size: int | str) -> int:
+    """Bytes in a Spark size string ("1g", "512m", "4096")."""
+    utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return int(utils.byteStringAsBytes(str(size)))
+
+
 #: from_json schema for the canonical JSON change envelope (the
 #: Debezium/WAL wire shape adapted to the tokenized-sequence payload).
 #: doc_id and seq ride at the TOP level so delete envelopes — whose
@@ -91,7 +105,6 @@ class ChangeLogTailer:
         lineage_dir: str | None = None,
         verify: bool = True,
         post_batch_checks: list | None = None,
-        feed_bucketed: bool = False,
         track_ndv: str | None = None,
         quarantine_root: str | None = None,
         wap_branch: str | None = None,
@@ -119,9 +132,6 @@ class ChangeLogTailer:
         # (build_load_dag.py:220-234) — here one combined aggregation
         # over the folded table per applied batch (verify.run_checks)
         self.post_batch_checks = post_batch_checks
-        # feed pre-partitioned by the table's bucket function (e.g. a
-        # key-partitioned Kafka topic) -> shuffle-free apply
-        self.feed_bucketed = feed_bucketed
         # opt-in incremental NDV statistic (operators/table_stats.py):
         # column name to track; costs one extra narrow agg per batch,
         # so it's off on the bench/throughput path by default
@@ -230,7 +240,6 @@ class ChangeLogTailer:
                 app_id,
                 epoch,
                 verify=self.verify,
-                feed_bucketed=self.feed_bucketed,
                 properties=props,
             )
             lineage = combined["main"]
@@ -243,7 +252,6 @@ class ChangeLogTailer:
                 app_id,
                 epoch=epoch,
                 verify=self.verify,
-                feed_bucketed=self.feed_bucketed,
                 properties=props,
             )
         if self.wap_branch is not None and lineage is not None:
@@ -331,12 +339,16 @@ class ChangeLogTailer:
         out = out.withColumn(
             "_bucket", bucket_expr(F.col("doc_id"), self.table.num_buckets)
         )
+        # a bulk load is written as a rewrite of the (empty) table: a
+        # distributed write of one L1 file per bucket, never a gather of
+        # the whole state to the driver
         snap = self.table.commit(
             out,
             replace_buckets=set(),
             app_id=self.app_id,
             epoch=upto_epoch,  # fences all history <= upto_epoch atomically
             new_schema=out.drop("_bucket").schema,
+            full_replace=True,
             lineage={"op": "bootstrap", "upto_epoch": upto_epoch},
         )
         li = {
@@ -445,20 +457,28 @@ class ChangeLogTailer:
         checkpoint_dir: str,
         max_files_per_trigger: int | None = None,
         available_now: bool = True,
-        max_bytes_per_trigger: str | None = None,
+        max_bytes_per_trigger: int | str | None = None,
         processing_time: str | None = None,
     ):
         """Structured Streaming drive: file source -> foreachBatch apply.
 
-        Backpressure / rate limiting (the admission-control knobs a
-        10^10-event backlog replay needs so one trigger never bites off
-        more than executor memory chews):
+        Backpressure / rate limiting (the admission control a
+        10^10-event backlog replay needs: each micro-batch's delta is
+        gathered to the driver as Arrow, so one trigger must stay
+        within ``spark.driver.maxResultSize``):
 
         * ``max_files_per_trigger`` — cap source files admitted per
           micro-batch (file-count shaped feeds);
-        * ``max_bytes_per_trigger`` — cap admitted bytes (e.g. "512m"),
-          the size-shaped equivalent (maps to the file source's
-          ``maxBytesPerTrigger`` soft limit);
+        * ``max_bytes_per_trigger`` — cap admitted feed bytes (a byte
+          count or a size string such as "512m"; the file source's
+          ``maxBytesPerTrigger`` soft limit). Spark allows only one of
+          the two;
+        * with neither, admission defaults to
+          ``spark.driver.maxResultSize / TRIGGER_BYTES_DIVISOR`` feed
+          bytes per trigger (none when the result size is unlimited).
+          A batch that still gathers past the limit fails before its
+          commit publishes anything; a smaller explicit limit then
+          lets the replay through;
         * ``processing_time`` — follow-mode cadence (e.g. "30 seconds"):
           the trigger interval is the reference's sensor poke_interval
           analogue (build_load_dag.py sensor cadence).
@@ -474,10 +494,18 @@ class ChangeLogTailer:
         """
         sample = self.spark.read.option("recursiveFileLookup", "true").parquet(self.feed_dir)
         reader = self.spark.readStream.schema(sample.schema)
+        if not (max_files_per_trigger or max_bytes_per_trigger):
+            limit = _byte_size(
+                self.spark,
+                self.spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g"),
+            )
+            max_bytes_per_trigger = limit // TRIGGER_BYTES_DIVISOR or None
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         if max_bytes_per_trigger:
-            reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
+            reader = reader.option(
+                "maxBytesPerTrigger", str(_byte_size(self.spark, max_bytes_per_trigger))
+            )
         stream = reader.option("recursiveFileLookup", "true").parquet(self.feed_dir)
 
         # checkpoint GENERATION: a reorg rewind bumps stream_gen:<app>

@@ -1,0 +1,300 @@
+"""Pure-delta commits are gathered to the driver as Arrow and written by
+pyarrow as level-0 sorted runs; commits that replace buckets keep the
+distributed Spark write. These tests check that the Arrow-written files
+read back exactly the rows committed, for every column type the
+package's tables write and across schema evolution; that an empty delta
+publishes only its epoch fence; that a non-compacting apply is one
+labelled Spark job with no shuffle and no Spark parquet write; that the
+run count follows the batch and the driver, not the cluster; and that
+the driver-side gather is bounded: a batch over
+``spark.driver.maxResultSize`` publishes nothing, and ``run_stream``
+admits triggers below that limit by default."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+import uuid
+from contextlib import contextmanager
+from decimal import Decimal
+
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
+
+from ethereum_etl_airflow_spark.operators.cdc import apply_changes
+from ethereum_etl_airflow_spark.sinks import snapshot_table
+from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
+from ethereum_etl_airflow_spark.sources.feed import (
+    FeedConfig,
+    generate_batch,
+    lww_expected_state,
+    write_feed,
+)
+from ethereum_etl_airflow_spark.streaming import tailer as tailer_mod
+
+ALL_TYPES = (
+    "doc_id string, _seq long, _epoch long, _tombstone boolean, "
+    "i int, l long, d double, b boolean, dec decimal(38,6), "
+    "ts timestamp, ts_ntz timestamp_ntz, toks array<int>, "
+    "vec array<float>, st struct<name:string,n:long,w:array<int>>"
+)
+
+
+def _data_files(table: SnapshotTable) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), table.root)
+        for d, _, fs in os.walk(os.path.join(table.root, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+@contextmanager
+def _max_result_size(spark, size: str):
+    """Set ``spark.driver.maxResultSize`` on the running SparkContext;
+    the scheduler reads it for every new stage."""
+    conf = spark.sparkContext._conf
+    prev = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", size)
+    try:
+        yield
+    finally:
+        conf.set("spark.driver.maxResultSize", prev)
+
+
+def _assert_same_rows(got, want) -> None:
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def _pyarrow_written(table: SnapshotTable, rels) -> bool:
+    return all(
+        pq.read_metadata(os.path.join(table.root, r)).created_by.startswith(
+            "parquet-cpp-arrow"
+        )
+        for r in rels
+    )
+
+
+def test_arrow_delta_reads_back_every_column_type(spark, tmp_path):
+    rows = []
+    for i in range(120):
+        null = i % 7 == 0
+        rows.append(
+            (
+                f"doc{i:04d}",
+                i,
+                1,
+                i % 11 == 0,
+                None if null else i - 60,
+                None if null else (1 << 40) + i,
+                None if null else i / 3.0,
+                None if null else i % 2 == 0,
+                None if null else Decimal(f"{i}.{i:06d}"),
+                None if null else dt.datetime(2024, 1, 1, 12, 0, i % 60, i),
+                None if null else dt.datetime(2023, 6, 30, 23, i % 60, 0, 7 * i),
+                None if null else [i, i + 1, None],
+                None if null else [0.5 * i, -1.25],
+                None if null else (f"n{i}", i * 10, [i]),
+            )
+        )
+    df = spark.createDataFrame(rows, ALL_TYPES)
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8)
+    snap = t.commit(
+        df.withColumn("_bucket", bucket_expr(F.col("doc_id"), 8)),
+        set(),
+        "types",
+        epoch=1,
+        new_schema=df.schema,
+    )
+    files = {f for fs in snap["added_files"].values() for f in fs}
+    assert files and _pyarrow_written(t, files)
+    got = t.read_seq_range()
+    assert [f.dataType for f in got.schema.fields] == [
+        f.dataType for f in df.schema.fields
+    ]
+    _assert_same_rows(got, df)
+
+
+def test_arrow_delta_reads_back_across_schema_evolution(spark, tmp_path):
+    """``bulk_backfill``'s evolution: the second batch adds ``lang`` and
+    widens ``n_tok`` from int to long; both batches' rows read back
+    through the evolved schema."""
+    cfg = FeedConfig(n_docs=300, events_per_batch=400, n_batches=2, evolve_at_batch=1)
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=16, compact_files=100)
+    want = None
+    for b in range(cfg.n_batches):
+        batch = generate_batch(spark, cfg, b)
+        apply_changes(t, batch, "evo", epoch=b)
+        rows = batch.select(
+            "doc_id",
+            F.col("seq").alias("_seq"),
+            F.lit(b).cast("long").alias("_epoch"),
+            (F.col("op") == "D").alias("_tombstone"),
+            "tokens",
+            F.col("n_tok").cast("long").alias("n_tok"),
+            "source",
+            *(["lang"] if "lang" in batch.columns else []),
+        )
+        want = rows if want is None else want.unionByName(rows, allowMissingColumns=True)
+    schema = t.schema()
+    assert schema["n_tok"].dataType.typeName() == "long" and "lang" in schema.fieldNames()
+    assert _pyarrow_written(t, _data_files(t))
+    got = t.read_seq_range()
+    _assert_same_rows(got, want.select(*got.columns))
+
+
+def test_empty_delta_publishes_fence_and_no_data_file(spark, tmp_path):
+    cfg = FeedConfig(n_docs=100, events_per_batch=200, n_batches=1)
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
+    apply_changes(t, generate_batch(spark, cfg, 0), "empty", epoch=0)
+    before_files, before_v = _data_files(t), t.current_version()
+    empty = generate_batch(spark, cfg, 0).limit(0)
+    li = apply_changes(t, empty, "empty", epoch=1)
+    assert li["events_in"] == 0 and li["rows_out"] == 0
+    assert t.current_version() == before_v + 1
+    assert t.last_epoch("empty") == 1
+    assert t.snapshot()["added_files"] == {}
+    assert _data_files(t) == before_files
+    assert sorted(os.listdir(os.path.join(t.root, "data"))) == sorted(
+        {f.split(os.sep)[1] for f in before_files}
+    )
+
+
+def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeypatch):
+    """A non-compacting apply on a DataFrame source runs exactly one
+    Spark job, tagged ``cdc:<app>:<epoch>:flush``, without a
+    repartition or a Spark parquet write; a compacting apply still
+    takes the Spark write path under the ``rewrite`` label."""
+    cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=3)
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, compact_files=3)
+    apply_changes(t, generate_batch(spark, cfg, 0), "jobs", epoch=0)
+
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    batch = generate_batch(spark, cfg, 1)
+
+    def forbidden(*a, **kw):
+        raise AssertionError("a pure-delta commit must not shuffle or use Spark's writer")
+
+    monkeypatch.setattr(type(batch), "repartition", forbidden)
+    monkeypatch.setattr(DataFrameWriter, "parquet", forbidden)
+    group = f"apply-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        li = apply_changes(t, batch, "jobs", epoch=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.undo()
+    assert li["compacted_buckets"] == 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert list(tracker.getJobIdsForTag("cdc:jobs:1:flush")) == jobs
+    assert sc.getLocalProperty("spark.job.tags") in (None, "")
+
+    # the third commit reaches compact_files: the rewrite path
+    li = apply_changes(t, generate_batch(spark, cfg, 2), "jobs", epoch=2)
+    assert li["compacted_buckets"] > 0
+    assert len(tracker.getJobIdsForTag("cdc:jobs:2:rewrite")) >= 1
+    assert len(tracker.getJobIdsForTag("cdc:jobs:2:flush")) == 0
+
+
+@pytest.mark.parametrize("codec", ["snappy", "zstd"])
+def test_arrow_delta_uses_the_session_codec(spark, tmp_path, codec):
+    prev = spark.conf.get("spark.sql.parquet.compression.codec")
+    spark.conf.set("spark.sql.parquet.compression.codec", codec)
+    try:
+        cfg = FeedConfig(n_docs=50, events_per_batch=100, n_batches=1)
+        t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
+        apply_changes(t, generate_batch(spark, cfg, 0), "codec", epoch=0)
+    finally:
+        spark.conf.set("spark.sql.parquet.compression.codec", prev)
+    for rel in _data_files(t):
+        md = pq.read_metadata(os.path.join(t.root, rel))
+        assert md.row_group(0).column(0).compression == codec.upper()
+
+
+@pytest.mark.parametrize(
+    "run_rows,cores,runs",
+    [(1 << 15, 8, 1), (100, 8, 3), (100, 2, 2), (1, 64, 16)],
+)
+def test_delta_run_count_follows_batch_rows_and_driver_cores(
+    spark, tmp_path, monkeypatch, run_rows, cores, runs
+):
+    """A 300-row delta splits into ceil(300 / _RUN_ROWS) runs, capped at
+    the driver's cores and the bucket count; each bucket still lands in
+    exactly one file."""
+    monkeypatch.setattr(SnapshotTable, "_RUN_ROWS", run_rows)
+    monkeypatch.setattr(snapshot_table, "_driver_cores", lambda: cores)
+    df = spark.range(300).select(
+        F.format_string("d%05d", "id").alias("doc_id"),
+        F.col("id").alias("_seq"),
+        F.lit(1).cast("long").alias("_epoch"),
+        F.lit(False).alias("_tombstone"),
+    )
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=16)
+    snap = t.commit(
+        df.withColumn("_bucket", bucket_expr(F.col("doc_id"), 16)),
+        set(),
+        "runs",
+        epoch=1,
+        new_schema=df.schema,
+    )
+    files = {f for fs in snap["bucket_files"].values() for f in fs}
+    assert len(files) == runs
+    assert len(snap["bucket_files"]) == 16
+    assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
+    assert sum(snap["bucket_rows_written"].values()) == 300
+
+
+def test_batch_over_max_result_size_fails_before_publishing(spark, tmp_path):
+    """The delta is gathered to the driver: a batch over
+    ``spark.driver.maxResultSize`` fails in the gather, leaving the
+    version, the epoch fence and the data directory as they were; the
+    same batch commits once the limit allows it."""
+    cfg = FeedConfig(n_docs=40_000, events_per_batch=20_000, n_batches=2)
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8)
+    apply_changes(t, generate_batch(spark, cfg, 0), "big", epoch=0)
+    head, files = t.current_version(), _data_files(t)
+    dirs = sorted(os.listdir(os.path.join(t.root, "data")))
+    with _max_result_size(spark, "1m"):
+        with pytest.raises(Exception, match="maxResultSize"):
+            apply_changes(t, generate_batch(spark, cfg, 1), "big", epoch=1)
+    assert t.current_version() == head
+    assert t.last_epoch("big") == 0
+    assert _data_files(t) == files
+    assert sorted(os.listdir(os.path.join(t.root, "data"))) == dirs
+    assert apply_changes(t, generate_batch(spark, cfg, 1), "big", epoch=1) is not None
+    assert t.last_epoch("big") == 1
+
+
+def test_run_stream_admits_triggers_below_max_result_size(spark, tmp_path):
+    """With no admission option, ``run_stream`` admits at most
+    ``maxResultSize / TRIGGER_BYTES_DIVISOR`` feed bytes per trigger,
+    so a backlog replays as several micro-batches that each gather
+    within the limit, and the table converges."""
+    assert tailer_mod._byte_size(spark, "512m") == 512 << 20
+    assert tailer_mod._byte_size(spark, 4096) == 4096
+    cfg = FeedConfig(n_docs=1500, events_per_batch=2000, n_batches=2, dup_tail=100)
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed)
+    feed_bytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(feed)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    limit = (1 << 20) // tailer_mod.TRIGGER_BYTES_DIVISOR
+    assert feed_bytes > 2 * limit
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="adm", num_buckets=8
+    )
+    with _max_result_size(spark, "1m"):
+        tailer.run_stream(checkpoint_dir=str(tmp_path / "cp"), available_now=True)
+    assert len(tailer.applied) >= feed_bytes / limit
+    got = {(r.doc_id, r._seq) for r in tailer.table.read().select("doc_id", "_seq").collect()}
+    want = lww_expected_state(spark, cfg, cfg.n_batches - 1)
+    assert got == {(r.doc_id, r._seq) for r in want.select("doc_id", "_seq").collect()}

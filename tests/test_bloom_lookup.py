@@ -8,11 +8,15 @@ import pyspark.sql.functions as F
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
 
 
-def _write(spark, table, keys, seq, replace=False):
-    df = spark.createDataFrame(
+def _frame(spark, table, keys, seq):
+    return spark.createDataFrame(
         [(k, seq, seq, False, len(k)) for k in keys],
         "doc_id string, _seq long, _epoch long, _tombstone boolean, val long",
     ).withColumn("_bucket", bucket_expr(F.col("doc_id"), table.num_buckets))
+
+
+def _write(spark, table, keys, seq, replace=False):
+    df = _frame(spark, table, keys, seq)
     table.commit(
         df,
         replace_buckets=set(range(table.num_buckets)) if replace else set(),
@@ -133,3 +137,28 @@ def test_bloom_over_multi_bucket_runs_keeps_per_bucket_precision(spark, tmp_path
     assert SnapshotTable.plan_lookup(snap, ["nope-1", "nope-2"]) == []
     got = {r.doc_id for r in t.lookup(["doc-0-5", "doc-2-199", "nope-1"]).collect()}
     assert got == {"doc-0-5", "doc-2-199"}
+
+
+def test_bloom_words_of_arrow_delta_match_spark_aggregation(spark, tmp_path):
+    """A delta commit ORs its Bloom words on the driver from probe
+    positions gathered with the batch. The words equal the Spark
+    aggregation's for the same rows, no file holding a key is dropped,
+    and negatives are still pruned."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, bloom_bits=4096)
+    keys = [f"key-{i}" for i in range(400)]
+    _write(spark, t, keys, seq=1)
+    snap = t.snapshot()
+    files = {f for fs in snap["bucket_files"].values() for f in fs}
+    assert all(
+        pq.read_metadata(str(tmp_path / "t" / f)).created_by.startswith("parquet-cpp-arrow")
+        for f in files
+    )
+    expected = t._commit_bloom_words(_frame(spark, t, keys, seq=1))
+    got = {b: words for entry in snap["file_blooms"].values() for b, words in entry.items()}
+    assert got == expected
+    for f in files:
+        for k in pq.read_table(str(tmp_path / "t" / f), columns=["doc_id"]).column(0).to_pylist():
+            assert f in SnapshotTable.plan_lookup(snap, [k]), k
+    assert SnapshotTable.plan_lookup(snap, ["absent-1", "absent-2"]) == []

@@ -35,6 +35,12 @@ def test_bootstrap_then_tail_converges(spark, tmp_path):
     boot = ChangeLogTailer(spark, feed, str(tmp_path / "boot"), app_id="bt")
     li = boot.bootstrap_from_state(src.table.read_raw(), upto_epoch=1)
     assert li["op"] == "bootstrap" and li["rows"] > 0
+    # a bulk load is written as a rewrite: one file per bucket, none shared
+    snap = boot.table.snapshot()
+    assert "file_buckets" not in snap
+    files = [f for fs in snap["bucket_files"].values() for f in fs]
+    assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
+    assert len(files) == len(set(files))
     applied = boot.replay_batches()
     assert [x["epoch"] for x in applied] == [2, 3]  # 0,1 fenced by bootstrap
 

@@ -155,12 +155,20 @@ def test_invariant_violation_fails_batch(spark, tmp_path):
     import pyspark.sql.functions as F
 
     table = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
-    bad = spark.createDataFrame(
-        [("I", "x", 1, [1, 2, 3], 99, "web")],
-        "op string, doc_id string, seq long, tokens array<int>, n_tok int, source string",
-    ).withColumn("ts", F.timestamp_seconds(F.col("seq")).cast("timestamp_ntz"))
+
+    def batch(n_tok):
+        return spark.createDataFrame(
+            [("I", "x", 1, [1, 2, 3], n_tok, "web")],
+            "op string, doc_id string, seq long, tokens array<int>, n_tok int, source string",
+        ).withColumn("ts", F.timestamp_seconds(F.col("seq")).cast("timestamp_ntz"))
+
+    apply_changes(table, batch(3), "t8", epoch=0)
+    version = table.current_version()
     with pytest.raises(Exception, match="invariant"):
-        apply_changes(table, bad, "t8", epoch=0)
+        apply_changes(table, batch(99), "t8", epoch=1)
+    # the failed batch published nothing: the table did not advance
+    assert table.current_version() == version
+    assert table.last_epoch("t8") == 0
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
@@ -193,23 +201,6 @@ def test_threshold_compaction_preserves_state(spark, tmp_path):
     table.compact()
     assert max(table.file_counts().values()) == 1
     assert_state_matches(table, spark, cfg, cfg.n_batches - 1)
-
-
-def test_bucketed_feed_shuffle_free_apply(spark, tmp_path):
-    """A feed pre-partitioned by the table's bucket function (Kafka
-    key-partitioning shape) applies WITHOUT the ingest shuffle and
-    converges to the same state; file counts stay bounded."""
-    cfg = FeedConfig(n_docs=300, events_per_batch=700, n_batches=4, dup_tail=80)
-    feed = str(tmp_path / "feed")
-    write_feed(spark, cfg, feed, bucketed_for=16)
-    tailer = ChangeLogTailer(
-        spark, feed, str(tmp_path / "t"), app_id="bf", num_buckets=16,
-        feed_bucketed=True,
-    )
-    tailer.replay_batches()
-    assert_state_matches(tailer.table, spark, cfg, cfg.n_batches - 1)
-    # compaction keeps files bounded even without per-batch alignment
-    assert max(tailer.table.file_counts().values()) <= tailer.table.compact_files + 2
 
 
 def test_commit_conflict_detection(spark, tmp_path):

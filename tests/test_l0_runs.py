@@ -1,5 +1,5 @@
-"""Level-0 sorted runs: a delta commit writes one file per write task,
-each spanning many buckets; replaced buckets get level-1 files of their
+"""Level-0 sorted runs: a delta commit writes a few files, each
+spanning many buckets; replaced buckets get level-1 files of their
 own. The manifest lists a multi-bucket file under every bucket it
 holds, and a file's rows count only for the buckets whose list still
 names it — so compacting, deleting or rewinding some of its buckets
@@ -20,6 +20,7 @@ import pytest
 from ethereum_etl_airflow_spark.functions.hashing import bucket_of
 from ethereum_etl_airflow_spark.operators.cdc import apply_changes
 from ethereum_etl_airflow_spark.operators.reorg import rewind_to_seq
+from ethereum_etl_airflow_spark.sinks import snapshot_table
 from ethereum_etl_airflow_spark.sinks.snapshot_table import (
     SnapshotTable,
     bucket_expr,
@@ -29,6 +30,17 @@ from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
 NB = 32
 N_DOCS = 240
 SCHEMA = "op string, doc_id string, seq long, val long"
+
+
+@pytest.fixture(autouse=True)
+def _four_runs_per_batch():
+    """Split these small batches into four level-0 runs each (one run
+    per 64 rows, four driver cores), so every commit writes several
+    multi-bucket files whatever the host."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SnapshotTable, "_RUN_ROWS", 64)
+        mp.setattr(snapshot_table, "_driver_cores", lambda: 4)
+        yield
 
 
 def _doc(i: int) -> str:
@@ -99,9 +111,8 @@ def test_delta_commit_writes_few_multi_bucket_runs(spark, tmp_path):
     t = _table(spark, tmp_path)
     _apply(spark, t, _batches()[0], 0)
     snap = t.snapshot()
-    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     files = {f for fs in snap["bucket_files"].values() for f in fs}
-    assert 1 < len(files) <= n_tasks
+    assert len(files) == 4
     assert len(snap["bucket_files"]) == NB  # every bucket listed
     assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
     assert not any("_bucket=" in f for f in files)
@@ -245,10 +256,24 @@ def test_cdf_follow_emits_each_change_once(spark, tmp_path):
 
 
 def test_failed_footer_read_publishes_nothing(spark, tmp_path, monkeypatch):
+    """Both write paths fail before publishing when a file's footer
+    evidence is missing: a delta commit whose parquet writer hands back
+    no footer, and a rewriting commit whose footer read fails."""
     t = _table(spark, tmp_path)
     batches = _batches()
     _apply(spark, t, batches[0], 0)
     head = t.current_version()
+
+    write_table = pq.write_table
+
+    def footerless(table, where, **kw):
+        kw.pop("metadata_collector", None)
+        write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", footerless)
+    with pytest.raises(RuntimeError, match="no footer"):
+        _apply(spark, t, batches[1], 1)
+    monkeypatch.undo()
 
     class Broken:
         def __init__(self, *a, **kw):
@@ -256,12 +281,13 @@ def test_failed_footer_read_publishes_nothing(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "ParquetFile", Broken)
     with pytest.raises(OSError, match="footer unreadable"):
-        _apply(spark, t, batches[1], 1)
+        t.compact(app_id="l0-maint")
     monkeypatch.undo()
     # no manifest without seq evidence was published
     assert t.current_version() == head
     assert t.last_epoch("l0") == 0
     _apply(spark, t, batches[1], 1)
+    t.compact(buckets=[0, 1], app_id="l0-maint")
     snap = t.snapshot()
     files = {f for fs in snap["bucket_files"].values() for f in fs}
     assert set(snap["file_seq_ranges"]) == files

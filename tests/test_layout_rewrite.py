@@ -50,12 +50,14 @@ def test_rewrite_sorted_preserves_state_and_orders_files(spark, tmp_path):
 
 
 def test_default_commit_sort_is_unchanged(spark, tmp_path):
-    """Without sort_cols the write keeps the doc_id sort (point-lookup
-    row-group skipping) — regression guard on the default path."""
+    """Without sort_cols the write keeps the doc_id sort within each
+    bucket (point-lookup row-group skipping) — regression guard on the
+    default path. A delta file holding several buckets is sorted by
+    ``(_bucket, doc_id)``."""
     table = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=2)
     apply_changes(table, generate_batch(spark, CFG, 0), "lay2", epoch=0)
     for files in table.snapshot()["bucket_files"].values():
         for rel in files:
-            t = pq.read_table(os.path.join(table.root, rel), columns=["doc_id"])
-            vals = t.column("doc_id").to_pylist()
+            t = pq.read_table(os.path.join(table.root, rel), columns=["_bucket", "doc_id"])
+            vals = list(zip(t.column("_bucket").to_pylist(), t.column("doc_id").to_pylist()))
             assert vals == sorted(vals)
