@@ -36,27 +36,6 @@ def _live(df: DataFrame) -> DataFrame:
     return df.where(~F.coalesce(F.col("_tombstone"), F.lit(False)))
 
 
-class ChangesFollower:
-    """Pull-based CDF cursor: each ``poll()`` returns the net changes
-    since the previous poll (or None when the table hasn't advanced),
-    advancing an explicit version cursor — the shape a downstream
-    incremental consumer (or a foreachBatch bridge) drives on its own
-    cadence. The cursor is plain state the caller can persist and
-    resume from (pass ``from_version`` on restart)."""
-
-    def __init__(self, table: SnapshotTable, from_version: int | None = None):
-        self.table = table
-        self.cursor = table.current_version() if from_version is None else from_version
-
-    def poll(self) -> DataFrame | None:
-        cur = self.table.current_version()
-        if cur <= self.cursor:
-            return None
-        df = table_changes(self.table, self.cursor, cur)
-        self.cursor = cur
-        return df
-
-
 def table_changes(
     table: SnapshotTable,
     from_version: int,

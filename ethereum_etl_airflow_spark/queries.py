@@ -1958,12 +1958,12 @@ def cdc_schema_rename_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "higher seq), then a real Structured Streaming query reads A's "
     "commit log via readStream format('snapshot_cdf') (offsets = "
     "manifest versions, Arrow file partitions) and writes table B via "
-    "writeStream format('snapshot_table') (two-phase epoch-fenced "
-    "commit); B's folded state must equal A's LWW fold",
+    "writeStream foreachBatch -> apply_changes (epoch-fenced on the "
+    "micro-batch id); B's folded state must equal A's LWW fold",
     survey_ref="§2.10 exactly-once end-to-end through the public "
     "streaming APIs; the reference's live-view chain "
-    "(build_verify_streaming_dag.py:81-100) as pure readStream -> "
-    "writeStream",
+    "(build_verify_streaming_dag.py:81-100) as readStream -> "
+    "foreachBatch -> the table's one write path",
 )
 def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -1971,7 +1971,6 @@ def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
     from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
-    from ethereum_etl_airflow_spark.streaming.table_sink import register_table_sink
 
     ev = _t(spark, sf_dir, "events")
     mx = int(ev.agg(F.max("event_id")).collect()[0][0])
@@ -1995,7 +1994,7 @@ def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_changes(a, updates, "st", epoch=1)
 
     register_cdf_source(spark)
-    register_table_sink(spark)
+    b = SnapshotTable(spark, work + "/b", num_buckets=8)
     changes = (
         spark.readStream.format("snapshot_cdf")
         .option("path", a.root)
@@ -2010,16 +2009,14 @@ def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = (
-        changes.writeStream.format("snapshot_table")
-        .option("path", work + "/b")
-        .option("app_id", "chain")
-        .option("num_buckets", "8")
+        changes.writeStream.foreachBatch(
+            lambda df, e: apply_changes(b, df, "chain", epoch=e)
+        )
         .option("checkpointLocation", work + "/ck")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(300)
-    b = SnapshotTable(spark, work + "/b")
     return b.read().select("doc_id", "eid", "val")
 
 

@@ -48,10 +48,10 @@ Swap-in path for real Iceberg: replace ``commit`` internals with
 The bucket value is a pure function of doc_id (or, for a value-bucketed
 index table, of the value), so it is recomputed on read when needed;
 only the visibility filter of a multi-bucket file reads the stored
-``_bucket`` column, which every such file carries. Files written by
-older versions, and per-bucket files staged by other writers, do not
-carry it and need no filter: a per-bucket file is simply a file whose
-bucket set has one entry, so tables written before L0 runs read as-is.
+``_bucket`` column, which every such file carries. Per-bucket files
+written by older versions do not carry it and need no filter: such a
+file is simply a file whose bucket set has one entry, so tables
+written before L0 runs read as-is.
 
 Scale note on the read-side fold: with Iceberg bucket-partitioning +
 storage-partitioned aggregation the fold shuffle disappears entirely;
@@ -1206,13 +1206,14 @@ class SnapshotTable:
         max_retries: int = 0,
         delete_layers: list[dict] | None = None,
         rename_layers: list[dict] | None = None,
-        prewritten: dict[str, list[str]] | None = None,
     ) -> dict:
         """Publish one atomic commit. ``out_df`` carries a ``_bucket``
         column; for buckets in ``replace_buckets`` the output rows are
         the bucket's COMPLETE new content (compaction — file list
         replaced), for every other bucket they are a DELTA (files
         appended). Epoch fencing property is advanced for ``app_id``.
+        It is the table's one write path: every streaming micro-batch
+        reaches it through ``apply_changes``.
 
         File layout and write path follow what the commit writes:
 
@@ -1223,7 +1224,9 @@ class SnapshotTable:
           driver core): run r holds the buckets with
           ``_bucket % P == r``, sorted by
           ``(_bucket, doc_id)`` and storing ``_bucket``, so each bucket
-          lands in exactly one file per commit (see :meth:`_write_runs`);
+          lands in exactly one file per commit (see :meth:`_write_runs`).
+          The gathered batch must fit in ``spark.driver.maxResultSize``;
+          a larger one fails before anything is published;
         * a commit that replaces buckets (compaction, :meth:`compact`,
           :meth:`delete_where`, :meth:`rewrite_sorted`, rebucket, reorg
           rewinds) sets its size from the table, not one batch, and
@@ -1257,15 +1260,6 @@ class SnapshotTable:
         ``out_df=None`` the commit is METADATA-ONLY — no Spark job, no
         data files written (the Iceberg delete-file commit shape).
 
-        ``prewritten`` (with ``out_df=None``) commits per-bucket data
-        files some OTHER writer already placed under the table root
-        (root-relative paths) — the DSv2-style two-phase commit: tasks
-        write, the driver publishes one manifest. No SparkSession is
-        touched on this path (footer stats via pyarrow, manifest via
-        atomic rename), so a sink's ``commit()`` callback can run it
-        without a session handle. Bloom entries are skipped for such
-        files (absent entry = always scanned — never a false skip).
-
         Caller owns the MERGE/fold semantics; this layer guarantees
         only atomicity + fencing (the Iceberg-commit seam).
         """
@@ -1292,12 +1286,6 @@ class SnapshotTable:
                         bucket_words = self._commit_bloom_words(out_df)
                 else:
                     evidence, bucket_words = self._write_runs(out_df, out_dir, sort_cols)
-        if prewritten:
-            evidence.update(
-                self._footer_evidence(
-                    {f: str(b) for b, files in prewritten.items() for f in files}
-                )
-            )
 
         written: dict[str, list[str]] = {}
         new_file_buckets: dict[str, list[int]] = {}

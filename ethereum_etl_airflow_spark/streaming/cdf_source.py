@@ -4,11 +4,11 @@ source (PySpark 4 Python Data Source API).
 ``spark.readStream.format("snapshot_cdf").option("path", root)`` turns
 the table's commit log into a real streaming DataFrame — watermarks,
 stream-stream joins, ``foreachBatch`` and checkpoint recovery all work
-unmodified — completing the pull-based ``ChangesFollower`` /
-``CdfFollower`` family (operators/changes.py, streaming/cdf_follow.py)
-with the push surface the reference's live-view freshness chain implies
-(``build_verify_streaming_dag.py:81-100``: externally-streamed tables
-feeding lag-checked views).
+unmodified. It is the raw event stream next to the pull-based
+``CdfFollower`` (streaming/cdf_follow.py, net diffs through
+``table_changes``), and the push surface the reference's live-view
+freshness chain implies (``build_verify_streaming_dag.py:81-100``:
+externally-streamed tables feeding lag-checked views).
 
 Semantics — the raw change-event stream:
 
@@ -38,6 +38,21 @@ Register once per session with :func:`register_cdf_source`, then::
         .option("path", table_root)
         .option("starting_version", -1)   # -1 = from the first commit
         .load()
+
+To maintain a downstream table from the stream, write each micro-batch
+through the table's one write path, fenced on the batch id::
+
+    changes.writeStream.foreachBatch(
+        lambda df, e: apply_changes(downstream, df, "chain", epoch=e)
+    ).option("checkpointLocation", ckpt).start()
+
+``apply_changes`` gathers each micro-batch to the driver, so one batch
+must fit in ``spark.driver.maxResultSize`` (an over-limit batch fails
+before publishing). A trigger takes every commit up to the head as
+one micro-batch, so do not replay a large table from
+``starting_version`` -1: seed the downstream table with
+``ChangeLogTailer.bootstrap_from_state`` (the upstream's
+``read_raw()``) and follow from the head.
 """
 
 from __future__ import annotations

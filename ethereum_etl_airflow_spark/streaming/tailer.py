@@ -258,6 +258,30 @@ class ChangeLogTailer:
             lineage = self._wap_gate(target, lineage)
         return lineage
 
+    def _apply_batch(self, batch_df, app_id: str, epoch: int) -> dict | None:
+        """One feed batch end to end, the same in both drive modes:
+        transform, the NDV statistic (atomic with the commit), apply,
+        post-batch checks, derived refresh and lineage. None when the
+        epoch was already committed."""
+        if self.transform is not None:
+            batch_df = self.transform(batch_df)
+        props = None
+        if self.track_ndv:
+            from ethereum_etl_airflow_spark.operators import table_stats
+
+            props = table_stats.props_for_batch(self.table, batch_df, self.track_ndv)
+        lineage = self._apply(batch_df, app_id, epoch, props)
+        if lineage is None:
+            return None
+        if self.track_ndv:
+            lineage["ndv_estimate"] = round(
+                table_stats.distinct_estimate(self.table, self.track_ndv), 1
+            )
+        self._run_post_checks(lineage)
+        self._refresh_derived(lineage)
+        self._record_lineage(lineage)
+        return lineage
+
     def _run_post_checks(self, lineage: dict) -> None:
         if not self.post_batch_checks:
             return
@@ -426,27 +450,10 @@ class ChangeLogTailer:
         for batch_id, path in batch_dirs:
             if batch_id < start or (end is not None and batch_id > end):
                 continue
-            batch_df = self.spark.read.parquet(path)
-            if self.transform is not None:
-                batch_df = self.transform(batch_df)
-            props = None
-            if self.track_ndv:
-                from ethereum_etl_airflow_spark.operators import table_stats
-
-                props = table_stats.props_for_batch(
-                    self.table, batch_df, self.track_ndv
-                )
-            lineage = self._apply(batch_df, self.app_id, batch_id, props)
+            lineage = self._apply_batch(
+                self.spark.read.parquet(path), self.app_id, batch_id
+            )
             if lineage is not None:
-                if self.track_ndv:
-                    from ethereum_etl_airflow_spark.operators import table_stats
-
-                    lineage["ndv_estimate"] = round(
-                        table_stats.distinct_estimate(self.table, self.track_ndv), 1
-                    )
-                self._run_post_checks(lineage)
-                self._refresh_derived(lineage)
-                self._record_lineage(lineage)
                 results.append(lineage)
         return results
 
@@ -531,17 +538,10 @@ class ChangeLogTailer:
             # high-water mark and silently drop them
             stream_app = f"{self.app_id}:stream"
 
-        def _apply(batch_df, epoch_id: int):
-            if self.transform is not None:
-                batch_df = self.transform(batch_df)
-            lineage = self._apply(batch_df, stream_app, epoch_id)
-            if lineage is not None:
-                self._run_post_checks(lineage)
-                self._refresh_derived(lineage)
-                self._record_lineage(lineage)
-
         writer = (
-            stream.writeStream.foreachBatch(_apply)
+            stream.writeStream.foreachBatch(
+                lambda batch_df, epoch_id: self._apply_batch(batch_df, stream_app, epoch_id)
+            )
             .option("checkpointLocation", checkpoint_dir)
         )
         if available_now:

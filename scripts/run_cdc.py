@@ -83,7 +83,7 @@ def main() -> int:
         default=None,
         metavar="COL",
         help="maintain an incremental HLL distinct-key statistic for COL "
-        "in snapshot properties (replay mode; operators/table_stats.py)",
+        "in snapshot properties (operators/table_stats.py)",
     )
     ap.add_argument(
         "--wap-branch",

@@ -1,12 +1,10 @@
 """Round-4 ADVICE regression tests.
 
-Five defects from the round-3 advisor review, each pinned here:
+Defects from the round-3 advisor review, numbered as in that review:
 
 1. clone + pending rename layer: the clone's absolute manifest paths
    must match rename-layer scopes on read (read_files previously
    relpath-mangled them — pre-rename files read as null).
-2. stream sink vs existing table: the manifest's bucket fan-out wins
-   over the writer option (a silent mismatch mis-bucketed rows).
 3. CDF source planning past expired parents: commits now record their
    own added_files; legacy manifests without it fail explicitly
    instead of re-emitting the whole table as duplicates.
@@ -30,9 +28,6 @@ from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 from ethereum_etl_airflow_spark.streaming.cdf_source import (
     SnapshotCdfStreamReader,
     _CHANGE_COL,
-)
-from ethereum_etl_airflow_spark.streaming.table_sink import (
-    SnapshotTableStreamWriter,
 )
 
 SCHEMA = "op string, doc_id string, seq long, eid long, val string"
@@ -81,35 +76,6 @@ def test_clone_with_pending_equality_delete(spark, tmp_path):
     clone = t.clone_to(str(tmp_path / "clone"))
     ids = sorted(int(r["doc_id"]) for r in clone.read().collect())
     assert ids == list(range(5, 20))
-
-
-# ------------------------------------------------- 2: sink bucket fanout
-
-
-def test_sink_adopts_manifest_fanout(spark, tmp_path):
-    t = _table(spark, tmp_path, num_buckets=4)
-    _ingest(spark, t, n=8)
-    schema = spark.createDataFrame([], SCHEMA).schema
-    # no option: adopt the manifest's 4 (not the default 8)
-    w = SnapshotTableStreamWriter({"path": t.root}, schema)
-    assert w.num_buckets == 4
-    # matching option: fine
-    w = SnapshotTableStreamWriter(
-        {"path": t.root, "num_buckets": "4"}, schema
-    )
-    assert w.num_buckets == 4
-    # conflicting option: explicit error, never silent mis-bucketing
-    with pytest.raises(ValueError, match="manifest fan-out"):
-        SnapshotTableStreamWriter(
-            {"path": t.root, "num_buckets": "16"}, schema
-        )
-    # fresh table: option (or default) governs
-    w = SnapshotTableStreamWriter(
-        {"path": str(tmp_path / "new"), "num_buckets": "16"}, schema
-    )
-    assert w.num_buckets == 16
-    w = SnapshotTableStreamWriter({"path": str(tmp_path / "new")}, schema)
-    assert w.num_buckets == 8
 
 
 # --------------------------------------- 3: CDF planning vs expired past

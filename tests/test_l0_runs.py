@@ -11,8 +11,10 @@ Expected states are computed in plain Python from the event lists
 from __future__ import annotations
 
 import os
+import time
 from collections import Counter
 
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
@@ -295,7 +297,8 @@ def test_failed_footer_read_publishes_nothing(spark, tmp_path, monkeypatch):
 
 def _legacy_commit(spark, table, batch, epoch):
     """What commits wrote before L0 runs: one file per bucket under
-    ``_bucket=<b>/``, without a stored ``_bucket`` column."""
+    ``_bucket=<b>/``, without a stored ``_bucket`` column, published
+    as the manifest such a writer produced."""
     df = spark.createDataFrame(batch, SCHEMA).select(
         "doc_id",
         F.col("seq").alias("_seq"),
@@ -318,14 +321,32 @@ def _legacy_commit(spark, table, batch, epoch):
                 for fn in os.listdir(os.path.join(table.root, rel_dir, entry))
                 if fn.endswith(".parquet")
             ]
-    table.commit(
-        None,
-        replace_buckets=set(),
-        app_id="l0",
-        epoch=epoch,
-        new_schema=df.schema,
-        prewritten=files,
-        lineage={"op": "cdc_apply", "epoch": epoch, "compacted_buckets": []},
+    base = table.snapshot()
+    bucket_files = dict(base["bucket_files"])
+    bucket_rows: dict[str, int] = {}
+    seq_ranges = dict(base.get("file_seq_ranges") or {})
+    for b, fs in files.items():
+        bucket_files[b] = bucket_files.get(b, []) + fs
+        for f in fs:
+            seqs = pq.read_table(os.path.join(table.root, f), columns=["_seq"])["_seq"]
+            bucket_rows[b] = bucket_rows.get(b, 0) + len(seqs)
+            mm = pc.min_max(seqs)
+            seq_ranges[f] = [mm["min"].as_py(), mm["max"].as_py()]
+    table._publish(
+        {
+            "version": base["version"] + 1,
+            "parent_version": base["version"],
+            "committed_at": time.time(),
+            "schema": df.schema.jsonValue(),
+            "num_buckets": NB,
+            "bucket_files": bucket_files,
+            "commit_buckets": sorted(int(b) for b in files),
+            "bucket_rows_written": bucket_rows,
+            "added_files": files,
+            "properties": {**base["properties"], "last_epoch:l0": epoch},
+            "lineage": {"op": "cdc_apply", "epoch": epoch, "compacted_buckets": []},
+            "file_seq_ranges": seq_ranges,
+        }
     )
 
 

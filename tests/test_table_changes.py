@@ -88,24 +88,6 @@ def test_per_bucket_lineage_rows_written(spark, tmp_path):
     assert set(per_bucket) <= {str(b) for b in range(4)}
 
 
-def test_changes_follower_polls_incrementally(spark, tmp_path):
-    from ethereum_etl_airflow_spark.operators.changes import ChangesFollower
-
-    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
-    apply_changes(t, _batch(spark, [("I", "a", 1, 1)]), "cf", 0)
-    f = ChangesFollower(t, from_version=-1)
-    first = f.poll()
-    assert {r["_change_type"] for r in first.collect()} == {"insert"}
-    assert f.poll() is None  # nothing new
-    apply_changes(t, _batch(spark, [("U", "a", 2, 5), ("I", "b", 3, 2)]), "cf", 1)
-    second = {r["doc_id"]: r["_change_type"] for r in f.poll().collect()}
-    assert second == {"a": "update", "b": "insert"}
-    # resume from a persisted cursor: a new follower at the old cursor
-    # re-delivers the same net changes (at-least-once, consumer dedupes)
-    f2 = ChangesFollower(t, from_version=0)
-    assert {r["doc_id"] for r in f2.poll().collect()} == {"a", "b"}
-
-
 def test_full_changelog_emits_pre_and_post_images(spark, tmp_path):
     """changelog_mode='full': updates become update_preimage (old
     payload) + update_postimage (new payload) — the Delta-CDF full

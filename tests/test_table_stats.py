@@ -64,7 +64,8 @@ def test_fenced_replay_does_not_drift_stat(spark, tmp_path):
 def test_tailer_track_ndv_and_resume(spark, tmp_path):
     """The opt-in tailer flag maintains the stat through a crash-resume:
     a second tailer over the same feed re-applies nothing and ends with
-    the same registers a single clean run produces."""
+    the same registers a single clean run produces, and so does a
+    streamed run."""
     from ethereum_etl_airflow_spark.streaming.tailer import ChangeLogTailer
     from ethereum_etl_airflow_spark.sources.feed import write_feed
 
@@ -88,6 +89,16 @@ def test_tailer_track_ndv_and_resume(spark, tmp_path):
     )
     clean.replay_batches()
     assert final == stored_registers(clean.table, "doc_id")
+
+    # stream mode keeps the same statistic: its micro-batches group the
+    # feed differently, but the MAX-merge makes the registers equal
+    streamed = ChangeLogTailer(
+        spark, feed, str(tmp_path / "t_stream"), app_id="ndv", verify=False,
+        track_ndv="doc_id",
+    )
+    streamed.run_stream(str(tmp_path / "ck"), available_now=True)
+    assert streamed.applied and all("ndv_estimate" in li for li in streamed.applied)
+    assert stored_registers(streamed.table, "doc_id") == final
 
 
 def test_register_merge_algebra():
