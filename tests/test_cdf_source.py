@@ -3,9 +3,9 @@
 The SnapshotTable commit log as a real Structured Streaming source:
 delta rows stream exactly once, maintenance commits are silent,
 in-commit compaction rewrites are filtered by epoch, checkpoint
-recovery resumes from the committed version offset, pre-evolution
-files pad onto the pinned stream schema, and a foreachBatch chain into
-a second table converges exactly once.
+recovery resumes from the committed version offset, and pre-evolution
+files pad onto the pinned stream schema. The chain into a second table
+is tested in test_table_sink.py.
 """
 
 from __future__ import annotations
@@ -136,70 +136,3 @@ def test_starting_version_default_is_head(spark, tmp_path):
     except Exception:
         rows = []
     assert rows == []  # default starting_version = head: nothing emitted
-
-
-def test_native_stream_chain_cdf_to_apply_changes(spark, tmp_path):
-    """table A --readStream(snapshot_cdf)--> transform
-    --foreachBatch(apply_changes)--> table B: the reference's live-view
-    chain through the public streaming APIs and the table's one write
-    path; B converges to A's LWW state, and replayed or idle batches
-    add no version."""
-    import pyspark.sql.functions as F
-
-    a = _table(spark, tmp_path, "a")
-    b = _table(spark, tmp_path, "b")
-    rows = [("U", str(i), i, i, f"v{i}") for i in range(20)]
-    apply_changes(a, _changes(spark, rows[:10]), "st", epoch=0)
-    apply_changes(a, _changes(spark, rows[10:]), "st", epoch=1)
-
-    def body(df, epoch):
-        return apply_changes(b, df, "chain", epoch=epoch)
-
-    def drain():
-        register_cdf_source(spark)
-        changes = (
-            spark.readStream.format("snapshot_cdf")
-            .option("path", a.root)
-            .option("starting_version", -1)
-            .load()
-            .select(
-                F.when(F.col("_tombstone"), "D").otherwise("U").alias("op"),
-                "doc_id",
-                F.col("_seq").alias("seq"),
-                "eid",
-                "val",
-            )
-        )
-        q = (
-            changes.writeStream.foreachBatch(body)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def state(t):
-        return {r["doc_id"]: (r["eid"], r["val"]) for r in t.read().collect()}
-
-    drain()
-    assert state(b) == state(a)
-    # more upstream changes incl. a delete; the chain catches up
-    apply_changes(
-        a,
-        _changes(spark, [("U", "3", 103, 3, "v3b"), ("D", "5", 105, None, None)]),
-        "st",
-        epoch=2,
-    )
-    drain()
-    assert state(b) == state(a)
-    assert "5" not in state(b) and state(b)["3"][1] == "v3b"
-    # an idle drain commits nothing
-    v = b.current_version()
-    drain()
-    assert b.current_version() == v
-    # a batch replayed under an applied batchId is fenced: no version,
-    # no change, even when its rows differ
-    replay = _changes(spark, [("U", "3", 999, 3, "replayed")])
-    assert body(replay, b.last_epoch("chain")) is None
-    assert b.current_version() == v
-    assert state(b)["3"][1] == "v3b"

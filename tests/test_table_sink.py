@@ -1,158 +1,48 @@
-"""Native exactly-once writeStream sink (streaming/table_sink.py).
+"""Streaming into a SnapshotTable through foreachBatch -> apply_changes.
 
-A change-event stream written through format("snapshot_table") must
-converge to the same LWW state as the tailer path: per-task bucketed
-files, one epoch-fenced manifest per micro-batch, delete events as
-tombstones, schema evolution mid-stream, and replayed epochs fenced.
+Every micro-batch reaches the table through its one write path
+(apply_changes -> SnapshotTable.commit), fenced on the micro-batch id:
+a stream converges to the upstream LWW state, deletes arrive as
+tombstones, idle drains commit nothing, and a replayed batchId adds no
+version.
 """
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 
+from ethereum_etl_airflow_spark.operators.cdc import apply_changes
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
-from ethereum_etl_airflow_spark.streaming.table_sink import (
-    SnapshotTableStreamWriter,
-    _FilesMessage,
-    register_table_sink,
-)
+from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
 
 SCHEMA1 = "op string, doc_id string, seq long, eid long, val string"
-SCHEMA2 = SCHEMA1 + ", note string"
 
 
-def _feed(spark, tmp_path, rows, schema, sub):
-    d = str(tmp_path / "feed" / sub)
-    spark.createDataFrame(rows, schema).write.parquet(d)
-    return str(tmp_path / "feed")
+def _changes(spark, rows):
+    return spark.createDataFrame(rows, SCHEMA1)
 
 
-def _run(spark, feed_dir, schema, root, ckpt):
-    register_table_sink(spark)
-    df = spark.readStream.schema(schema).parquet(feed_dir + "/*")
-    q = (
-        df.writeStream.format("snapshot_table")
-        .option("path", root)
-        .option("app_id", "sink")
-        .option("num_buckets", 4)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+def _table(spark, tmp_path, name):
+    return SnapshotTable(spark, str(tmp_path / name), num_buckets=4)
 
 
-def test_stream_sink_exactly_once_lww(spark, tmp_path):
-    root, ckpt = str(tmp_path / "t"), str(tmp_path / "ck")
-    rows1 = [("U", str(i), i, i, f"v{i}") for i in range(30)]
-    feed = _feed(spark, tmp_path, rows1, SCHEMA1, "b1")
-    _run(spark, feed, SCHEMA1, root, ckpt)
-    t = SnapshotTable(spark, root)
-    got = {r["doc_id"]: r["val"] for r in t.read().collect()}
-    assert len(got) == 30 and got["7"] == "v7"
-    snap = t.snapshot()
-    assert snap["lineage"]["op"] == "cdc_apply"
-    assert t.last_epoch("sink") == 0
-    v1 = t.current_version()
-
-    # batch 2: update, delete, and a NEW column (evolution mid-stream)
-    rows2 = [
-        ("U", "7", 107, 7, "v7b", "noted"),
-        ("D", "9", 109, None, None, None),
-        ("U", "99", 99, 99, "new", None),
-    ]
-    _feed(spark, tmp_path, rows2, SCHEMA2, "b2")
-    _run(spark, feed, SCHEMA2, root, ckpt)
-    t = SnapshotTable(spark, root)
-    assert t.last_epoch("sink") == 1
-    got = {r["doc_id"]: r for r in t.read().collect()}
-    assert got["7"]["val"] == "v7b" and got["7"]["note"] == "noted"
-    assert "9" not in got and got["99"]["val"] == "new"
-    assert got["3"]["note"] is None  # pre-evolution rows pad
-    assert len(got) == 30  # 30 - deleted + inserted
-
-    # no new input -> no new batch, version advances at most via fence
-    _run(spark, feed, SCHEMA2, root, ckpt)
-    assert SnapshotTable(spark, root).last_epoch("sink") == 1
-
-    # the stream-written table behaves like any other: point lookup
-    assert t.lookup(["7"]).collect()[0]["val"] == "v7b"
-    assert v1 < t.current_version()
+def _state(t):
+    return {r["doc_id"]: (r["eid"], r["val"]) for r in t.read().collect()}
 
 
 def test_replayed_epoch_is_fenced(spark, tmp_path):
-    root, ckpt = str(tmp_path / "t"), str(tmp_path / "ck")
+    feed = str(tmp_path / "feed")
     rows = [("U", str(i), i, i, f"v{i}") for i in range(8)]
-    feed = _feed(spark, tmp_path, rows, SCHEMA1, "b1")
-    _run(spark, feed, SCHEMA1, root, ckpt)
-    t = SnapshotTable(spark, root)
-    v = t.current_version()
-    # a crashed-and-recovered batch re-invokes commit with the SAME id:
-    # the fence must skip it without a new version
-    writer = SnapshotTableStreamWriter(
-        {"path": root, "app_id": "sink", "num_buckets": "4"},
-        spark.createDataFrame([], SCHEMA1).schema,
-    )
-    writer.commit([_FilesMessage({"0": ["data/bogus.parquet"]}, 1)], batchId=0)
-    assert SnapshotTable(spark, root).current_version() == v
+    _changes(spark, rows).write.parquet(feed + "/b1")
+    t = _table(spark, tmp_path, "t")
 
-
-def test_task_files_are_bucket_pure(spark, tmp_path):
-    root, ckpt = str(tmp_path / "t"), str(tmp_path / "ck")
-    rows = [("U", str(i), i, i, f"v{i}") for i in range(50)]
-    feed = _feed(spark, tmp_path, rows, SCHEMA1, "b1")
-    _run(spark, feed, SCHEMA1, root, ckpt)
-    t = SnapshotTable(spark, root)
-    from ethereum_etl_airflow_spark.functions.hashing import bucket_of
-
-    snap = t.snapshot()
-    for b, files in snap["bucket_files"].items():
-        for rel in files:
-            ids = [
-                r["doc_id"]
-                for r in spark.read.parquet(os.path.join(root, rel)).collect()
-            ]
-            assert all(bucket_of(d, t.num_buckets) == int(b) for d in ids)
-    # per-file _seq skip index exists for stream-written files too
-    assert snap.get("file_seq_ranges")
-
-
-def test_native_stream_chain_cdf_to_sink(spark, tmp_path):
-    """table A --readStream(snapshot_cdf)--> transform
-    --writeStream(snapshot_table)--> table B: the reference's live-view
-    chain as pure Structured Streaming; B converges to A's LWW state."""
-    from ethereum_etl_airflow_spark.operators.cdc import apply_changes
-    from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
-
-    a = SnapshotTable(spark, str(tmp_path / "a"), num_buckets=4)
-    rows = [("U", str(i), i, i, f"v{i}") for i in range(20)]
-    mk = lambda rs: spark.createDataFrame(rs, SCHEMA1)
-    apply_changes(a, mk(rows[:10]), "st", epoch=0)
-    apply_changes(a, mk(rows[10:]), "st", epoch=1)
+    def body(df, epoch):
+        return apply_changes(t, df, "sink", epoch=epoch)
 
     def drain():
-        register_cdf_source(spark)
-        register_table_sink(spark)
-        cdf = (
-            spark.readStream.format("snapshot_cdf")
-            .option("path", a.root)
-            .option("starting_version", -1)
-            .load()
-        )
-        changes = cdf.select(
-            F.when(F.col("_tombstone"), "D").otherwise("U").alias("op"),
-            "doc_id",
-            F.col("_seq").alias("seq"),
-            "eid",
-            "val",
-        )
+        df = spark.readStream.schema(SCHEMA1).parquet(feed + "/*")
         q = (
-            changes.writeStream.format("snapshot_table")
-            .option("path", str(tmp_path / "b"))
-            .option("app_id", "chain")
-            .option("num_buckets", 4)
+            df.writeStream.foreachBatch(body)
             .option("checkpointLocation", str(tmp_path / "ck"))
             .trigger(availableNow=True)
             .start()
@@ -160,16 +50,68 @@ def test_native_stream_chain_cdf_to_sink(spark, tmp_path):
         q.awaitTermination(120)
 
     drain()
-    b = SnapshotTable(spark, str(tmp_path / "b"))
-    state = lambda t: {
-        r["doc_id"]: (r["eid"], r["val"]) for r in t.read().collect()
-    }
-    assert state(b) == state(a)
+    assert t.last_epoch("sink") == 0
+    assert _state(t) == {str(i): (i, f"v{i}") for i in range(8)}
+    v = t.current_version()
+    # a crashed-and-recovered batch re-invokes the body with the SAME id:
+    # the fence skips it without a new version, even when its rows differ
+    assert body(_changes(spark, [("U", "3", 999, 3, "replayed")]), 0) is None
+    assert t.current_version() == v
+    assert _state(t)["3"] == (3, "v3")
+    # a restart on the same checkpoint replays nothing
+    drain()
+    assert t.current_version() == v
+
+
+def test_native_stream_chain_cdf_to_sink(spark, tmp_path):
+    """table A --readStream(snapshot_cdf)--> transform
+    --foreachBatch(apply_changes)--> table B: the reference's live-view
+    chain through the public streaming APIs and the table's one write
+    path; B converges to A's LWW state, and idle drains add no version."""
+    a = _table(spark, tmp_path, "a")
+    b = _table(spark, tmp_path, "b")
+    rows = [("U", str(i), i, i, f"v{i}") for i in range(20)]
+    apply_changes(a, _changes(spark, rows[:10]), "st", epoch=0)
+    apply_changes(a, _changes(spark, rows[10:]), "st", epoch=1)
+
+    def drain():
+        register_cdf_source(spark)
+        changes = (
+            spark.readStream.format("snapshot_cdf")
+            .option("path", a.root)
+            .option("starting_version", -1)
+            .load()
+            .select(
+                F.when(F.col("_tombstone"), "D").otherwise("U").alias("op"),
+                "doc_id",
+                F.col("_seq").alias("seq"),
+                "eid",
+                "val",
+            )
+        )
+        q = (
+            changes.writeStream.foreachBatch(
+                lambda df, epoch: apply_changes(b, df, "chain", epoch=epoch)
+            )
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    drain()
+    assert _state(b) == _state(a)
     # more upstream changes incl. a delete; the chain catches up
     apply_changes(
-        a, mk([("U", "3", 103, 3, "v3b"), ("D", "5", 105, None, None)]), "st", epoch=2
+        a,
+        _changes(spark, [("U", "3", 103, 3, "v3b"), ("D", "5", 105, None, None)]),
+        "st",
+        epoch=2,
     )
     drain()
-    b = SnapshotTable(spark, str(tmp_path / "b"))
-    assert state(b) == state(a)
-    assert "5" not in state(b) and state(b)["3"][1] == "v3b"
+    assert _state(b) == _state(a)
+    assert "5" not in _state(b) and _state(b)["3"][1] == "v3b"
+    # an idle drain commits nothing
+    v = b.current_version()
+    drain()
+    assert b.current_version() == v
