@@ -36,20 +36,28 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      row per input partition BEFORE the shuffle — dedup and hot-key
      skew defense in a single operator. (A row_number window would
      sort and push every hot-key row through the shuffle.)
-  3. **threshold compaction**: buckets whose file count reaches
-     ``table.compact_files`` are folded back to one level-1 (L1) file
-     per bucket INSIDE the same atomic commit — amortized O(log)
-     rewrite like an LSM tree. Such a commit sets its size from the
-     table, not the batch, so it runs a distributed Spark write.
-  4. **exactly-once**: the commit is fenced by (app_id, epoch) in the
-     snapshot manifest; a replayed epoch is skipped before any work.
-     The fold itself is idempotent at event level (same (doc_id, seq)
-     -> same winner), so fencing avoids re-work — correctness never
+  3. **threshold compaction, as its own commit**: once the batch is
+     published, buckets holding ``table.compact_files`` files (or too
+     many pending delete layers) are folded back to one level-1 (L1)
+     file per bucket by a separate ``compact`` commit on the same
+     thread — amortized O(log) rewrite like an LSM tree, and the
+     Iceberg ``rewrite_data_files`` shape: an ingest commit only ever
+     appends, so change-feed readers never tell an append from a
+     rewrite. Compaction sets its size from the table, not the batch,
+     so it runs a distributed Spark write.
+  4. **exactly-once**: the delta commit is fenced by (app_id, epoch)
+     in the snapshot manifest; a replayed epoch is skipped before any
+     work. A crash between the delta and the compaction commit leaves
+     the batch applied and fenced; the next apply finds the same
+     buckets due and compacts them (``compact`` is idempotent). The
+     fold itself is idempotent at event level (same (doc_id, seq) ->
+     same winner), so fencing avoids re-work — correctness never
      depends on it.
 
-Metrics ride on ``DataFrame.observe`` — no extra pass over the data.
-The per-epoch "which buckets were touched" lineage comes from the
-commit's written-file listing — also no extra pass.
+Input metrics ride on ``DataFrame.observe`` — no extra pass over the
+data. The rows written and the per-epoch "which buckets were touched"
+lineage come from the commit's own per-file evidence — also no extra
+pass.
 """
 
 from __future__ import annotations
@@ -61,11 +69,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ethereum_etl_airflow_spark.sinks.snapshot_table import (
-    SnapshotTable,
-    bucket_expr,
-    fold_lww,
-)
+from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
 
 META_COLS = {"op", "seq", "ts", "batch_id", "_seq", "_epoch", "_tombstone", "_bucket"}
 
@@ -132,73 +136,37 @@ def apply_changes(
     )
     # LSM append discipline: the batch is written UNFOLDED — the
     # read/compaction-side fold already resolves duplicates and
-    # out-of-order updates, so a non-compacting apply is one Spark job
-    # with no shuffle (the gather inside commit)
+    # out-of-order updates, so the batch's commit is one Spark job with
+    # no shuffle (the gather inside commit)
     delta = typed.withColumn(
         "_bucket", bucket_expr(F.col("doc_id"), table.num_buckets)
     )
 
-    # threshold compaction: buckets already holding >= compact_files - 1
-    # files get folded (existing ∪ delta) into one file in this commit
-    counts = table.file_counts()
-    compact_set = {b for b, c in counts.items() if c + 1 >= table.compact_files}
-
-    if compact_set:
-        compact_list = sorted(compact_set)
-        if SnapshotTable._live_delete_layers(table.snapshot(), compact_list):
-            # pending merge-on-read delete layers on these buckets: fold
-            # through the layer-aware path (read_raw materializes the
-            # masks); the commit's replace then clears the layers —
-            # folding raw files here would silently drop the deletes
-            existing = table.read_raw(compact_list)
-        else:
-            existing = table.read_files(compact_list)
-        full = fold_lww(
-            existing.unionByName(
-                delta.where(F.col("_bucket").isin(compact_list)).drop("_bucket"),
-                allowMissingColumns=True,
-            )
-        ).withColumn("_bucket", bucket_expr(F.col("doc_id"), table.num_buckets))
-        out = delta.where(~F.col("_bucket").isin(compact_list)).unionByName(
-            full, allowMissingColumns=True
-        )
-    else:
-        out = delta
-
     if verify:
-        out = check_invariants(out)
-
-    obs_out = Observation(f"cdc_out_{epoch}")
-    out = out.observe(
-        obs_out,
-        F.count(F.lit(1)).alias("rows_out"),
-        F.count_if(F.col("_tombstone")).alias("tombstones_out"),
-    )
+        delta = check_invariants(delta)
 
     snap = table.commit(
-        out,
-        replace_buckets=compact_set,
+        delta,
+        replace_buckets=set(),
         app_id=app_id,
         epoch=epoch,
         new_schema=new_schema,
         # manifest-side marker (the full metrics lineage below resolves
         # only after observations and is returned to the caller): CDF
-        # stream readers use op + compacted_buckets to tell delta rows
-        # from compaction rewrites inside the same commit
-        lineage={
-            "op": "cdc_apply",
-            "epoch": epoch,
-            "compacted_buckets": sorted(compact_set),
-        },
+        # stream readers emit the rows of cdc_apply commits only
+        lineage={"op": "cdc_apply", "epoch": epoch},
         properties=properties,
     )
+    # the batch is readable from here; compaction is its own commit
+    due, _ = table._compaction_due()
+    if due:
+        table.compact(sorted(due))
 
     wall = time.time() - t0
     m_in = _obs_get(
         obs_in,
         {"events_in": 0, "min_seq": None, "max_seq": None, "deletes_in": 0, "max_event_ts": None},
     )
-    m_out = _obs_get(obs_out, {"rows_out": 0, "tombstones_out": 0})
     max_ts = m_in.get("max_event_ts")
     lineage = {
         "app_id": app_id,
@@ -210,10 +178,11 @@ def apply_changes(
         "touched_buckets": len(snap.get("commit_buckets", [])),
         # per-partition lineage (north rule): rows this batch landed in
         # each hash bucket, from the commit's parquet footers
-        "bucket_rows_written": snap.get("bucket_rows_written", {}),
-        "compacted_buckets": len(compact_set),
-        "rows_out": m_out["rows_out"],
-        "tombstones_out": m_out["tombstones_out"],
+        "bucket_rows_written": snap["bucket_rows_written"],
+        "compacted_buckets": len(due),
+        # the batch is written unfolded: one row per event
+        "rows_out": sum(snap["bucket_rows_written"].values()),
+        "tombstones_out": m_in["deletes_in"],
         "wall_sec": round(wall, 4),
         "events_per_sec": round(m_in["events_in"] / wall, 2) if wall > 0 else None,
         "event_time_lag_sec": (

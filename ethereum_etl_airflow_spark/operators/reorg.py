@@ -150,11 +150,10 @@ def rewind_to_seq(table: SnapshotTable, app_id: str, seq: int) -> dict | None:
 def _commit_max_seq(table: SnapshotTable, snap: dict) -> int | None:
     """Highest ``_seq`` a CDC commit applied, from the manifest alone:
     max over the commit's own added files' footer seq ranges
-    (``file_seq_ranges``, recorded at commit time). A compacting commit
-    folds older rows into its new files, but seqs are monotone across
-    batches so the max is still the batch's max. Legacy manifests
-    without ``added_files`` diff against the retained parent; None =
-    no data added (property-only commit) or no range evidence."""
+    (``file_seq_ranges``, recorded at commit time); a CDC commit only
+    adds its batch's rows. Legacy manifests without ``added_files``
+    diff against the retained parent; None = no data added
+    (property-only commit) or no range evidence."""
     ranges = snap.get("file_seq_ranges") or {}
     added = snap.get("added_files")
     if added is None:

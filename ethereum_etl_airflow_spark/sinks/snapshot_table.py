@@ -24,9 +24,9 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
     bucket with one hash aggregation (``max_by(row, (_seq, _epoch))``
     = last-writer-wins). When a bucket accumulates ``compact_files``
     files, it is compacted back to a single level-1 (L1) file of its
-    own inside the same atomic commit, by a distributed Spark write
+    own by a separate ``compact`` commit, a distributed Spark write
     (amortized O(log) rewrites — the Hudi-MOR / Paimon pattern, and
-    Iceberg's MERGE + maintenance compaction). The
+    Iceberg's ``rewrite_data_files`` snapshot). The
     physical file need not follow the logical bucket (Jigsaw's point):
     a file's rows count only for the buckets whose list still names it
     (``file_buckets`` records the bucket set of every multi-bucket
@@ -1209,9 +1209,9 @@ class SnapshotTable:
     ) -> dict:
         """Publish one atomic commit. ``out_df`` carries a ``_bucket``
         column; for buckets in ``replace_buckets`` the output rows are
-        the bucket's COMPLETE new content (compaction — file list
-        replaced), for every other bucket they are a DELTA (files
-        appended). Epoch fencing property is advanced for ``app_id``.
+        the bucket's COMPLETE new content (file list replaced), for
+        every other bucket they are a DELTA (files appended). Epoch
+        fencing property is advanced for ``app_id``.
         It is the table's one write path: every streaming micro-batch
         reaches it through ``apply_changes``.
 
@@ -1227,12 +1227,11 @@ class SnapshotTable:
           lands in exactly one file per commit (see :meth:`_write_runs`).
           The gathered batch must fit in ``spark.driver.maxResultSize``;
           a larger one fails before anything is published;
-        * a commit that replaces buckets (compaction, :meth:`compact`,
+        * a commit that replaces buckets (:meth:`compact`,
           :meth:`delete_where`, :meth:`rewrite_sorted`, rebucket, reorg
           rewinds) sets its size from the table, not one batch, and
-          runs a distributed Spark write: rows of replaced buckets land
-          as one level-1 (L1) file per bucket, the other rows as one L0
-          run per write task after the bucket repartition.
+          runs a distributed Spark write of one level-1 (L1) file per
+          bucket (see :meth:`_write_rewrite`).
 
         Every file is listed in ``bucket_files[b]`` for each bucket b it
         holds (``bucket_rows_written`` is exact), and manifests record
@@ -1278,9 +1277,7 @@ class SnapshotTable:
             with self._job_label(app_id, epoch, "rewrite" if rewrite else "flush"):
                 if rewrite:
                     evidence = self._footer_evidence(
-                        self._write_rewrite(
-                            out_df, out_dir, replace_buckets, full_replace, sort_cols
-                        )
+                        self._write_rewrite(out_df, out_dir, sort_cols)
                     )
                     if self.bloom_bits:
                         bucket_words = self._commit_bloom_words(out_df)
@@ -1595,72 +1592,45 @@ class SnapshotTable:
         return dict(runs), bucket_words
 
     def _write_rewrite(
-        self,
-        out_df: DataFrame,
-        out_dir: str,
-        replace_buckets: set[int],
-        full_replace: bool,
-        sort_cols: list[str] | None,
-    ) -> dict[str, str | None]:
-        """Distributed Spark write of a commit that replaces buckets.
-        Rows of a replaced bucket go to that bucket's own L1 file
-        (``_run`` = bucket); every other row goes to its write task's L0
-        run (``_run`` = -1), one file per task after the bucket
-        repartition, spanning many buckets and keeping ``_bucket`` as a
-        column. Returns each written file's one bucket, or None for an
-        L0 run."""
+        self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None
+    ) -> dict[str, str]:
+        """Distributed Spark write of a commit that replaces buckets:
+        every bucket's rows land in one L1 file of its own (``_run`` =
+        bucket, ``_bucket`` kept as a column). Returns each written
+        file's bucket."""
         n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        if full_replace:
-            run = F.col("_bucket")
-        else:
-            run = F.when(
-                F.col("_bucket").isin(sorted(replace_buckets)), F.col("_bucket")
-            ).otherwise(F.lit(-1))
         # sort within each file: parquet column min/max stats then let
         # scans skip whole row groups (Iceberg sort-order analogue).
         # Default key = doc_id (point lookups); ``sort_cols`` overrides
         # for layout rewrites (e.g. a Z-order key for 2-D pruning, or
         # _seq for replay-range scans).
-        sort_keys = ["_run", "_bucket", *(sort_cols or ["doc_id"])]
+        sort_keys = ["_run", *(sort_cols or ["doc_id"])]
         out_df.repartition(n_out, "_bucket").withColumn(
-            "_run", run.cast("int")
+            "_run", F.col("_bucket")
         ).sortWithinPartitions(*sort_keys).write.partitionBy("_run").parquet(out_dir)
-        file_bucket: dict[str, str | None] = {}
+        file_bucket: dict[str, str] = {}
         if os.path.isdir(out_dir):
             for entry in sorted(os.listdir(out_dir)):
                 if not entry.startswith("_run="):
                     continue
-                run_b = entry.split("=", 1)[1]
                 rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
                 for fn in sorted(os.listdir(os.path.join(out_dir, entry))):
                     if fn.endswith(".parquet"):
-                        file_bucket[os.path.join(rel_dir, fn)] = (
-                            None if run_b == "-1" else run_b
-                        )
+                        file_bucket[os.path.join(rel_dir, fn)] = entry.split("=", 1)[1]
         return file_bucket
 
     def _footer_evidence(
-        self, file_bucket: dict[str, str | None]
+        self, file_bucket: dict[str, str]
     ) -> dict[str, tuple[dict[str, int], object]]:
-        """Per-bucket row counts and footer metadata of files already on
-        disk, read with pyarrow on the driver (no Spark job): a
-        single-bucket file's count is its row count, an L0 run's come
-        from its ``_bucket`` column. A failed read raises."""
-        import pyarrow.compute as pc
+        """Row count and footer metadata of each single-bucket file
+        already on disk, read with pyarrow on the driver (no Spark
+        job). A failed read raises."""
         import pyarrow.parquet as pq
 
         out: dict[str, tuple[dict[str, int], object]] = {}
         for f, b in file_bucket.items():
-            pf = pq.ParquetFile(os.path.join(self.root, f))
-            md = pf.metadata
-            if b is not None:
-                counts = {b: md.num_rows}
-            else:
-                vc = pc.value_counts(pf.read(columns=["_bucket"]).column(0))
-                counts = {
-                    str(v["values"].as_py()): int(v["counts"].as_py()) for v in vc
-                }
-            out[f] = (counts, md)
+            md = pq.ParquetFile(os.path.join(self.root, f)).metadata
+            out[f] = ({b: md.num_rows}, md)
         return out
 
     def rebucket(self, new_num_buckets: int, app_id: str = "maintenance") -> dict:
@@ -2301,6 +2271,24 @@ class SnapshotTable:
         self._publish(snap)
         return snap
 
+    def _compaction_due(self) -> tuple[set[int], set[int]]:
+        """Buckets due for compaction at the head, and the subset due
+        for their delete-layer depth: a bucket is due when it holds
+        ``retention.compact_files`` files (default ``compact_files``)
+        or ``retention.max_delete_layers`` (default 4) pending
+        merge-on-read delete layers."""
+        snap = self.snapshot()
+        props = snap["properties"]
+        thr = int(props.get("retention.compact_files", self.compact_files))
+        due = {int(b) for b, fs in snap["bucket_files"].items() if len(fs) >= thr}
+        max_layers = int(props.get("retention.max_delete_layers", 4))
+        layer_counts: dict[int, int] = {}
+        for lay in snap.get("delete_layers") or []:
+            for b in lay["files"]:
+                layer_counts[int(b)] = layer_counts.get(int(b), 0) + 1
+        layered = {b for b, c in layer_counts.items() if c >= max_layers}
+        return due | layered, layered
+
     def maintain(self) -> dict:
         """One property-driven maintenance pass (the reference's TTL
         side tables + partition GC cadence, build_partition_dag.py:
@@ -2317,23 +2305,14 @@ class SnapshotTable:
           delete_keys_lazy) reach this depth are compacted, draining
           the layers: read amplification from lazy deletes stays
           bounded without the caller tracking them."""
-        snap = self.snapshot()
-        props = snap["properties"]
         report: dict = {}
-        thr = int(props.get("retention.compact_files", self.compact_files))
-        over = {b for b, c in self.file_counts().items() if c >= thr}
-        max_layers = int(props.get("retention.max_delete_layers", 4))
-        layer_counts: dict[int, int] = {}
-        for lay in snap.get("delete_layers") or []:
-            for b in lay["files"]:
-                layer_counts[int(b)] = layer_counts.get(int(b), 0) + 1
-        layered = {b for b, c in layer_counts.items() if c >= max_layers}
+        due, layered = self._compaction_due()
         if layered:
             report["delete_layers_drained_buckets"] = len(layered)
-        over |= layered
-        if over:
-            self.compact(sorted(over))
-            report["compacted_buckets"] = len(over)
+        if due:
+            self.compact(sorted(due))
+            report["compacted_buckets"] = len(due)
+        props = self.snapshot()["properties"]
         ttl = props.get("retention.snapshot_ttl_sec")
         keep = int(props.get("retention.keep_last", 2))
         report["files_removed"] = self.expire_snapshots(

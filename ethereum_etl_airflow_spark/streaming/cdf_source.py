@@ -23,9 +23,10 @@ Semantics — the raw change-event stream:
   ``fold_lww`` if it needs table state rather than the event stream.
 * **maintenance commits emit nothing** (compaction, delete_where,
   rebucket, rename: rewrites of existing logical rows). A CDC commit
-  that compacts buckets in the SAME commit mixes delta and rewritten
-  rows in one file — those partitions filter ``_epoch == commit epoch``
-  so rewrites are never re-emitted.
+  only appends; ``apply_changes`` compacts in a commit of its own.
+  A CDC commit written before that split, whose manifest still lists
+  ``compacted_buckets``, mixes delta and rewritten rows in one file:
+  planning it raises rather than re-emit the rewritten rows.
 * **scale**: ``partitions()`` plans on the driver from manifest JSON
   (zero Spark jobs); each data file becomes one input partition read
   on an EXECUTOR via pyarrow, yielded as Arrow RecordBatches (the
@@ -93,7 +94,6 @@ def _read_manifest(root: str, version: int) -> dict | None:
 class _FilePartition(InputPartition):
     path: str
     version: int
-    epoch_filter: int | None
     schema_json: str
 
 
@@ -141,6 +141,15 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
             lin = snap.get("lineage") or {}
             if lin.get("op") != "cdc_apply":
                 continue  # maintenance rewrite — no new logical changes
+            if lin.get("compacted_buckets"):
+                raise RuntimeError(
+                    f"cdf planning for commit v{v}: it compacted buckets "
+                    "in the same commit as its delta, so its new files "
+                    "mix this batch's rows with rewritten ones — restart "
+                    "the stream from a later starting_version, or seed "
+                    "the downstream table with "
+                    "ChangeLogTailer.bootstrap_from_state"
+                )
             added = snap.get("added_files")
             if added is None:
                 # legacy manifest (pre added_files): infer the commit's
@@ -168,28 +177,20 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
                     b: [f for f in files if f not in prev_files]
                     for b, files in snap["bucket_files"].items()
                 }
-            compacted = {str(b) for b in lin.get("compacted_buckets") or []}
             # one partition per file: a multi-bucket (L0) file is listed
             # under every bucket it holds
-            in_compacted: dict[str, bool] = {}
-            for b, files in added.items():
-                for rel in files:
-                    in_compacted[rel] = in_compacted.get(rel, False) or b in compacted
-            for rel, folded in in_compacted.items():
+            for rel in dict.fromkeys(f for fs in added.values() for f in fs):
                 out.append(
                     _FilePartition(
                         path=os.path.join(self.root, rel),
                         version=v,
-                        # a compacting CDC commit folds old rows into
-                        # the bucket's new file — emit only this epoch's
-                        epoch_filter=int(lin["epoch"]) if folded else None,
                         schema_json=schema_json,
                     )
                 )
         return out or [
             # Spark requires >= 1 partition per batch; an empty marker
             # partition yields no rows
-            _FilePartition(path="", version=-1, epoch_filter=None, schema_json=schema_json)
+            _FilePartition(path="", version=-1, schema_json=schema_json)
         ]
 
     # ------------------------------------------------------------ reading
@@ -198,14 +199,11 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
         if not partition.path:
             return iter(())
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_type
 
         declared = T.StructType.fromJson(json.loads(partition.schema_json))
         tbl = pq.read_table(partition.path)
-        if partition.epoch_filter is not None and "_epoch" in tbl.column_names:
-            tbl = tbl.filter(pc.equal(tbl["_epoch"], partition.epoch_filter))
         n = tbl.num_rows
         cols = []
         for f in declared.fields:

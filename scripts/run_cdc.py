@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """CDC job entry point for spark-submit (the north rule's launch path).
 
-Cluster launch (N / 4N executors — BASELINE.md scaling evidence runs
-the local[4]/local[16] proxy of this):
+Cluster launch:
 
     zip -r engine.zip ethereum_etl_airflow_spark
     spark-submit --master <cluster> --num-executors N \\

@@ -6,7 +6,9 @@ the from-first-principles LWW oracle by per-bucket hash compare
 (SURVEY §7.3: exact per-row compare at test scale, xxhash64 aggregate
 compare at soak scale).
 
-    python scripts/soak.py [--events 20000000] [--cpus 32]
+    python scripts/soak.py [--events 20000000] [--cpus N]
+
+``--cpus`` defaults to the cores this process may run on.
 
 Prints one JSON line: event count, wall, events/sec, state hash match.
 """
@@ -37,7 +39,7 @@ def state_hash(df, cols):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=20_000_000)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--workdir", default=None)
     ap.add_argument(
         "--governed",

@@ -166,8 +166,10 @@ def test_empty_delta_publishes_fence_and_no_data_file(spark, tmp_path):
 def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeypatch):
     """A non-compacting apply on a DataFrame source runs exactly one
     Spark job, tagged ``cdc:<app>:<epoch>:flush``, without a
-    repartition or a Spark parquet write; a compacting apply still
-    takes the Spark write path under the ``rewrite`` label."""
+    repartition or a Spark parquet write; a compacting apply runs the
+    same one flush job, then its compaction as a commit of its own on
+    the Spark write path, under the ``cdc:maintenance:<n>:rewrite``
+    label."""
     cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=3)
     t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, compact_files=3)
     apply_changes(t, generate_batch(spark, cfg, 0), "jobs", epoch=0)
@@ -195,11 +197,16 @@ def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeyp
     assert list(tracker.getJobIdsForTag("cdc:jobs:1:flush")) == jobs
     assert sc.getLocalProperty("spark.job.tags") in (None, "")
 
-    # the third commit reaches compact_files: the rewrite path
+    # the third commit reaches compact_files: the batch is still one
+    # flush job, and the compaction commit takes the rewrite path
     li = apply_changes(t, generate_batch(spark, cfg, 2), "jobs", epoch=2)
     assert li["compacted_buckets"] > 0
-    assert len(tracker.getJobIdsForTag("cdc:jobs:2:rewrite")) >= 1
-    assert len(tracker.getJobIdsForTag("cdc:jobs:2:flush")) == 0
+    assert len(tracker.getJobIdsForTag("cdc:jobs:2:flush")) == 1
+    assert len(tracker.getJobIdsForTag("cdc:jobs:2:rewrite")) == 0
+    n = t.last_epoch("maintenance")
+    assert len(tracker.getJobIdsForTag(f"cdc:maintenance:{n}:rewrite")) >= 1
+    assert t.snapshot()["lineage"]["op"] == "compact"
+    assert t.snapshot(li["snapshot_version"])["lineage"] == {"op": "cdc_apply", "epoch": 2}
 
 
 @pytest.mark.parametrize("codec", ["snappy", "zstd"])

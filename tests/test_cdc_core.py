@@ -203,6 +203,42 @@ def test_threshold_compaction_preserves_state(spark, tmp_path):
     assert_state_matches(table, spark, cfg, cfg.n_batches - 1)
 
 
+def test_crash_between_delta_and_compaction_commits(spark, tmp_path, monkeypatch):
+    """The batch's delta commit publishes (fenced, readable) before its
+    compaction commit starts. A crash in between surfaces from the
+    apply, a replay of the epoch is fenced, and the next apply finishes
+    the pending compaction."""
+    cfg = FeedConfig(n_docs=300, events_per_batch=600, n_batches=3, dup_tail=100)
+    table = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4, compact_files=2)
+    apply_changes(table, generate_batch(spark, cfg, 0), "crash", epoch=0)
+
+    compact = SnapshotTable.compact
+    calls = []
+
+    def crash_once(self, *a, **kw):
+        calls.append(a)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the compaction commit")
+        return compact(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "compact", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the compaction commit"):
+        apply_changes(table, generate_batch(spark, cfg, 1), "crash", epoch=1)
+    assert table.last_epoch("crash") == 1
+    assert table.snapshot()["lineage"]["op"] == "cdc_apply"
+    assert max(table.file_counts().values()) >= table.compact_files
+    assert_state_matches(table, spark, cfg, 1)
+    v = table.current_version()
+    assert apply_changes(table, generate_batch(spark, cfg, 1), "crash", epoch=1) is None
+    assert table.current_version() == v
+
+    li = apply_changes(table, generate_batch(spark, cfg, 2), "crash", epoch=2)
+    assert len(calls) == 2 and li["compacted_buckets"] > 0
+    assert table.snapshot()["lineage"]["op"] == "compact"
+    assert max(table.file_counts().values()) <= table.compact_files
+    assert_state_matches(table, spark, cfg, 2)
+
+
 def test_commit_conflict_detection(spark, tmp_path):
     """Optimistic concurrency: a commit whose base snapshot is stale,
     or raced by a lock holder, must fail with CommitConflictError

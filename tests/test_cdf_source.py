@@ -1,18 +1,26 @@
 """Native readStream CDF source (streaming/cdf_source.py).
 
 The SnapshotTable commit log as a real Structured Streaming source:
-delta rows stream exactly once, maintenance commits are silent,
-in-commit compaction rewrites are filtered by epoch, checkpoint
-recovery resumes from the committed version offset, and pre-evolution
-files pad onto the pinned stream schema. The chain into a second table
-is tested in test_table_sink.py.
+delta rows stream exactly once, maintenance commits are silent
+(including the compaction commit that follows a CDC commit), a legacy
+CDC manifest that compacted in the same commit fails planning,
+checkpoint recovery resumes from the committed version offset, and
+pre-evolution files pad onto the pinned stream schema. The chain into
+a second table is tested in test_table_sink.py.
 """
 
 from __future__ import annotations
 
+import time
+
+import pytest
+
 from ethereum_etl_airflow_spark.operators.cdc import apply_changes
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
-from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
+from ethereum_etl_airflow_spark.streaming.cdf_source import (
+    SnapshotCdfDataSource,
+    register_cdf_source,
+)
 
 
 def _changes(spark, rows, schema="op string, doc_id string, seq long, eid long, val string"):
@@ -80,7 +88,8 @@ def test_checkpoint_resume_and_maintenance_silence(spark, tmp_path):
 
 
 def test_in_commit_compaction_rewrites_are_filtered(spark, tmp_path):
-    # low threshold: epoch 2 compacts every bucket in the SAME commit
+    # low threshold: every apply from epoch 1 on is followed by a
+    # compaction commit that folds every bucket it touched
     t = _table(spark, tmp_path, compact_files=2)
     rows = [("U", str(i), i, i, f"v{i}") for i in range(12)]
     apply_changes(t, _changes(spark, rows[:6]), "st", epoch=0)
@@ -89,10 +98,44 @@ def test_in_commit_compaction_rewrites_are_filtered(spark, tmp_path):
     assert len(_drain(spark, t.root, out, ck)) == 12
     apply_changes(t, _changes(spark, [("U", "3", 103, 3, "v3b")]), "st", epoch=2)
     got = _drain(spark, t.root, out, ck)
-    # ONLY the epoch-2 row arrives — the compacted copies of the other
-    # 11 rows live in the same new files but must not re-emit
+    # ONLY the epoch-2 row arrives — the compaction commits rewrite
+    # the other 11 rows into new files, which must not re-emit
     assert len(got) == 13
     assert sorted(r["_seq"] for r in got)[-1] == 103
+
+
+def test_legacy_in_commit_compaction_manifest_fails_planning(spark, tmp_path):
+    # a CDC commit from before compaction became its own commit: its
+    # manifest lists compacted_buckets, so its new files mix the batch
+    # with rewritten rows that the reader cannot tell apart
+    t = _table(spark, tmp_path)
+    rows = [("U", str(i), i, i, f"v{i}") for i in range(8)]
+    apply_changes(t, _changes(spark, rows[:4]), "st", epoch=0)
+    apply_changes(t, _changes(spark, rows[4:]), "st", epoch=1)
+    head = t.snapshot()
+    t._publish(
+        {
+            **head,
+            "version": head["version"] + 1,
+            "parent_version": head["version"],
+            "committed_at": time.time(),
+            "lineage": {"op": "cdc_apply", "epoch": 2, "compacted_buckets": [0, 1]},
+        }
+    )
+    source = SnapshotCdfDataSource({"path": t.root})
+    reader = source.streamReader(source.schema())
+    with pytest.raises(RuntimeError, match="starting_version.*bootstrap_from_state"):
+        reader.partitions({"version": -1}, {"version": t.current_version()})
+    # a stream that starts past the legacy commit follows normally
+    apply_changes(t, _changes(spark, [("U", "9", 9, 9, "v9")]), "st", epoch=3)
+    got = _drain(
+        spark,
+        t.root,
+        str(tmp_path / "out"),
+        str(tmp_path / "ck"),
+        starting_version=head["version"] + 1,
+    )
+    assert [r["doc_id"] for r in got] == ["9"]
 
 
 def test_schema_evolution_pads_pre_evolution_files(spark, tmp_path):

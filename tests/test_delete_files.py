@@ -129,9 +129,9 @@ def test_compaction_materializes_and_clears_layers(spark, tmp_path):
 
 
 def test_threshold_compaction_inside_apply_changes_keeps_deletes(spark, tmp_path):
-    # compact_files low enough that the next batch triggers in-commit
-    # compaction of scoped buckets — the fold must go through the
-    # layer-aware path or the delete silently vanishes
+    # compact_files low enough that the next batch's apply compacts
+    # scoped buckets — the fold must go through the layer-aware path or
+    # the delete silently vanishes
     t = _table(spark, tmp_path, compact_files=3)
     _ingest(spark, t, n=60)
     t.delete_where_lazy("eid", lo=20, hi=39)
