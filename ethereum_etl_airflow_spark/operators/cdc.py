@@ -90,6 +90,11 @@ def apply_changes(
     """Apply one change batch; returns lineage dict, or None if the
     epoch was already committed (fenced replay — exactly-once).
 
+    When the compaction that follows the batch's delta commit fails,
+    the batch stays committed and fenced, and the error is re-raised
+    with the batch's lineage (``compaction_error`` set) attached as
+    ``error.lineage``.
+
     ``properties`` (optional) merges extra snapshot properties into the
     SAME atomic commit as the data — the hook table statistics ride on
     (operators/table_stats.py): a crash after the commit is fenced on
@@ -157,12 +162,6 @@ def apply_changes(
         lineage={"op": "cdc_apply", "epoch": epoch},
         properties=properties,
     )
-    # the batch is readable from here; compaction is its own commit
-    due, _ = table._compaction_due()
-    if due:
-        table.compact(sorted(due))
-
-    wall = time.time() - t0
     m_in = _obs_get(
         obs_in,
         {"events_in": 0, "min_seq": None, "max_seq": None, "deletes_in": 0, "max_event_ts": None},
@@ -179,16 +178,31 @@ def apply_changes(
         # per-partition lineage (north rule): rows this batch landed in
         # each hash bucket, from the commit's parquet footers
         "bucket_rows_written": snap["bucket_rows_written"],
-        "compacted_buckets": len(due),
-        # the batch is written unfolded: one row per event
+        "compacted_buckets": 0,
+        # the batch is written unfolded (one row per event), plus the
+        # rows its compaction rewrites: write amplification
         "rows_out": sum(snap["bucket_rows_written"].values()),
         "tombstones_out": m_in["deletes_in"],
-        "wall_sec": round(wall, 4),
-        "events_per_sec": round(m_in["events_in"] / wall, 2) if wall > 0 else None,
         "event_time_lag_sec": (
             round(time.time() - _utc_epoch(max_ts), 1) if max_ts is not None else None
         ),
     }
+    # the batch is readable from here; compaction is its own commit
+    try:
+        due, _, compacted = table._compact_due(snap)
+    except Exception as e:
+        # the batch stays committed and fenced; the error carries its
+        # lineage so a caller can still record the epoch
+        lineage["compaction_error"] = f"{type(e).__name__}: {e}"
+        e.lineage = lineage
+        raise
+    finally:
+        wall = time.time() - t0
+        lineage["wall_sec"] = round(wall, 4)
+        lineage["events_per_sec"] = round(m_in["events_in"] / wall, 2) if wall > 0 else None
+    if compacted is not None:
+        lineage["compacted_buckets"] = len(due)
+        lineage["rows_out"] += sum(compacted["bucket_rows_written"].values())
     return lineage
 
 

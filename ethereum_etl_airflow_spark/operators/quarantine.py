@@ -142,9 +142,16 @@ def apply_changes_quarantined(
     """
     good, bad = split_quarantine(batch_df)
     main_lineage = apply_changes(table, good, app_id, epoch, **apply_kwargs)
-    q_lineage = apply_changes(
-        quarantine, quarantine_changes(bad, epoch), app_id, epoch
-    )
+    try:
+        q_lineage = apply_changes(
+            quarantine, quarantine_changes(bad, epoch), app_id, epoch
+        )
+    except Exception as e:
+        # the quarantine's compaction failed after its delta commit: the
+        # lineage a caller records for the epoch is the main table's
+        if getattr(e, "lineage", None) is not None:
+            e.lineage = main_lineage
+        raise
     return {
         "main": main_lineage,
         "quarantine": q_lineage,

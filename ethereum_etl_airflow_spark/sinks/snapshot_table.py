@@ -2271,13 +2271,15 @@ class SnapshotTable:
         self._publish(snap)
         return snap
 
-    def _compaction_due(self) -> tuple[set[int], set[int]]:
-        """Buckets due for compaction at the head, and the subset due
-        for their delete-layer depth: a bucket is due when it holds
+    def _compact_due(self, snap: dict | None = None) -> tuple[set[int], set[int], dict | None]:
+        """Compact, as its own commit, every bucket due at ``snap``
+        (default: the head): a bucket is due when it holds
         ``retention.compact_files`` files (default ``compact_files``)
         or ``retention.max_delete_layers`` (default 4) pending
-        merge-on-read delete layers."""
-        snap = self.snapshot()
+        merge-on-read delete layers. Returns the due buckets, the
+        subset due for their delete-layer depth, and the compaction
+        commit (None when no bucket was due)."""
+        snap = snap or self.snapshot()
         props = snap["properties"]
         thr = int(props.get("retention.compact_files", self.compact_files))
         due = {int(b) for b, fs in snap["bucket_files"].items() if len(fs) >= thr}
@@ -2287,7 +2289,8 @@ class SnapshotTable:
             for b in lay["files"]:
                 layer_counts[int(b)] = layer_counts.get(int(b), 0) + 1
         layered = {b for b, c in layer_counts.items() if c >= max_layers}
-        return due | layered, layered
+        due |= layered
+        return due, layered, self.compact(sorted(due)) if due else None
 
     def maintain(self) -> dict:
         """One property-driven maintenance pass (the reference's TTL
@@ -2306,11 +2309,10 @@ class SnapshotTable:
           the layers: read amplification from lazy deletes stays
           bounded without the caller tracking them."""
         report: dict = {}
-        due, layered = self._compaction_due()
+        due, layered, _ = self._compact_due()
         if layered:
             report["delete_layers_drained_buckets"] = len(layered)
         if due:
-            self.compact(sorted(due))
             report["compacted_buckets"] = len(due)
         props = self.snapshot()["properties"]
         ttl = props.get("retention.snapshot_ttl_sec")

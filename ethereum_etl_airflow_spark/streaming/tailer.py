@@ -145,13 +145,15 @@ class ChangeLogTailer:
         # AuditGateError.
         self.wap_branch = wap_branch
         self.audit_checks = audit_checks
-        # audit scope: "commit" (default) folds only the buckets the
-        # staged commit touched — O(changed data) per batch, sound by
-        # induction (every untouched bucket passed its own audit when
-        # last written; bucket = f(doc_id), so per-bucket reads are
-        # complete for key-scoped invariants). "table" re-audits the
-        # full fold every batch (the reference's verify cadence) —
-        # right for cross-bucket invariants, O(table) per batch.
+        # audit scope: "commit" (default) folds only the buckets that
+        # the staged commits main has not yet published touched (the
+        # batch's delta and its compaction) — O(changed data) per
+        # batch, sound by induction (every untouched bucket passed its
+        # own audit when last written; bucket = f(doc_id), so
+        # per-bucket reads are complete for key-scoped invariants).
+        # "table" re-audits the full fold every batch (the reference's
+        # verify cadence) — right for cross-bucket invariants, O(table)
+        # per batch.
         self.audit_scope = audit_scope
         # opt-in per-batch decode step applied BEFORE the CDC core —
         # the front door for self-describing feeds (e.g. a raw JSON
@@ -192,9 +194,7 @@ class ChangeLogTailer:
 
             buckets = None
             if self.audit_scope == "commit":
-                buckets = [
-                    int(b) for b in target.snapshot().get("commit_buckets") or []
-                ] or None
+                buckets = self._unpublished_buckets(target)
             details = run_checks(
                 target.read(buckets=buckets), self.audit_checks, strict=False
             )
@@ -223,6 +223,24 @@ class ChangeLogTailer:
             f"epoch {lineage['epoch']} failed audit; main stays at "
             f"v{self.table.current_version()}: {details}"
         )
+
+    def _unpublished_buckets(self, target: SnapshotTable) -> list[int] | None:
+        """Buckets written by every staged commit main has not published
+        yet: the batch's delta, its compaction, and any earlier delta
+        left staged (a crash before its gate). None — audit the whole
+        table — when no bucket was written or a commit between main and
+        the branch head is no longer retained."""
+        main = self.table.ref_version("main")
+        v = target.current_version()
+        buckets: set[int] = set()
+        while v > main:
+            try:
+                snap = target.snapshot(v)
+            except FileNotFoundError:
+                return None
+            buckets.update(int(b) for b in snap.get("commit_buckets") or [])
+            v = int(snap["parent_version"])
+        return sorted(buckets) if v == main and buckets else None
 
     def _apply(self, batch_df, app_id: str, epoch: int, props=None):
         """One batch through the CDC core, dead-lettering if enabled,
@@ -270,7 +288,18 @@ class ChangeLogTailer:
             from ethereum_etl_airflow_spark.operators import table_stats
 
             props = table_stats.props_for_batch(self.table, batch_df, self.track_ndv)
-        lineage = self._apply(batch_df, app_id, epoch, props)
+        err = None
+        try:
+            lineage = self._apply(batch_df, app_id, epoch, props)
+        except Exception as e:
+            # the compaction after the batch's delta commit failed: the
+            # epoch is committed and fenced, so it is published and
+            # recorded like any applied batch before the error re-raises
+            lineage, err = getattr(e, "lineage", None), e
+            if lineage is None:
+                raise
+            if self.wap_branch is not None:
+                lineage = self._wap_gate(self._staged(), lineage)
         if lineage is None:
             return None
         if self.track_ndv:
@@ -280,6 +309,8 @@ class ChangeLogTailer:
         self._run_post_checks(lineage)
         self._refresh_derived(lineage)
         self._record_lineage(lineage)
+        if err is not None:
+            raise err
         return lineage
 
     def _run_post_checks(self, lineage: dict) -> None:

@@ -234,9 +234,32 @@ def test_crash_between_delta_and_compaction_commits(spark, tmp_path, monkeypatch
 
     li = apply_changes(table, generate_batch(spark, cfg, 2), "crash", epoch=2)
     assert len(calls) == 2 and li["compacted_buckets"] > 0
+    # rows_out counts the compaction's rewritten rows too
+    assert li["rows_out"] > li["events_in"]
     assert table.snapshot()["lineage"]["op"] == "compact"
     assert max(table.file_counts().values()) <= table.compact_files
     assert_state_matches(table, spark, cfg, 2)
+
+    # through the tailer: the epoch whose compaction failed is still
+    # recorded (lineage log, applied list) before the error re-raises
+    calls.clear()
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed)
+    t = ChangeLogTailer(spark, feed, str(tmp_path / "tailed"), num_buckets=4)
+    t.table.compact_files = 2
+    with pytest.raises(RuntimeError, match="crash before the compaction commit"):
+        t.replay_batches()
+    assert [li["epoch"] for li in t.applied] == [0, 1]
+    failed = t.applied[-1]
+    assert failed["compaction_error"].startswith("RuntimeError")
+    assert failed["compacted_buckets"] == 0
+    assert failed["snapshot_version"] == t.table.current_version()
+    logged = {r.epoch: r.compaction_error for r in t.lineage().collect()}
+    assert logged[0] is None and logged[1] == failed["compaction_error"]
+    assert [li["epoch"] for li in t.replay_batches()] == [2]
+    assert t.applied[-1]["compacted_buckets"] > 0
+    assert max(t.table.file_counts().values()) <= 2
+    assert_state_matches(t.table, spark, cfg, 2)
 
 
 def test_commit_conflict_detection(spark, tmp_path):

@@ -131,3 +131,26 @@ def test_tailer_replay_with_quarantine(spark, tmp_path):
     )
     assert tailer2.replay_batches() == []
     assert tailer2.quarantine.read().count() == len(BAD)
+
+
+def test_quarantine_compaction_failure_carries_main_lineage(spark, tmp_path, monkeypatch):
+    """The quarantine's compaction fails after both delta commits: the
+    error carries the MAIN table's lineage, the one a caller records
+    for the epoch."""
+    import pytest
+
+    main = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4, compact_files=1)
+    dlq = SnapshotTable(spark, str(tmp_path / "dlq"), num_buckets=4, compact_files=1)
+    compact = SnapshotTable.compact
+
+    def dlq_fails(self, *a, **kw):
+        if self.root == dlq.root:
+            raise RuntimeError("quarantine compaction failed")
+        return compact(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "compact", dlq_fails)
+    with pytest.raises(RuntimeError, match="quarantine compaction failed") as err:
+        apply_changes_quarantined(main, dlq, _batch(spark, GOOD + BAD), "q", 0)
+    assert err.value.lineage["snapshot_version"] == main.snapshot()["parent_version"]
+    assert err.value.lineage["compacted_buckets"] > 0
+    assert main.last_epoch("q") == dlq.last_epoch("q") == 0

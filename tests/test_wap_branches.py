@@ -229,6 +229,104 @@ def test_tailer_wap_blocks_bad_batch_and_recovers(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
+def test_tailer_wap_audits_buckets_its_compaction_did_not_touch(spark, tmp_path):
+    """A batch whose apply compacts leaves the compaction commit at the
+    branch head, and that commit lists only the buckets that were due.
+    The audit still covers every bucket the batch wrote: a poisoned row
+    in a bucket not yet due for compaction fails the gate."""
+    import pyspark.sql.functions as F
+
+    from ethereum_etl_airflow_spark import verify as V
+    from ethereum_etl_airflow_spark.sinks.snapshot_table import bucket_expr
+    from ethereum_etl_airflow_spark.streaming.tailer import (
+        AuditGateError,
+        ChangeLogTailer,
+    )
+
+    def in_bucket(batch, b):
+        df = generate_batch(spark, CFG, batch)
+        return df.where(bucket_expr(F.col("doc_id"), 4) == b)
+
+    root, feed = str(tmp_path / "t"), str(tmp_path / "feed")
+    # bucket 0 holds one file before the feed starts; compact at two
+    seeded = SnapshotTable(spark, root, num_buckets=4)
+    apply_changes(seeded, in_bucket(0, 0), "seed", epoch=0)
+    seeded.update_properties({"retention.compact_files": 2})
+    # the batch: clean rows in bucket 0, one poisoned row in bucket 1
+    poison = (
+        in_bucket(1, 1)
+        .where((F.col("op") != "D") & F.col("n_tok").isNotNull())
+        .orderBy("seq")
+        .limit(1)
+        .withColumn("n_tok", F.col("n_tok") + 1)
+    )
+    in_bucket(1, 0).unionByName(poison).write.parquet(f"{feed}/batch-0")
+
+    t = ChangeLogTailer(
+        spark,
+        feed,
+        root,
+        num_buckets=4,
+        verify=False,
+        wap_branch="audit",
+        audit_checks=[V.tokens_invariant()],
+    )
+    v_main = t.table.current_version()
+    with pytest.raises(AuditGateError):
+        t.replay_batches()
+    (li,) = t.applied
+    assert li["compacted_buckets"] == 1 and li["touched_buckets"] == 2
+    assert li["wap"]["published_version"] is None
+    assert t.table.current_version() == v_main
+
+
+def test_tailer_wap_publishes_batch_whose_compaction_failed(spark, tmp_path, monkeypatch):
+    """The compaction after a staged delta commit fails: the epoch is
+    fenced on the branch, so its gate still runs — the batch is audited,
+    published and recorded before the error re-raises — and the next
+    batch's apply finishes the compaction."""
+    from ethereum_etl_airflow_spark import verify as V
+    from ethereum_etl_airflow_spark.sources.feed import write_feed
+    from ethereum_etl_airflow_spark.streaming.tailer import ChangeLogTailer
+
+    root, feed = str(tmp_path / "t"), str(tmp_path / "feed")
+    write_feed(spark, CFG, feed)
+    # every bucket holds one file before the feed starts; compact at
+    # three, so the feed's epoch 1 is the first to compact
+    seeded = SnapshotTable(spark, root, num_buckets=4)
+    apply_changes(seeded, generate_batch(spark, CFG, 0), "seed", epoch=0)
+    seeded.update_properties({"retention.compact_files": 3})
+    t = ChangeLogTailer(
+        spark,
+        feed,
+        root,
+        num_buckets=4,
+        wap_branch="audit",
+        audit_checks=[V.tokens_invariant()],
+    )
+
+    compact = SnapshotTable.compact
+    calls = []
+
+    def crash_once(self, *a, **kw):
+        calls.append(a)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the compaction commit")
+        return compact(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "compact", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the compaction commit"):
+        t.replay_batches()
+    failed = t.applied[-1]
+    assert failed["epoch"] == 1 and failed["compaction_error"]
+    assert failed["wap"]["published_version"] == t.table.current_version()
+    assert t.table.last_epoch("cdc") == 1
+    assert [li["epoch"] for li in t.replay_batches()] == [2]
+    assert len(calls) == 2 and t.applied[-1]["compacted_buckets"] > 0
+    assert t.table.current_version() == t.table.ref_version("audit")
+    assert max(t.table.file_counts().values()) <= 3
+
+
 # ---------------------------------------------------------- metadata tables
 
 
