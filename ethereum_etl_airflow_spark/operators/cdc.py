@@ -54,18 +54,18 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      same winner), so fencing avoids re-work — correctness never
      depends on it.
 
-Input metrics ride on ``DataFrame.observe`` — no extra pass over the
-data. The rows written and the per-epoch "which buckets were touched"
-lineage come from the commit's own per-file evidence — also no extra
-pass.
+The commit's Spark job carries only the data: input metrics and the
+``n_tok == size(tokens)`` guard are Arrow kernels over the gathered
+batch, before any file is written. The rows written and the per-epoch
+"which buckets were touched" lineage come from the commit's own
+per-file evidence — no extra pass.
 """
 
 from __future__ import annotations
 
 import time
-from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,65 +106,81 @@ def apply_changes(
 
     pay_cols = payload_columns(batch_df.schema)
     data_cols = [c for c in pay_cols if c != "doc_id"]
-
-    obs_cols = [
-        F.count(F.lit(1)).alias("events_in"),
-        F.min("seq").alias("min_seq"),
-        F.max("seq").alias("max_seq"),
-        F.count_if(F.col("op") == "D").alias("deletes_in"),
-    ]
-    has_ts = "ts" in batch_df.columns
-    if has_ts:
-        # freshness gauge (reference: *_have_latest.sql lag checks)
-        obs_cols.append(F.max("ts").alias("max_event_ts"))
-    obs_in = Observation(f"cdc_in_{epoch}")
-    batch_df = batch_df.observe(obs_in, *obs_cols)
+    fields = {f.name: f for f in batch_df.schema.fields}
+    has_ts = "ts" in fields
 
     # schema evolution: union of target schema and the batch's payload
-    # schema (added nullable columns, int->long widening)
-    src = batch_df.select(
-        "doc_id",
-        F.col("seq").cast("long").alias("_seq"),
-        F.lit(epoch).cast("long").alias("_epoch"),
-        (F.col("op") == "D").alias("_tombstone"),
-        *data_cols,
-    )
+    # schema (added nullable columns, int->long widening). The batch's
+    # side is built here from its columns' fields — the schema the
+    # delta's own projection would analyze to — so the delta is ONE
+    # projection, typed to the evolved schema.
     old_schema = table.schema()
-    new_schema = SnapshotTable._evolve_schema(old_schema, src.schema)
-
-    typed = src.select(
-        "doc_id",
-        *[
-            F.col(c).cast(_field_type(new_schema, c)).alias(c)
-            for c in ["_seq", "_epoch", "_tombstone", *data_cols]
-        ],
+    new_schema = SnapshotTable._evolve_schema(
+        old_schema,
+        T.StructType(
+            [
+                fields["doc_id"],
+                T.StructField("_seq", T.LongType(), fields["seq"].nullable),
+                T.StructField("_epoch", T.LongType(), False),
+                T.StructField("_tombstone", T.BooleanType(), fields["op"].nullable),
+                *[fields[c] for c in data_cols],
+            ]
+        ),
     )
+    typed = {f.name: f.dataType for f in new_schema.fields}
     # LSM append discipline: the batch is written UNFOLDED — the
     # read/compaction-side fold already resolves duplicates and
     # out-of-order updates, so the batch's commit is one Spark job with
-    # no shuffle (the gather inside commit)
-    delta = typed.withColumn(
-        "_bucket", bucket_expr(F.col("doc_id"), table.num_buckets)
+    # no shuffle (the gather inside commit). ``ts`` rides along only
+    # for the freshness metric and is dropped before any file is written.
+    delta = batch_df.select(
+        "doc_id",
+        F.col("seq").cast(typed["_seq"]).alias("_seq"),
+        F.lit(epoch).cast(typed["_epoch"]).alias("_epoch"),
+        (F.col("op") == "D").cast(typed["_tombstone"]).alias("_tombstone"),
+        *[F.col(c).cast(typed[c]).alias(c) for c in data_cols],
+        bucket_expr(F.col("doc_id"), table.num_buckets).alias("_bucket"),
+        *(["ts"] if has_ts else []),
     )
 
-    if verify:
-        delta = check_invariants(delta)
+    m_in: dict = {}
 
+    def on_gather(batch):
+        """Guard and count the gathered batch; returns what is written."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if verify:
+            check_invariants(batch)
+        seq = pc.min_max(batch.column("_seq")).as_py()
+        m_in.update(
+            events_in=batch.num_rows,
+            min_seq=seq["min"],
+            max_seq=seq["max"],
+            deletes_in=pc.sum(batch.column("_tombstone")).as_py() or 0,
+        )
+        if not has_ts:
+            return batch
+        # freshness gauge (reference: *_have_latest.sql lag checks); the
+        # cast reads a naive (timestamp_ntz) wall clock as UTC, the
+        # session's time zone, whatever the host's
+        ts = batch.column("ts").cast(pa.timestamp("us", "UTC"))
+        m_in["max_event_ts"] = pc.max(ts).as_py()
+        return batch.drop_columns(["ts"])
+
+    plan_s = time.time() - t0
     snap = table.commit(
         delta,
         replace_buckets=set(),
         app_id=app_id,
         epoch=epoch,
         new_schema=new_schema,
-        # manifest-side marker (the full metrics lineage below resolves
-        # only after observations and is returned to the caller): CDF
-        # stream readers emit the rows of cdc_apply commits only
+        # manifest-side marker (the full metrics lineage below is
+        # returned to the caller): CDF stream readers emit the rows of
+        # cdc_apply commits only
         lineage={"op": "cdc_apply", "epoch": epoch},
         properties=properties,
-    )
-    m_in = _obs_get(
-        obs_in,
-        {"events_in": 0, "min_seq": None, "max_seq": None, "deletes_in": 0, "max_event_ts": None},
+        _on_gather=on_gather,
     )
     max_ts = m_in.get("max_event_ts")
     lineage = {
@@ -184,10 +200,12 @@ def apply_changes(
         "rows_out": sum(snap["bucket_rows_written"].values()),
         "tombstones_out": m_in["deletes_in"],
         "event_time_lag_sec": (
-            round(time.time() - _utc_epoch(max_ts), 1) if max_ts is not None else None
+            round(time.time() - max_ts.timestamp(), 1) if max_ts is not None else None
         ),
     }
+    phase_s = {"plan": plan_s, **snap["phase_s"]}
     # the batch is readable from here; compaction is its own commit
+    t_compact = time.time()
     try:
         due, _, compacted = table._compact_due(snap)
     except Exception as e:
@@ -197,7 +215,10 @@ def apply_changes(
         e.lineage = lineage
         raise
     finally:
-        wall = time.time() - t0
+        now = time.time()
+        phase_s["compact"] = now - t_compact
+        lineage["phase_s"] = {k: round(v, 4) for k, v in phase_s.items()}
+        wall = now - t0
         lineage["wall_sec"] = round(wall, 4)
         lineage["events_per_sec"] = round(m_in["events_in"] / wall, 2) if wall > 0 else None
     if compacted is not None:
@@ -206,50 +227,21 @@ def apply_changes(
     return lineage
 
 
-def _utc_epoch(ts: datetime) -> float:
-    """Epoch seconds for a timestamp collected from a UTC-pinned Spark
-    session. Spark returns naive datetimes; naive ``.timestamp()`` would
-    reinterpret them in the host's local timezone, skewing the lag by
-    the UTC offset on any non-UTC host — pin UTC explicitly."""
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=timezone.utc)
-    return ts.timestamp()
-
-
-def _obs_get(obs: Observation, defaults: dict) -> dict:
-    """Observation.get, tolerant of AQE empty-relation propagation: when
-    a query stage is provably empty at runtime, AQE may eliminate the
-    CollectMetrics node entirely, so no metrics row exists — which can
-    only happen when every observed count is zero. Fall back to the
-    zero defaults in that case."""
-    try:
-        return obs.get
-    except Exception:
-        return defaults
-
-
-def _field_type(schema: T.StructType, name: str) -> T.DataType:
-    for f in schema.fields:
-        if f.name == name:
-            return f.dataType
-    raise KeyError(name)
-
-
-def check_invariants(out: DataFrame) -> DataFrame:
+def check_invariants(batch) -> None:
     """Per-batch data-quality guard (reference: verify/sqls/*.sql run
-    after every load, build_load_dag.py:220-234): every surviving row
-    must satisfy n_tok == size(tokens). Expressed as a fail-fast
-    column so it rides the commit's Spark job — no extra pass."""
-    cols = set(out.columns)
-    if {"tokens", "n_tok"} <= cols:
-        violation = F.col("n_tok").isNotNull() & (
-            F.col("n_tok").cast("long") != F.size("tokens").cast("long")
-        )
-        out = out.withColumn(
-            "n_tok",
-            F.when(
-                violation,
-                F.raise_error(F.concat(F.lit("invariant violated: n_tok != size(tokens) for doc_id="), F.col("doc_id"))),
-            ).otherwise(F.col("n_tok")),
-        )
-    return out
+    after every load, build_load_dag.py:220-234): every row must
+    satisfy n_tok == size(tokens); a null on either side passes. Runs
+    as a pyarrow kernel over the gathered Arrow batch, before any file
+    is written, so a violation fails the commit with nothing
+    published."""
+    import pyarrow.compute as pc
+
+    if not {"tokens", "n_tok"} <= set(batch.column_names):
+        return
+    bad = pc.fill_null(
+        pc.not_equal(batch.column("n_tok"), pc.list_value_length(batch.column("tokens"))),
+        False,
+    )
+    if pc.any(bad).as_py():
+        doc_id = batch.column("doc_id")[pc.index(bad, True).as_py()].as_py()
+        raise ValueError(f"invariant violated: n_tok != size(tokens) for doc_id={doc_id}")

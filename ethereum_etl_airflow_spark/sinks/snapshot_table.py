@@ -1206,6 +1206,8 @@ class SnapshotTable:
         max_retries: int = 0,
         delete_layers: list[dict] | None = None,
         rename_layers: list[dict] | None = None,
+        *,
+        _on_gather=None,
     ) -> dict:
         """Publish one atomic commit. ``out_df`` carries a ``_bucket``
         column; for buckets in ``replace_buckets`` the output rows are
@@ -1259,9 +1261,16 @@ class SnapshotTable:
         ``out_df=None`` the commit is METADATA-ONLY — no Spark job, no
         data files written (the Iceberg delete-file commit shape).
 
+        ``_on_gather`` sees a pure delta's gathered batch before any
+        file is written (see :meth:`_write_runs`). The returned dict
+        adds ``phase_s`` (not in the manifest): seconds spent in
+        ``gather``, ``check``, ``write`` and ``publish`` (the rest).
+
         Caller owns the MERGE/fold semantics; this layer guarantees
         only atomicity + fencing (the Iceberg-commit seam).
         """
+        start = time.perf_counter()
+        phase = {"gather": 0.0, "check": 0.0, "write": 0.0}
         prev = self.snapshot()
         out_dir = os.path.join(self._data, uuid.uuid4().hex)
         rewrite = full_replace or bool(replace_buckets)
@@ -1274,6 +1283,7 @@ class SnapshotTable:
         evidence: dict[str, tuple[dict[str, int], object]] = {}
         bucket_words: dict[str, list[int]] = {}
         if out_df is not None:
+            t0 = time.perf_counter()
             with self._job_label(app_id, epoch, "rewrite" if rewrite else "flush"):
                 if rewrite:
                     evidence = self._footer_evidence(
@@ -1282,7 +1292,10 @@ class SnapshotTable:
                     if self.bloom_bits:
                         bucket_words = self._commit_bloom_words(out_df)
                 else:
-                    evidence, bucket_words = self._write_runs(out_df, out_dir, sort_cols)
+                    evidence, bucket_words = self._write_runs(
+                        out_df, out_dir, sort_cols, phase, _on_gather
+                    )
+            phase["write"] = time.perf_counter() - t0 - sum(phase.values())
 
         written: dict[str, list[str]] = {}
         new_file_buckets: dict[str, list[int]] = {}
@@ -1479,7 +1492,8 @@ class SnapshotTable:
                     raise  # a racing replay already committed this epoch
         if new_num_buckets:
             self.num_buckets = new_num_buckets
-        return snap
+        phase["publish"] = time.perf_counter() - start - sum(phase.values())
+        return {**snap, "phase_s": phase}
 
     @contextmanager
     def _job_label(self, app_id: str, epoch: int, phase: str):
@@ -1504,12 +1518,16 @@ class SnapshotTable:
     _RUN_ROWS = 1 << 15
 
     def _write_runs(
-        self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None
+        self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None, phase, on_gather
     ) -> tuple[dict[str, tuple[dict[str, int], object]], dict[str, list[int]]]:
         """Pure-delta write. ``out_df`` is gathered with ``toArrow()``:
-        one Spark job and no shuffle, and the observations and
-        fail-fast guards it carries evaluate inside that job. The rows
-        split into P level-0 runs by ``_bucket % P``, where P is
+        one Spark job that carries only the data, with no shuffle.
+        ``on_gather``, when given, takes the gathered batch (the
+        caller's checks and counts, as Arrow kernels) and returns the
+        batch to write, without its helper columns; an error it raises
+        fails the commit before any file is written. ``phase`` gets the
+        seconds of the ``gather`` and of ``on_gather`` (``check``).
+        The rows split into P level-0 runs by ``_bucket % P``, where P is
         ``ceil(rows / _RUN_ROWS)`` capped at the driver's cores and the
         bucket count, so the layout follows the batch and the machine
         that writes it. Each run is sorted by ``(_bucket, doc_id)``
@@ -1541,7 +1559,12 @@ class SnapshotTable:
                     for p, name in zip(self._bloom_positions(F.col("doc_id")), probes)
                 ],
             )
+        t = time.perf_counter()
         batch = out_df.toArrow()
+        phase["gather"] = time.perf_counter() - t
+        if on_gather is not None:
+            batch = on_gather(batch)
+            phase["check"] = time.perf_counter() - t - phase["gather"]
         buckets = batch.column("_bucket").to_numpy()
         bucket_words = (
             self._bloom_words(buckets, [batch.column(c).to_numpy() for c in probes])

@@ -481,12 +481,27 @@ class ChangeLogTailer:
         for batch_id, path in batch_dirs:
             if batch_id < start or (end is not None and batch_id > end):
                 continue
-            lineage = self._apply_batch(
-                self.spark.read.parquet(path), self.app_id, batch_id
-            )
+            lineage = self._apply_batch(self._read_batch(path), self.app_id, batch_id)
             if lineage is not None:
                 results.append(lineage)
         return results
+
+    def _read_batch(self, path: str):
+        """One feed batch directory, read with the Spark schema in its
+        first data file's footer: the footer Spark's own inference reads
+        (the files of a batch share one schema), so no inference job
+        runs."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+
+        files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        meta = pq.read_metadata(os.path.join(path, files[0])).metadata if files else None
+        row_schema = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if row_schema is None:
+            # written by another parquet writer: Spark infers the schema
+            return self.spark.read.parquet(path)
+        schema = T.StructType.fromJson(json.loads(row_schema))
+        return self.spark.read.schema(schema).parquet(path)
 
     # ---------------------------------------------------------- streaming
 

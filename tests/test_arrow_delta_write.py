@@ -8,11 +8,15 @@ labelled Spark job with no shuffle and no Spark parquet write; that the
 run count follows the batch and the driver, not the cluster; and that
 the driver-side gather is bounded: a batch over
 ``spark.driver.maxResultSize`` publishes nothing, and ``run_stream``
-admits triggers below that limit by default."""
+admits triggers below that limit by default. A replayed batch is read
+with the schema in its footer (one Spark job, the same schema and
+manifest as an inferred read), and the input metrics and the n_tok
+guard run on the gathered Arrow batch, in both drive modes."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import uuid
 from contextlib import contextmanager
@@ -153,7 +157,8 @@ def test_empty_delta_publishes_fence_and_no_data_file(spark, tmp_path):
     before_files, before_v = _data_files(t), t.current_version()
     empty = generate_batch(spark, cfg, 0).limit(0)
     li = apply_changes(t, empty, "empty", epoch=1)
-    assert li["events_in"] == 0 and li["rows_out"] == 0
+    assert li["events_in"] == 0 and li["rows_out"] == 0 and li["deletes_in"] == 0
+    assert li["offset_range"] == [None, None] and li["event_time_lag_sec"] is None
     assert t.current_version() == before_v + 1
     assert t.last_epoch("empty") == 1
     assert t.snapshot()["added_files"] == {}
@@ -305,3 +310,173 @@ def test_run_stream_admits_triggers_below_max_result_size(spark, tmp_path):
     got = {(r.doc_id, r._seq) for r in tailer.table.read().select("doc_id", "_seq").collect()}
     want = lww_expected_state(spark, cfg, cfg.n_batches - 1)
     assert got == {(r.doc_id, r._seq) for r in want.select("doc_id", "_seq").collect()}
+
+
+def _replay_feed(spark, tmp_path, cfg):
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed)
+    return feed, sorted(os.path.join(feed, d) for d in os.listdir(feed))
+
+
+def test_replayed_batch_is_one_labelled_spark_job(spark, tmp_path):
+    """``replay_batches`` reads a batch with the schema in its footer, so
+    replaying a non-compacting batch runs exactly one Spark job: the
+    commit's flush, tagged ``cdc:<app>:<batch>:flush`` (a read that
+    infers its schema would add a job of its own)."""
+    cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=2)
+    feed, _ = _replay_feed(spark, tmp_path, cfg)
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="rjobs", num_buckets=8
+    )
+    tailer.replay_batches(start=0, end=0)
+
+    sc = spark.sparkContext
+    group = f"replay-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        (li,) = tailer.replay_batches(start=1, end=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert li["epoch"] == 1 and li["compacted_buckets"] == 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    tracker = sc._jsc.sc().statusTracker()
+    assert list(tracker.getJobIdsForTag("cdc:rjobs:1:flush")) == jobs
+
+
+def test_replay_reads_the_schema_spark_infers(spark, tmp_path):
+    """On a ``bulk_backfill``-shaped feed (duplicated tails, the last
+    batch adding ``lang`` and widening ``n_tok``), the schema a replayed
+    batch is read with equals ``spark.read.parquet``'s inferred one,
+    and every commit's manifest schema is byte-identical to the one the
+    batch's own projection gives (``_evolve_schema`` over
+    ``batch.select(...).schema``)."""
+    cfg = FeedConfig(
+        n_docs=600, events_per_batch=600, n_batches=3, dup_tail=12, evolve_at_batch=2
+    )
+    feed, paths = _replay_feed(spark, tmp_path, cfg)
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="fschema", num_buckets=8
+    )
+    for path in paths:
+        assert tailer._read_batch(path).schema == spark.read.parquet(path).schema
+    last = tailer._read_batch(paths[-1]).schema
+    assert last["lang"].dataType.typeName() == "string"
+    assert last["n_tok"].dataType.typeName() == "long"
+    assert last["ts"].dataType.typeName() == "timestamp_ntz"
+
+    lineage = tailer.replay_batches()
+    want = None
+    for b, (path, li) in enumerate(zip(paths, lineage)):
+        batch = spark.read.parquet(path)
+        data_cols = [
+            c for c in batch.columns if c not in ("op", "seq", "ts", "batch_id", "doc_id")
+        ]
+        src = batch.select(
+            "doc_id",
+            F.col("seq").cast("long").alias("_seq"),
+            F.lit(b).cast("long").alias("_epoch"),
+            (F.col("op") == "D").alias("_tombstone"),
+            *data_cols,
+        )
+        want = SnapshotTable._evolve_schema(want, src.schema)
+        manifest = os.path.join(
+            tailer.table._meta, f"snapshot-{li['snapshot_version']:012d}.json"
+        )
+        with open(manifest) as f:
+            got = json.load(f)["schema"]
+        assert json.dumps(got) == json.dumps(want.jsonValue())
+
+
+def test_replay_of_a_batch_without_spark_footer_schema(spark, tmp_path):
+    """A batch directory written by pyarrow carries no Spark row schema
+    in its footers; replay infers it, and the table still converges to
+    the oracle."""
+    cfg = FeedConfig(n_docs=400, events_per_batch=500, n_batches=3, dup_tail=20)
+    feed, paths = _replay_feed(spark, tmp_path, cfg)
+    rewritten = spark.read.parquet(paths[1]).toArrow()
+    for f in os.listdir(paths[1]):
+        os.remove(os.path.join(paths[1], f))
+    pq.write_table(rewritten, os.path.join(paths[1], "part-0.parquet"))
+    md = pq.read_metadata(os.path.join(paths[1], "part-0.parquet")).metadata or {}
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in md
+
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="pyarrow", num_buckets=8
+    )
+    assert [li["events_in"] for li in tailer.replay_batches()] == [500, 520, 520]
+    got = {
+        (r.doc_id, r._seq, tuple(r.tokens or []))
+        for r in tailer.table.read().select("doc_id", "_seq", "tokens").collect()
+    }
+    want = lww_expected_state(spark, cfg, cfg.n_batches - 1)
+    assert got == {
+        (r.doc_id, r._seq, tuple(r.tokens or []))
+        for r in want.select("doc_id", "_seq", "tokens").collect()
+    }
+
+
+def test_input_metrics_come_from_the_gathered_batch(spark, tmp_path):
+    """Counts, the seq range and the event-time lag of a batch with
+    duplicates, deletes (null ``tokens``/``n_tok``) and a null ``ts``
+    match values computed here from the rows themselves; the lineage
+    times each phase, and the manifest does not carry those timings."""
+    ts = [dt.datetime(2024, 5, 1, 12, 0, s) for s in range(4)]
+    rows = [
+        ("I", "a", 10, [1, 2], 2, "web", ts[0]),
+        ("I", "a", 10, [1, 2], 2, "web", ts[0]),  # duplicate event
+        ("U", "a", 12, [1, 2, 3], 3, "web", None),
+        ("D", "b", 7, None, None, None, ts[3]),
+        ("I", "c", 3, [5], 1, "api", ts[1]),
+        ("D", "c", 30, None, None, None, ts[2]),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        "op string, doc_id string, seq long, tokens array<int>, n_tok int, "
+        "source string, ts timestamp_ntz",
+    )
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
+    before = dt.datetime.now(dt.timezone.utc).timestamp()
+    li = apply_changes(t, batch, "metrics", epoch=0)
+    after = dt.datetime.now(dt.timezone.utc).timestamp()
+
+    deletes = sum(r[0] == "D" for r in rows)
+    newest = max(r[6] for r in rows if r[6] is not None).replace(tzinfo=dt.timezone.utc)
+    assert li["events_in"] == len(rows) == 6
+    assert li["deletes_in"] == li["tombstones_out"] == deletes == 2
+    assert li["offset_range"] == [min(r[2] for r in rows), max(r[2] for r in rows)] == [3, 30]
+    assert before - newest.timestamp() - 0.1 <= li["event_time_lag_sec"]
+    assert li["event_time_lag_sec"] <= after - newest.timestamp() + 0.1
+    assert set(li["phase_s"]) == {"plan", "gather", "check", "write", "publish", "compact"}
+    assert all(v >= 0 for v in li["phase_s"].values())
+    assert sum(li["phase_s"].values()) <= li["wall_sec"] + 1e-3
+    assert "phase_s" not in t.snapshot(li["snapshot_version"])
+    # ts was only a helper column: no data file stores it
+    for rel in _data_files(t):
+        assert "ts" not in pq.read_schema(os.path.join(t.root, rel)).names
+
+
+def test_invariant_violation_through_run_stream_fails_the_batch(spark, tmp_path):
+    """A row with ``n_tok != size(tokens)`` arriving through
+    ``run_stream`` fails its micro-batch, and the table does not
+    advance."""
+    cfg = FeedConfig(n_docs=200, events_per_batch=300, n_batches=2)
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed, batches=range(0, 1))
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="sguard", num_buckets=4
+    )
+    cp = str(tmp_path / "cp")
+    tailer.run_stream(checkpoint_dir=cp, available_now=True)
+    version, epoch = tailer.table.current_version(), tailer.table.last_epoch("sguard:stream")
+    assert epoch == 0
+
+    poisoned = generate_batch(spark, cfg, 1).withColumn(
+        "n_tok", F.when(F.col("op") != "D", F.col("n_tok") + 1)
+    )
+    poisoned.write.parquet(os.path.join(feed, "batch-000001"))
+    with pytest.raises(Exception, match="invariant violated: n_tok != size"):
+        tailer.run_stream(checkpoint_dir=cp, available_now=True)
+    assert tailer.table.current_version() == version
+    assert tailer.table.last_epoch("sguard:stream") == epoch
