@@ -45,7 +45,7 @@ from ethereum_etl_airflow_spark.functions.hashing import (
     phash60,
     phash60_sql,
 )
-from ethereum_etl_airflow_spark.queries import _t, register
+from ethereum_etl_airflow_spark.queries import _scratch_dir, _t, register
 
 
 def shingles_col(toks):
@@ -434,8 +434,6 @@ def lsh_index_probe_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental snapshot-diff refreshes (so the refresh path, not just
     the probe, is under the oracle); the probe reads only the batch's
     band buckets. O(batch) at any corpus size."""
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.operators.lsh_index import NearDupIndex
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
@@ -451,7 +449,7 @@ def lsh_index_probe_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("seq"),
         "text",
     )
-    root = tempfile.mkdtemp(prefix="lsh_index_")
+    root = _scratch_dir("lsh_index_")
     table = SnapshotTable(spark, f"{root}/t", num_buckets=8)
     idx = NearDupIndex(table, f"{root}/ix", num_buckets=8)
     mid = int(hi) // 2

@@ -184,3 +184,177 @@ def bucket_of(doc_id, num_buckets: int) -> int:
     if isinstance(doc_id, int) and not isinstance(doc_id, bool):
         doc_id = i64(doc_id)
     return spark_xxhash64(doc_id) % num_buckets
+
+
+# ---------------------------------------------------------------------------
+# Vectorized XXH64 over Arrow columns — the same function as
+# :func:`spark_xxhash64`, computed with numpy over a whole column, so a
+# batch already on the driver as Arrow gets its hash buckets and Bloom
+# probe positions without a Spark job (one numpy pass per 8-byte word,
+# not per row).
+# ---------------------------------------------------------------------------
+
+
+def _v_rotl(x, r: int):
+    return (x << r) | (x >> (64 - r))
+
+
+def _v_avalanche(h):
+    h ^= h >> 33
+    h *= _XP2
+    h ^= h >> 29
+    h *= _XP3
+    h ^= h >> 32
+    return h
+
+
+def _v_round(acc, lane):
+    return _v_rotl(acc + lane * _XP2, 31) * _XP1
+
+
+def _v_unaligned(data, dtype):
+    """Every byte offset of ``data`` (zero-padded by 8) read as a
+    little-endian ``dtype`` word: ``view[i]`` is the word at byte i."""
+    import numpy as np
+
+    return np.ndarray((len(data) - 7,), dtype=dtype, buffer=data, strides=(1,))
+
+
+def _v_rows(mask):
+    """Index for the rows ``mask`` selects: a full slice when it selects
+    every row (no gather), None when it selects none."""
+    import numpy as np
+
+    if mask.all():
+        return slice(None)
+    return np.flatnonzero(mask) if mask.any() else None
+
+
+def _v_hash_bytes(data, starts, lengths, seeds):
+    """XXH64 of the byte strings ``data[starts[i]:starts[i] + lengths[i]]``
+    with per-row ``seeds`` (the steps of :func:`xxhash64_bytes`)."""
+    import numpy as np
+
+    data = np.concatenate([data, np.zeros(8, np.uint8)])
+    u64 = _v_unaligned(data, "<u8")
+    u32 = _v_unaligned(data, "<u4")
+    pos = starts.astype(np.int64)
+    lengths = lengths.astype(np.int64)
+    h = seeds + np.uint64(_XP5)
+    stripes = lengths // 32
+    if stripes.any():
+        rows = np.flatnonzero(stripes)
+        s = seeds[rows]
+        v = [s + np.uint64((_XP1 + _XP2) & _M64), s + np.uint64(_XP2), s.copy(), s - np.uint64(_XP1)]
+        p = pos[rows]
+        for k in range(int(stripes.max())):
+            act = np.flatnonzero(stripes[rows] > k)
+            for lane in range(4):
+                v[lane][act] = _v_round(v[lane][act], u64[p[act] + 8 * lane])
+            p[act] += 32
+        hl = _v_rotl(v[0], 1) + _v_rotl(v[1], 7) + _v_rotl(v[2], 12) + _v_rotl(v[3], 18)
+        for lane in v:
+            hl ^= _v_round(np.uint64(0), lane)
+            hl = hl * _XP1 + np.uint64(_XP4)
+        h[rows] = hl
+        pos += stripes * 32
+    h += lengths.astype(np.uint64)
+    rest = lengths % 32
+    for k in range(3):  # up to three 8-byte words after the stripes
+        act = _v_rows(rest >= 8 * (k + 1))
+        if act is None:
+            break
+        k1 = _v_round(np.uint64(0), u64[pos[act]])
+        h[act] = _v_rotl(h[act] ^ k1, 27) * _XP1 + np.uint64(_XP4)
+        pos[act] += 8
+    act = _v_rows(rest % 8 >= 4)
+    if act is not None:
+        h[act] ^= u32[pos[act]].astype(np.uint64) * _XP1
+        h[act] = _v_rotl(h[act], 23) * _XP2 + np.uint64(_XP3)
+        pos[act] += 4
+    for k in range(3):  # up to three trailing bytes
+        act = _v_rows(rest % 4 > k)
+        if act is None:
+            break
+        h[act] ^= data[pos[act]].astype(np.uint64) * _XP5
+        h[act] = _v_rotl(h[act], 11) * _XP1
+        pos[act] += 1
+    return _v_avalanche(h)
+
+
+def _v_hash_ints(values, width: int, seeds):
+    """XXH64 of each value's ``width``-byte little-endian form (Spark's
+    ``hashInt`` for 4, ``hashLong`` for 8), with per-row ``seeds``."""
+    import numpy as np
+
+    h = seeds + np.uint64((_XP5 + width) & _M64)
+    if width == 4:
+        h ^= values.astype(np.int32).view(np.uint32).astype(np.uint64) * _XP1
+        h = _v_rotl(h, 23) * _XP2 + np.uint64(_XP3)
+    else:
+        h ^= _v_round(np.uint64(0), values.astype(np.int64).view(np.uint64))
+        h = _v_rotl(h, 27) * _XP1 + np.uint64(_XP4)
+    return _v_avalanche(h)
+
+
+def _v_hash_chunk(arr, seeds):
+    import numpy as np
+    import pyarrow as pa
+
+    t = arr.type
+    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
+    if not (is_str or pa.types.is_signed_integer(t)):
+        raise TypeError(f"xxhash64 over Arrow columns of type {t} is not mapped")
+    if not len(arr):
+        return np.zeros(0, np.uint64)
+    if is_str:
+        off_buf, data_buf = arr.buffers()[1:3]
+        off_t = np.int32 if pa.types.is_string(t) else np.int64
+        offsets = np.frombuffer(off_buf, off_t)[arr.offset : arr.offset + len(arr) + 1]
+        data = np.frombuffer(data_buf, np.uint8) if data_buf is not None else np.zeros(0, np.uint8)
+        h = _v_hash_bytes(data, offsets[:-1], np.diff(offsets), seeds)
+    else:
+        # Spark hashes byte/short/int columns as 4-byte ints and bigint
+        # columns as 8 bytes, whatever the value
+        width = 8 if t.bit_width == 64 else 4
+        h = _v_hash_ints(arr.fill_null(0).to_numpy(), width, seeds)
+    if arr.null_count:
+        # a null argument leaves the running hash at its seed, as in Spark
+        h = np.where(arr.is_valid().to_numpy(zero_copy_only=False), h, seeds)
+    return h
+
+
+def xxhash64_arrow(col, seeds=None):
+    """Vectorized ``F.xxhash64(col)`` over an Arrow (Chunked)Array of
+    strings (``utf8``/``large_utf8``) or signed integers, returned as
+    SIGNED int64 like the JVM column. ``seeds`` (int64 per row)
+    chains a hash, as Spark does across arguments:
+    ``xxhash64_arrow(b, seeds=xxhash64_arrow(a))`` is
+    ``xxhash64(a, b)``. Any other column type raises ``TypeError``."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(col)
+    if seeds is None:
+        seeds = np.full(n, SPARK_XXHASH_SEED, np.int64)
+    seeds = np.asarray(seeds, np.int64).view(np.uint64)
+    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
+    if not chunks:
+        chunks = [pa.array([], col.type)]
+    out = np.empty(n, np.uint64)
+    at = 0
+    with np.errstate(over="ignore"):
+        for c in chunks:
+            out[at : at + len(c)] = _v_hash_chunk(c, seeds[at : at + len(c)])
+            at += len(c)
+    return out.view(np.int64)
+
+
+def bucket_of_arrow(col, num_buckets: int):
+    """Vectorized twin of :func:`bucket_of` and
+    ``sinks.snapshot_table.bucket_expr``: ``pmod(xxhash64(col), B)``
+    per row as int32 (numpy ``%`` on a positive modulus IS pmod). A
+    null key hashes to the seed, as in Spark."""
+    import numpy as np
+
+    return (xxhash64_arrow(col) % num_buckets).astype(np.int32)

@@ -18,13 +18,18 @@ once the feed guarantees no older events can arrive (watermark).
 
 Execution strategy (Spark-first, scale-first — merge-on-read):
 
-  1. **delta write, not table rewrite**: the batch is gathered to the
-     driver as Arrow in ONE Spark job with no shuffle, and pyarrow
-     writes it as a few level-0 (L0) DELTA files — one per
-     ``_bucket % P`` class (P grows with the batch, up to the driver's
-     cores), each spanning many buckets
-     (bucket = pmod(xxhash64(doc_id), B)), sorted by
-     ``(_bucket, doc_id)`` (``SnapshotTable.commit``). Write cost is
+  1. **delta write, not table rewrite**: the batch reaches the driver
+     as Arrow — a ``pyarrow.Table`` as it is (``replay_batches`` reads
+     its feed with pyarrow, no Spark job), a DataFrame in ONE Spark job
+     that gathers its own columns, with no projection and no shuffle.
+     pyarrow kernels then build the delta (``_seq``, ``_epoch``,
+     ``_tombstone``, the evolved-schema casts) and numpy computes each
+     row's bucket (bucket = pmod(xxhash64(doc_id), B), bit-identical to
+     Spark's, ``functions.hashing.bucket_of_arrow``). pyarrow writes it
+     as a few level-0 (L0) DELTA files — one per ``_bucket % P`` class
+     (P grows with the batch, up to the driver's cores), each spanning
+     many buckets, sorted by ``(_bucket, doc_id)``
+     (``SnapshotTable.commit``). Write cost is
      O(batch) regardless of table size and of B — at 10^10 accumulated
      events a copy-on-write MERGE would rewrite the full table every
      batch; merge-on-read keeps per-batch cost flat.
@@ -54,24 +59,27 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      same winner), so fencing avoids re-work — correctness never
      depends on it.
 
-The commit's Spark job carries only the data: input metrics and the
-``n_tok == size(tokens)`` guard are Arrow kernels over the gathered
-batch, before any file is written. The rows written and the per-epoch
+The commit carries only the data: the delta, input metrics and the
+``n_tok == size(tokens)`` guard are Arrow kernels over the batch on the
+driver, before any file is written. The rows written and the per-epoch
 "which buckets were touched" lineage come from the commit's own
 per-file evidence — no extra pass.
 """
 
 from __future__ import annotations
 
+import json
 import time
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
+from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
 META_COLS = {"op", "seq", "ts", "batch_id", "_seq", "_epoch", "_tombstone", "_bucket"}
+
+#: parquet footer key holding the Spark schema a file was written with
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def payload_columns(schema: T.StructType) -> list[str]:
@@ -79,16 +87,34 @@ def payload_columns(schema: T.StructType) -> list[str]:
     return [f.name for f in schema.fields if f.name not in META_COLS]
 
 
+def batch_schema(batch) -> T.StructType:
+    """Spark schema of a change batch: a DataFrame's own; for a
+    ``pyarrow.Table`` the schema ``spark.read.parquet`` gives the file
+    it was read from — the Spark schema in its footer (pyarrow keeps
+    it in the table's schema metadata), else the Arrow schema mapped
+    as Spark infers it (a naive timestamp is ``timestamp_ntz``), every
+    field nullable either way, as a Spark file read makes it."""
+    if isinstance(batch, DataFrame):
+        return batch.schema
+    row = (batch.schema.metadata or {}).get(SPARK_ROW_METADATA)
+    if row is not None:
+        return T.StructType.fromJson(json.loads(row)).toNullable()
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(batch.schema, prefer_timestamp_ntz=True).toNullable()
+
+
 def apply_changes(
     table: SnapshotTable,
-    batch_df: DataFrame,
+    batch,
     app_id: str,
     epoch: int,
     verify: bool = True,
     properties: dict | None = None,
 ) -> dict | None:
-    """Apply one change batch; returns lineage dict, or None if the
-    epoch was already committed (fenced replay — exactly-once).
+    """Apply one change batch (a DataFrame or a ``pyarrow.Table``);
+    returns lineage dict, or None if the epoch was already committed
+    (fenced replay — exactly-once).
 
     When the compaction that follows the batch's delta commit fails,
     the batch stays committed and fenced, and the error is re-raised
@@ -100,77 +126,95 @@ def apply_changes(
     (operators/table_stats.py): a crash after the commit is fenced on
     replay, so a property update paired with its batch is applied
     exactly once."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ethereum_etl_airflow_spark.functions.hashing import bucket_of_arrow
+
     t0 = time.time()
     if epoch <= table.last_epoch(app_id):
         return None
 
-    pay_cols = payload_columns(batch_df.schema)
-    data_cols = [c for c in pay_cols if c != "doc_id"]
-    fields = {f.name: f for f in batch_df.schema.fields}
+    schema = batch_schema(batch)
+    fields = {f.name: f for f in schema.fields}
+    data_cols = [c for c in payload_columns(schema) if c != "doc_id"]
     has_ts = "ts" in fields
 
     # schema evolution: union of target schema and the batch's payload
-    # schema (added nullable columns, int->long widening). The batch's
-    # side is built here from its columns' fields — the schema the
-    # delta's own projection would analyze to — so the delta is ONE
-    # projection, typed to the evolved schema.
-    old_schema = table.schema()
-    new_schema = SnapshotTable._evolve_schema(
-        old_schema,
+    # schema (added nullable columns, int->long widening)
+    delta_fields = [
+        fields["doc_id"],
+        T.StructField("_seq", T.LongType(), fields["seq"].nullable),
+        T.StructField("_epoch", T.LongType(), False),
+        T.StructField("_tombstone", T.BooleanType(), fields["op"].nullable),
+        *[fields[c] for c in data_cols],
+    ]
+    new_schema = SnapshotTable._evolve_schema(table.schema(), T.StructType(delta_fields))
+    typed = {f.name: f.dataType for f in new_schema.fields}
+    # the written delta's Arrow schema: evolved types, the batch's
+    # nullability (doc_id keeps the batch's type), and the bucket
+    delta_schema = to_arrow_schema(
         T.StructType(
             [
-                fields["doc_id"],
-                T.StructField("_seq", T.LongType(), fields["seq"].nullable),
-                T.StructField("_epoch", T.LongType(), False),
-                T.StructField("_tombstone", T.BooleanType(), fields["op"].nullable),
-                *[fields[c] for c in data_cols],
+                delta_fields[0],
+                *[
+                    T.StructField(f.name, typed[f.name], f.nullable)
+                    for f in delta_fields[1:]
+                ],
+                T.StructField("_bucket", T.IntegerType(), True),
             ]
-        ),
-    )
-    typed = {f.name: f.dataType for f in new_schema.fields}
-    # LSM append discipline: the batch is written UNFOLDED — the
-    # read/compaction-side fold already resolves duplicates and
-    # out-of-order updates, so the batch's commit is one Spark job with
-    # no shuffle (the gather inside commit). ``ts`` rides along only
-    # for the freshness metric and is dropped before any file is written.
-    delta = batch_df.select(
-        "doc_id",
-        F.col("seq").cast(typed["_seq"]).alias("_seq"),
-        F.lit(epoch).cast(typed["_epoch"]).alias("_epoch"),
-        (F.col("op") == "D").cast(typed["_tombstone"]).alias("_tombstone"),
-        *[F.col(c).cast(typed[c]).alias(c) for c in data_cols],
-        bucket_expr(F.col("doc_id"), table.num_buckets).alias("_bucket"),
-        *(["ts"] if has_ts else []),
+        )
     )
 
     m_in: dict = {}
 
-    def on_gather(batch):
-        """Guard and count the gathered batch; returns what is written."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def on_gather(raw):
+        """Build, guard and count the delta from the batch's own
+        columns; returns what is written. LSM append discipline: the
+        batch is written UNFOLDED — the read/compaction-side fold
+        resolves duplicates and out-of-order updates."""
 
+        def typed_col(name: str, src: str):
+            # cast only where the Arrow type differs from the evolved one
+            col = raw.column(src)
+            want = delta_schema.field(name).type
+            return col if col.type == want else col.cast(want)
+
+        doc_id = typed_col("doc_id", "doc_id")
+        delta = pa.Table.from_arrays(
+            [
+                doc_id,
+                typed_col("_seq", "seq"),
+                pa.array(np.full(raw.num_rows, epoch, np.int64)),
+                pc.equal(raw.column("op"), "D"),
+                *[typed_col(c, c) for c in data_cols],
+                pa.array(bucket_of_arrow(doc_id, table.num_buckets)),
+            ],
+            schema=delta_schema,
+        )
         if verify:
-            check_invariants(batch)
-        seq = pc.min_max(batch.column("_seq")).as_py()
+            check_invariants(delta)
+        seq = pc.min_max(delta.column("_seq")).as_py()
         m_in.update(
-            events_in=batch.num_rows,
+            events_in=delta.num_rows,
             min_seq=seq["min"],
             max_seq=seq["max"],
-            deletes_in=pc.sum(batch.column("_tombstone")).as_py() or 0,
+            deletes_in=pc.sum(delta.column("_tombstone")).as_py() or 0,
         )
-        if not has_ts:
-            return batch
-        # freshness gauge (reference: *_have_latest.sql lag checks); the
-        # cast reads a naive (timestamp_ntz) wall clock as UTC, the
-        # session's time zone, whatever the host's
-        ts = batch.column("ts").cast(pa.timestamp("us", "UTC"))
-        m_in["max_event_ts"] = pc.max(ts).as_py()
-        return batch.drop_columns(["ts"])
+        if has_ts:
+            # freshness gauge (reference: *_have_latest.sql lag checks);
+            # the cast reads a naive (timestamp_ntz) wall clock as UTC,
+            # the session's time zone, whatever the host's. ``ts`` is
+            # never written.
+            ts = raw.column("ts").cast(pa.timestamp("us", "UTC"))
+            m_in["max_event_ts"] = pc.max(ts).as_py()
+        return delta
 
     plan_s = time.time() - t0
     snap = table.commit(
-        delta,
+        batch,
         replace_buckets=set(),
         app_id=app_id,
         epoch=epoch,

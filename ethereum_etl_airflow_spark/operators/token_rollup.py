@@ -217,7 +217,7 @@ class TokenVocabRollup:
 # must equal a from-scratch recount of the final logical state.
 # ---------------------------------------------------------------------------
 
-from ethereum_etl_airflow_spark.queries import _t, register  # noqa: E402
+from ethereum_etl_airflow_spark.queries import _scratch_dir, _t, register  # noqa: E402
 
 
 @register(
@@ -241,8 +241,6 @@ from ethereum_etl_airflow_spark.queries import _t, register  # noqa: E402
     "incremental at token grain (north-rule tokenized-sequence table)",
 )
 def vocab_rollup_incremental(spark, sf_dir: str):
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -266,7 +264,7 @@ def vocab_rollup_incremental(spark, sf_dir: str):
             ).alias(TOKENS_COL),
         )
     )
-    root = tempfile.mkdtemp(prefix="vocab_rollup_")
+    root = _scratch_dir("vocab_rollup_")
     table = SnapshotTable(spark, f"{root}/t", num_buckets=8)
     vr = TokenVocabRollup(table, f"{root}/vocab", num_buckets=8)
     apply_changes(table, ins, "vr", epoch=0)

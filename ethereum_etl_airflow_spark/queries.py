@@ -14,7 +14,10 @@ and cast back to DOUBLE, on BOTH sides, so value hashes match.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -47,6 +50,15 @@ def register(name: str, oracle: str | None, doc: str = "", survey_ref: str = "")
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp directory for the tables a query builds, removed
+    when the process exits: the query returns a lazy DataFrame over
+    those tables, so they must outlive the builder."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _dec_sum(col, alias, scale=6):
@@ -1443,13 +1455,11 @@ def _run_parse_dataset(spark: SparkSession, sf_dir: str, specs):
     tests/test_executor.py; running two whole lifecycles inside this
     headline query only re-measured executor fixed overhead (r2 NOTES
     item 3 / VERDICT bench hygiene)."""
-    import tempfile
-
     from ethereum_etl_airflow_spark.plans.executor import ParseDatasetExecutor
 
     ev = _t(spark, sf_dir, "events")
     hi = ev.agg(F.max("event_id")).collect()[0][0]
-    ex = ParseDatasetExecutor(spark, tempfile.mkdtemp(prefix="parse_ds_"), specs)
+    ex = ParseDatasetExecutor(spark, _scratch_dir("parse_ds_"), specs)
     ex.run(ev, upto_pos=int(hi) // 2)
     return ex, ev
 
@@ -1523,11 +1533,9 @@ def parse_dataset_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     ev = _t(spark, sf_dir, "events")
     hi = ev.agg(F.max("event_id")).collect()[0][0]
-    import tempfile
-
     from ethereum_etl_airflow_spark.plans.executor import ParseDatasetExecutor
 
-    ex = ParseDatasetExecutor(spark, tempfile.mkdtemp(prefix="parse_ds_"), specs)
+    ex = ParseDatasetExecutor(spark, _scratch_dir("parse_ds_"), specs)
     ex.run(ev, upto_pos=int(hi))
     return spark.table("demo__purchase_counts")
 
@@ -1556,8 +1564,6 @@ def parse_dataset_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "M2 + rollup-style diff maintenance",
 )
 def secondary_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.operators.index import SecondaryIndex
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
@@ -1571,7 +1577,7 @@ def secondary_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("seq"),
         F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("event_type")).alias("event_kind"),
     )
-    root = tempfile.mkdtemp(prefix="sec_index_")
+    root = _scratch_dir("sec_index_")
     table = SnapshotTable(spark, f"{root}/t", num_buckets=8)
     idx = SecondaryIndex(table, f"{root}/ix", column="event_kind", num_buckets=8)
     mid = int(hi) // 2
@@ -1607,8 +1613,6 @@ def secondary_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chain; Delta/Iceberg CDF streaming-source pattern",
 )
 def cdf_derived_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
     from ethereum_etl_airflow_spark.streaming.cdf_follow import CdfFollower
@@ -1621,7 +1625,7 @@ def cdf_derived_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("seq"),
         F.col("value").alias("val"),
     )
-    root = tempfile.mkdtemp(prefix="cdf_follow_")
+    root = _scratch_dir("cdf_follow_")
     up = SnapshotTable(spark, f"{root}/up", num_buckets=8)
     follower = CdfFollower(
         spark,
@@ -1671,8 +1675,6 @@ def cdf_derived_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DataFile lower_bounds/upper_bounds skipping",
 )
 def cdc_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import (
         SnapshotTable,
@@ -1690,7 +1692,7 @@ def cdc_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table = SnapshotTable(
         spark,
-        tempfile.mkdtemp(prefix="col_stats_") + "/t",
+        _scratch_dir("col_stats_") + "/t",
         num_buckets=8,
         stats_cols=["eid"],
     )
@@ -1734,8 +1736,6 @@ def cdc_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "... WHERE with lower/upper_bounds file pruning",
 )
 def cdc_delete_where_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
@@ -1750,7 +1750,7 @@ def cdc_delete_where_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table = SnapshotTable(
         spark,
-        tempfile.mkdtemp(prefix="del_where_") + "/t",
+        _scratch_dir("del_where_") + "/t",
         num_buckets=8,
         stats_cols=["eid"],
     )
@@ -1796,8 +1796,6 @@ def cdc_delete_where_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "positional/equality delete files with sequence-number scoping",
 )
 def cdc_delete_files_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
@@ -1812,7 +1810,7 @@ def cdc_delete_files_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table = SnapshotTable(
         spark,
-        tempfile.mkdtemp(prefix="del_files_") + "/t",
+        _scratch_dir("del_files_") + "/t",
         num_buckets=8,
         stats_cols=["eid"],
     )
@@ -1859,8 +1857,6 @@ def cdc_delete_files_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "right-to-erasure batch at O(key-file write) commit cost",
 )
 def cdc_delete_keys_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
@@ -1873,7 +1869,7 @@ def cdc_delete_keys_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("val"),
     )
     table = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="del_keys_") + "/t", num_buckets=8
+        spark, _scratch_dir("del_keys_") + "/t", num_buckets=8
     )
     apply_changes(table, changes, "st", epoch=0)
     keys = ev.where(F.col("event_id") % 7 == 0).select(
@@ -1912,8 +1908,6 @@ def cdc_delete_keys_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "field-id rename semantics",
 )
 def cdc_schema_rename_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
@@ -1926,7 +1920,7 @@ def cdc_schema_rename_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("val"),
     )
     table = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="ren_") + "/t", num_buckets=8
+        spark, _scratch_dir("ren_") + "/t", num_buckets=8
     )
     apply_changes(table, changes, "st", epoch=0)
     table.rename_column("eid", "event_num")
@@ -1966,8 +1960,6 @@ def cdc_schema_rename_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "foreachBatch -> the table's one write path",
 )
 def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ethereum_etl_airflow_spark.operators.cdc import apply_changes
     from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
     from ethereum_etl_airflow_spark.streaming.cdf_source import register_cdf_source
@@ -1981,7 +1973,7 @@ def cdc_native_stream_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("eid"),
         F.col("value").cast("double").alias("val"),
     )
-    work = tempfile.mkdtemp(prefix="chain_")
+    work = _scratch_dir("chain_")
     a = SnapshotTable(spark, work + "/a", num_buckets=8)
     apply_changes(a, base, "st", epoch=0)
     updates = ev.where(F.col("event_id") % 3 == 0).select(

@@ -1220,15 +1220,16 @@ class SnapshotTable:
         File layout and write path follow what the commit writes:
 
         * a PURE DELTA commit (no ``replace_buckets``, no
-          ``full_replace``) is gathered to the driver as Arrow in one
-          Spark job without a shuffle, then written by pyarrow as P
+          ``full_replace``) is written by pyarrow on the driver: a
+          ``pyarrow.Table`` as it is, a DataFrame once gathered as
+          Arrow in one Spark job without a shuffle. It lands as P
           level-0 (L0) sorted runs (one per 32k rows, at most one per
           driver core): run r holds the buckets with
           ``_bucket % P == r``, sorted by
           ``(_bucket, doc_id)`` and storing ``_bucket``, so each bucket
           lands in exactly one file per commit (see :meth:`_write_runs`).
-          The gathered batch must fit in ``spark.driver.maxResultSize``;
-          a larger one fails before anything is published;
+          The batch must fit in ``spark.driver.maxResultSize``; a larger
+          one fails before anything is published;
         * a commit that replaces buckets (:meth:`compact`,
           :meth:`delete_where`, :meth:`rewrite_sorted`, rebucket, reorg
           rewinds) sets its size from the table, not one batch, and
@@ -1261,7 +1262,7 @@ class SnapshotTable:
         ``out_df=None`` the commit is METADATA-ONLY — no Spark job, no
         data files written (the Iceberg delete-file commit shape).
 
-        ``_on_gather`` sees a pure delta's gathered batch before any
+        ``_on_gather`` sees a pure delta's batch as Arrow before any
         file is written (see :meth:`_write_runs`). The returned dict
         adds ``phase_s`` (not in the manifest): seconds spent in
         ``gather``, ``check``, ``write`` and ``publish`` (the rest).
@@ -1495,6 +1496,18 @@ class SnapshotTable:
         phase["publish"] = time.perf_counter() - start - sum(phase.values())
         return {**snap, "phase_s": phase}
 
+    def _check_driver_bound(self, batch) -> None:
+        """Hold a batch that reached the driver without a Spark gather
+        to the gather's bound: an Arrow table over a nonzero
+        ``spark.driver.maxResultSize`` raises."""
+        conf = self.spark.sparkContext._conf._jconf
+        limit = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+        if limit and batch.nbytes > limit:
+            raise RuntimeError(
+                f"batch of {batch.nbytes} bytes is bigger than "
+                f"spark.driver.maxResultSize ({limit} bytes)"
+            )
+
     @contextmanager
     def _job_label(self, app_id: str, epoch: int, phase: str):
         """Tag and describe this thread's Spark jobs as
@@ -1518,15 +1531,16 @@ class SnapshotTable:
     _RUN_ROWS = 1 << 15
 
     def _write_runs(
-        self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None, phase, on_gather
+        self, out, out_dir: str, sort_cols: list[str] | None, phase, on_gather
     ) -> tuple[dict[str, tuple[dict[str, int], object]], dict[str, list[int]]]:
-        """Pure-delta write. ``out_df`` is gathered with ``toArrow()``:
-        one Spark job that carries only the data, with no shuffle.
-        ``on_gather``, when given, takes the gathered batch (the
-        caller's checks and counts, as Arrow kernels) and returns the
-        batch to write, without its helper columns; an error it raises
-        fails the commit before any file is written. ``phase`` gets the
-        seconds of the ``gather`` and of ``on_gather`` (``check``).
+        """Pure-delta write of ``out``: a ``pyarrow.Table`` is taken as
+        it is; a DataFrame is gathered with ``toArrow()``, one Spark job
+        that carries only the data, with no shuffle. ``on_gather``, when
+        given, takes that Arrow batch (the caller's delta build, checks
+        and counts, as Arrow kernels) and returns the batch to write; an
+        error it raises fails the commit before any file is written.
+        ``phase`` gets the seconds of the ``gather`` and of
+        ``on_gather`` (``check``).
         The rows split into P level-0 runs by ``_bucket % P``, where P is
         ``ceil(rows / _RUN_ROWS)`` capped at the driver's cores and the
         bucket count, so the layout follows the batch and the machine
@@ -1537,41 +1551,32 @@ class SnapshotTable:
 
         Returns each file's per-bucket row counts and the writer's own
         footer metadata (no file is reopened), and with blooms on each
-        bucket's Bloom words, from probe positions computed in the same
-        job. A batch larger than ``spark.driver.maxResultSize`` fails in
-        the gather, before any file is written."""
+        bucket's Bloom words, from probe positions hashed on the driver
+        (:meth:`_bloom_positions_arrow`). A batch larger than
+        ``spark.driver.maxResultSize`` fails in the gather (a Table:
+        before it), before any file is written."""
         from concurrent.futures import ThreadPoolExecutor
 
         import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        probes = (
-            [f"_bloom{si}" for si in range(len(self._BLOOM_SEEDS))]
-            if self.bloom_bits
-            else []
-        )
-        if probes:
-            out_df = out_df.select(
-                "*",
-                *[
-                    p.alias(name)
-                    for p, name in zip(self._bloom_positions(F.col("doc_id")), probes)
-                ],
-            )
         t = time.perf_counter()
-        batch = out_df.toArrow()
+        if isinstance(out, DataFrame):
+            batch = out.toArrow()
+        else:
+            self._check_driver_bound(out)
+            batch = out
         phase["gather"] = time.perf_counter() - t
         if on_gather is not None:
             batch = on_gather(batch)
             phase["check"] = time.perf_counter() - t - phase["gather"]
         buckets = batch.column("_bucket").to_numpy()
         bucket_words = (
-            self._bloom_words(buckets, [batch.column(c).to_numpy() for c in probes])
-            if probes
+            self._bloom_words(buckets, self._bloom_positions_arrow(batch.column("doc_id")))
+            if self.bloom_bits
             else {}
         )
-        batch = batch.drop_columns(probes)
 
         n_runs = max(
             1,
@@ -1693,6 +1698,22 @@ class SnapshotTable:
         on write and lookup."""
         return [
             F.pmod(F.xxhash64(doc_id_col, F.lit(s)), F.lit(self.bloom_bits))
+            for s in self._BLOOM_SEEDS
+        ]
+
+    def _bloom_positions_arrow(self, doc_ids) -> list:
+        """The same probe positions as :meth:`_bloom_positions`, hashed
+        on the driver over an Arrow key column (numpy arrays): each
+        seed ``s`` is a 4-byte int hashed with the key's hash as its
+        seed, as ``xxhash64(doc_id, lit(s))`` chains them."""
+        import numpy as np
+        import pyarrow as pa
+
+        from ethereum_etl_airflow_spark.functions.hashing import xxhash64_arrow
+
+        h = xxhash64_arrow(doc_ids)
+        return [
+            xxhash64_arrow(pa.array(np.full(len(h), s, np.int32)), seeds=h) % self.bloom_bits
             for s in self._BLOOM_SEEDS
         ]
 

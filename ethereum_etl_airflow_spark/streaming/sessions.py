@@ -213,7 +213,7 @@ def run_session_stream(
 # pytest suite's hand-built frames.
 # ---------------------------------------------------------------------------
 
-from ethereum_etl_airflow_spark.queries import _t, register  # noqa: E402
+from ethereum_etl_airflow_spark.queries import _scratch_dir, _t, register  # noqa: E402
 
 
 @register(
@@ -244,15 +244,13 @@ from ethereum_etl_airflow_spark.queries import _t, register  # noqa: E402
     "of sessionize_events (operators/temporal.py)",
 )
 def sessionize_stream_closed(spark, sf_dir: str):
-    import tempfile
-
     ev = (
         _t(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull())
         .select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
     )
     hi = ev.agg(F.max("ts")).collect()[0][0]
-    root = tempfile.mkdtemp(prefix="sess_stream_")
+    root = _scratch_dir("sess_stream_")
     ev.write.mode("overwrite").parquet(f"{root}/feed/data")
     # flush event far past every session's timeout so the AvailableNow
     # final watermark pass closes ALL real sessions (the flush user's

@@ -11,10 +11,12 @@ Two drive modes over the same ``apply_changes`` core:
     sink — the Iceberg (app_id, epoch) pattern, SURVEY §2.10).
   * ``replay_batches`` — deterministic batch loop over
     ``feed/batch_id=N`` directories (the reference's daily ``ds``
-    cadence). Resume needs no extra state: the table's last committed
-    epoch is the checkpoint, so restarting from batch 0 fast-skips
-    applied epochs. Handles mid-stream schema evolution (each batch
-    directory is read with its own schema).
+    cadence). Each batch is read with pyarrow on the driver and applied
+    as Arrow, with no Spark job. Resume needs no extra state: the
+    table's last committed epoch is the checkpoint, so restarting from
+    batch 0 fast-skips applied epochs without reading them. Handles
+    mid-stream schema evolution (each batch directory is read with its
+    own schema).
 
 Every applied batch appends one lineage row (source offset range,
 event counts, snapshot version, wall time, events/sec) to an
@@ -30,7 +32,7 @@ import re
 
 from pyspark.sql import SparkSession
 
-from ethereum_etl_airflow_spark.operators.cdc import apply_changes
+from ethereum_etl_airflow_spark.operators.cdc import SPARK_ROW_METADATA, apply_changes
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
 
@@ -481,22 +483,40 @@ class ChangeLogTailer:
         for batch_id, path in batch_dirs:
             if batch_id < start or (end is not None and batch_id > end):
                 continue
+            if not self._needs_dataframe() and batch_id <= self._staged().last_epoch(
+                self.app_id
+            ):
+                continue  # fenced: skipped before the batch is read
             lineage = self._apply_batch(self._read_batch(path), self.app_id, batch_id)
             if lineage is not None:
                 results.append(lineage)
         return results
 
+    def _needs_dataframe(self) -> bool:
+        """The opt-in hooks that take a batch as a Spark DataFrame:
+        ``transform``, ``quarantine`` and ``track_ndv``."""
+        return bool(self.transform is not None or self.quarantine is not None or self.track_ndv)
+
     def _read_batch(self, path: str):
-        """One feed batch directory, read with the Spark schema in its
-        first data file's footer: the footer Spark's own inference reads
-        (the files of a batch share one schema), so no inference job
-        runs."""
+        """One feed batch directory, as a ``pyarrow.Table`` read on the
+        driver (no Spark job; the Spark schema in its footers rides in
+        the table's schema metadata, see ``cdc.batch_schema``).
+
+        With a DataFrame hook on, it is a Spark read instead, with the
+        Spark schema in its first data file's footer: the footer
+        Spark's own inference reads (the files of a batch share one
+        schema), so no inference job runs."""
         import pyarrow.parquet as pq
         from pyspark.sql import types as T
 
         files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
-        meta = pq.read_metadata(os.path.join(path, files[0])).metadata if files else None
-        row_schema = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if not files:
+            raise FileNotFoundError(f"feed batch {path} holds no data files")
+        if not self._needs_dataframe():
+            return pq.read_table([os.path.join(path, f) for f in files])
+        # the DataFrame hooks: transform, quarantine and track_ndv
+        meta = pq.read_metadata(os.path.join(path, files[0])).metadata
+        row_schema = (meta or {}).get(SPARK_ROW_METADATA)
         if row_schema is None:
             # written by another parquet writer: Spark infers the schema
             return self.spark.read.parquet(path)

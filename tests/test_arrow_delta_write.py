@@ -1,17 +1,18 @@
-"""Pure-delta commits are gathered to the driver as Arrow and written by
-pyarrow as level-0 sorted runs; commits that replace buckets keep the
-distributed Spark write. These tests check that the Arrow-written files
-read back exactly the rows committed, for every column type the
-package's tables write and across schema evolution; that an empty delta
-publishes only its epoch fence; that a non-compacting apply is one
-labelled Spark job with no shuffle and no Spark parquet write; that the
-run count follows the batch and the driver, not the cluster; and that
-the driver-side gather is bounded: a batch over
-``spark.driver.maxResultSize`` publishes nothing, and ``run_stream``
-admits triggers below that limit by default. A replayed batch is read
-with the schema in its footer (one Spark job, the same schema and
-manifest as an inferred read), and the input metrics and the n_tok
-guard run on the gathered Arrow batch, in both drive modes."""
+"""Pure-delta commits are written by pyarrow on the driver as level-0
+sorted runs (a DataFrame batch is first gathered as Arrow); commits
+that replace buckets keep the distributed Spark write. These tests
+check that the Arrow-written files read back exactly the rows
+committed, for every column type the package's tables write and across
+schema evolution; that an empty delta publishes only its epoch fence;
+that a non-compacting apply is one labelled Spark job with no shuffle
+and no Spark parquet write, and a replayed one (read with pyarrow) runs
+no Spark job at all; that the run count follows the batch and the
+driver, not the cluster; and that the driver-side batch is bounded: a
+batch over ``spark.driver.maxResultSize`` publishes nothing, in both
+the Spark gather and the replay read, and ``run_stream`` admits
+triggers below that limit by default. A replayed batch gets the schema
+and manifest Spark's own read would give, and the input metrics and the
+n_tok guard run on the Arrow batch, in both drive modes."""
 
 from __future__ import annotations
 
@@ -27,7 +28,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
-from ethereum_etl_airflow_spark.operators.cdc import apply_changes
+from ethereum_etl_airflow_spark.operators.cdc import apply_changes, batch_schema
 from ethereum_etl_airflow_spark.sinks import snapshot_table
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
 from ethereum_etl_airflow_spark.sources.feed import (
@@ -263,10 +264,12 @@ def test_delta_run_count_follows_batch_rows_and_driver_cores(
 
 
 def test_batch_over_max_result_size_fails_before_publishing(spark, tmp_path):
-    """The delta is gathered to the driver: a batch over
-    ``spark.driver.maxResultSize`` fails in the gather, leaving the
-    version, the epoch fence and the data directory as they were; the
-    same batch commits once the limit allows it."""
+    """The delta is held on the driver: a batch over
+    ``spark.driver.maxResultSize`` fails before any file is written —
+    in the gather of a DataFrame and in the pyarrow read of a replayed
+    batch alike — leaving the version, the epoch fence and the data
+    directory as they were; the same batch commits once the limit
+    allows it."""
     cfg = FeedConfig(n_docs=40_000, events_per_batch=20_000, n_batches=2)
     t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8)
     apply_changes(t, generate_batch(spark, cfg, 0), "big", epoch=0)
@@ -281,6 +284,24 @@ def test_batch_over_max_result_size_fails_before_publishing(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(t.root, "data"))) == dirs
     assert apply_changes(t, generate_batch(spark, cfg, 1), "big", epoch=1) is not None
     assert t.last_epoch("big") == 1
+
+    feed, _ = _replay_feed(spark, tmp_path, cfg)
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "r"), app_id="bigr", num_buckets=8
+    )
+    tailer.replay_batches(start=0, end=0)
+    r = tailer.table
+    head, files = r.current_version(), _data_files(r)
+    dirs = sorted(os.listdir(os.path.join(r.root, "data")))
+    with _max_result_size(spark, "1m"):
+        with pytest.raises(Exception, match="maxResultSize"):
+            tailer.replay_batches(start=1, end=1)
+    assert r.current_version() == head
+    assert r.last_epoch("bigr") == 0
+    assert _data_files(r) == files
+    assert sorted(os.listdir(os.path.join(r.root, "data"))) == dirs
+    assert [li["epoch"] for li in tailer.replay_batches(start=1, end=1)] == [1]
+    assert r.last_epoch("bigr") == 1
 
 
 def test_run_stream_admits_triggers_below_max_result_size(spark, tmp_path):
@@ -318,11 +339,11 @@ def _replay_feed(spark, tmp_path, cfg):
     return feed, sorted(os.path.join(feed, d) for d in os.listdir(feed))
 
 
-def test_replayed_batch_is_one_labelled_spark_job(spark, tmp_path):
-    """``replay_batches`` reads a batch with the schema in its footer, so
-    replaying a non-compacting batch runs exactly one Spark job: the
-    commit's flush, tagged ``cdc:<app>:<batch>:flush`` (a read that
-    infers its schema would add a job of its own)."""
+def test_replayed_batch_runs_no_spark_job(spark, tmp_path):
+    """``replay_batches`` reads a batch with pyarrow and applies it as
+    Arrow, so replaying a non-compacting batch runs no Spark job at
+    all: none in the caller's job group, none under the commit's
+    ``cdc:<app>:<batch>:flush`` label."""
     cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=2)
     feed, _ = _replay_feed(spark, tmp_path, cfg)
     tailer = tailer_mod.ChangeLogTailer(
@@ -339,34 +360,40 @@ def test_replayed_batch_is_one_labelled_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert li["epoch"] == 1 and li["compacted_buckets"] == 0
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 1
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     tracker = sc._jsc.sc().statusTracker()
-    assert list(tracker.getJobIdsForTag("cdc:rjobs:1:flush")) == jobs
+    assert list(tracker.getJobIdsForTag("cdc:rjobs:1:flush")) == []
 
 
 def test_replay_reads_the_schema_spark_infers(spark, tmp_path):
     """On a ``bulk_backfill``-shaped feed (duplicated tails, the last
-    batch adding ``lang`` and widening ``n_tok``), the schema a replayed
-    batch is read with equals ``spark.read.parquet``'s inferred one,
-    and every commit's manifest schema is byte-identical to the one the
-    batch's own projection gives (``_evolve_schema`` over
-    ``batch.select(...).schema``)."""
+    batch adding ``lang`` and widening ``n_tok``), with one batch
+    rewritten by pyarrow (no Spark schema in its footers, REQUIRED
+    columns), the Spark schema of a replayed pyarrow batch equals
+    ``spark.read.parquet``'s, and every commit's manifest schema is
+    byte-identical to the one derived from ``spark.read.parquet(path)``
+    (``_evolve_schema`` over the delta's projection of that read)."""
     cfg = FeedConfig(
         n_docs=600, events_per_batch=600, n_batches=3, dup_tail=12, evolve_at_batch=2
     )
     feed, paths = _replay_feed(spark, tmp_path, cfg)
+    rewritten = pq.read_table(paths[1]).replace_schema_metadata(None)
+    assert not rewritten.schema.field("doc_id").nullable
+    for f in os.listdir(paths[1]):
+        os.remove(os.path.join(paths[1], f))
+    pq.write_table(rewritten, os.path.join(paths[1], "part-0.parquet"))
     tailer = tailer_mod.ChangeLogTailer(
         spark, feed, str(tmp_path / "t"), app_id="fschema", num_buckets=8
     )
     for path in paths:
-        assert tailer._read_batch(path).schema == spark.read.parquet(path).schema
-    last = tailer._read_batch(paths[-1]).schema
+        assert batch_schema(tailer._read_batch(path)) == spark.read.parquet(path).schema
+    last = batch_schema(tailer._read_batch(paths[-1]))
     assert last["lang"].dataType.typeName() == "string"
     assert last["n_tok"].dataType.typeName() == "long"
     assert last["ts"].dataType.typeName() == "timestamp_ntz"
 
     lineage = tailer.replay_batches()
+    assert len(lineage) == len(paths)
     want = None
     for b, (path, li) in enumerate(zip(paths, lineage)):
         batch = spark.read.parquet(path)

@@ -3,6 +3,8 @@ delta files (not just buckets), negatives skip everything without
 opening a data file, and files written before blooms were enabled are
 always scanned (coverage correct by construction)."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable, bucket_expr
@@ -141,9 +143,10 @@ def test_bloom_over_multi_bucket_runs_keeps_per_bucket_precision(spark, tmp_path
 
 def test_bloom_words_of_arrow_delta_match_spark_aggregation(spark, tmp_path):
     """A delta commit ORs its Bloom words on the driver from probe
-    positions gathered with the batch. The words equal the Spark
+    positions hashed on the driver. The words equal the Spark
     aggregation's for the same rows, no file holding a key is dropped,
-    and negatives are still pruned."""
+    and negatives are still pruned — also for a batch replayed from a
+    feed, which reaches the commit as a pyarrow table."""
     import pyarrow.parquet as pq
 
     t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, bloom_bits=4096)
@@ -162,3 +165,24 @@ def test_bloom_words_of_arrow_delta_match_spark_aggregation(spark, tmp_path):
         for k in pq.read_table(str(tmp_path / "t" / f), columns=["doc_id"]).column(0).to_pylist():
             assert f in SnapshotTable.plan_lookup(snap, [k]), k
     assert SnapshotTable.plan_lookup(snap, ["absent-1", "absent-2"]) == []
+
+    from ethereum_etl_airflow_spark.sources.feed import FeedConfig, write_feed
+    from ethereum_etl_airflow_spark.streaming.tailer import ChangeLogTailer
+
+    cfg = FeedConfig(n_docs=300, events_per_batch=400, n_batches=2, dup_tail=10)
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed)
+    tailer = ChangeLogTailer(spark, feed, str(tmp_path / "r"), app_id="bl", num_buckets=8)
+    tailer.table.bloom_bits = 4096
+    for li in tailer.replay_batches():
+        snap = tailer.table.snapshot(li["snapshot_version"])
+        rows = spark.read.parquet(os.path.join(feed, f"batch-{li['epoch']:06d}")).withColumn(
+            "_bucket", bucket_expr(F.col("doc_id"), 8)
+        )
+        expected = tailer.table._commit_bloom_words(rows)
+        added = {f for fs in snap["added_files"].values() for f in fs}
+        got = {b: w for f in added for b, w in snap["file_blooms"][f].items()}
+        assert got == expected
+        for f in added:
+            for k in pq.read_table(os.path.join(tailer.table.root, f), columns=["doc_id"]).column(0).to_pylist():
+                assert f in SnapshotTable.plan_lookup(snap, [k]), k
