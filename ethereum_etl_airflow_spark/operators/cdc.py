@@ -19,8 +19,10 @@ once the feed guarantees no older events can arrive (watermark).
 Execution strategy (Spark-first, scale-first — merge-on-read):
 
   1. **delta write, not table rewrite**: the batch reaches the driver
-     as Arrow — a ``pyarrow.Table`` as it is (``replay_batches`` reads
-     its feed with pyarrow, no Spark job), a DataFrame in ONE Spark job
+     as Arrow — a ``pyarrow.Table`` as it is (the tailer reads each
+     feed batch's own files with pyarrow in both drive modes, streamed
+     micro-batches included, so no Spark job runs), a DataFrame (a
+     DataFrame hook's output, a direct caller's batch) in ONE Spark job
      that gathers its own columns, with no projection and no shuffle.
      pyarrow kernels then build the delta (``_seq``, ``_epoch``,
      ``_tombstone``, the evolved-schema casts) and numpy computes each
@@ -89,19 +91,24 @@ def payload_columns(schema: T.StructType) -> list[str]:
 
 def batch_schema(batch) -> T.StructType:
     """Spark schema of a change batch: a DataFrame's own; for a
-    ``pyarrow.Table`` the schema ``spark.read.parquet`` gives the file
-    it was read from — the Spark schema in its footer (pyarrow keeps
-    it in the table's schema metadata), else the Arrow schema mapped
-    as Spark infers it (a naive timestamp is ``timestamp_ntz``), every
-    field nullable either way, as a Spark file read makes it."""
+    ``pyarrow.Table``, that of its Arrow schema (``arrow_spark_schema``)."""
     if isinstance(batch, DataFrame):
         return batch.schema
-    row = (batch.schema.metadata or {}).get(SPARK_ROW_METADATA)
+    return arrow_spark_schema(batch.schema)
+
+
+def arrow_spark_schema(schema) -> T.StructType:
+    """The Spark schema ``spark.read.parquet`` gives a file with this
+    Arrow schema: the Spark schema in its footer (pyarrow keeps it in
+    the schema metadata), else the Arrow schema mapped as Spark infers
+    it (a naive timestamp is ``timestamp_ntz``), every field nullable
+    either way, as a Spark file read makes it."""
+    row = (schema.metadata or {}).get(SPARK_ROW_METADATA)
     if row is not None:
         return T.StructType.fromJson(json.loads(row)).toNullable()
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    return from_arrow_schema(batch.schema, prefer_timestamp_ntz=True).toNullable()
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True).toNullable()
 
 
 def apply_changes(
@@ -251,7 +258,7 @@ def apply_changes(
     # the batch is readable from here; compaction is its own commit
     t_compact = time.time()
     try:
-        due, _, compacted = table._compact_due(snap)
+        due, compacted = table._compact_due(snap)
     except Exception as e:
         # the batch stays committed and fenced; the error carries its
         # lineage so a caller can still record the epoch
@@ -265,8 +272,10 @@ def apply_changes(
         wall = now - t0
         lineage["wall_sec"] = round(wall, 4)
         lineage["events_per_sec"] = round(m_in["events_in"] / wall, 2) if wall > 0 else None
+    # the compaction decision: buckets due by each rule, and the rules
+    lineage["compaction"] = {k: v for k, v in due.items() if k != "buckets"}
     if compacted is not None:
-        lineage["compacted_buckets"] = len(due)
+        lineage["compacted_buckets"] = len(due["buckets"])
         lineage["rows_out"] += sum(compacted["bucket_rows_written"].values())
     return lineage
 

@@ -2315,26 +2315,36 @@ class SnapshotTable:
         self._publish(snap)
         return snap
 
-    def _compact_due(self, snap: dict | None = None) -> tuple[set[int], set[int], dict | None]:
+    def _compact_due(self, snap: dict | None = None) -> tuple[dict, dict | None]:
         """Compact, as its own commit, every bucket due at ``snap``
         (default: the head): a bucket is due when it holds
         ``retention.compact_files`` files (default ``compact_files``)
         or ``retention.max_delete_layers`` (default 4) pending
-        merge-on-read delete layers. Returns the due buckets, the
-        subset due for their delete-layer depth, and the compaction
-        commit (None when no bucket was due)."""
+        merge-on-read delete layers. Returns the decision — the due
+        buckets (``buckets``), how many were due by file count
+        (``due_by_files``) and by delete-layer depth
+        (``due_by_layers``; a bucket due for both counts in both), and
+        the two thresholds — and the compaction commit (None when no
+        bucket was due)."""
         snap = snap or self.snapshot()
         props = snap["properties"]
         thr = int(props.get("retention.compact_files", self.compact_files))
-        due = {int(b) for b, fs in snap["bucket_files"].items() if len(fs) >= thr}
+        by_files = {int(b) for b, fs in snap["bucket_files"].items() if len(fs) >= thr}
         max_layers = int(props.get("retention.max_delete_layers", 4))
         layer_counts: dict[int, int] = {}
         for lay in snap.get("delete_layers") or []:
             for b in lay["files"]:
                 layer_counts[int(b)] = layer_counts.get(int(b), 0) + 1
         layered = {b for b, c in layer_counts.items() if c >= max_layers}
-        due |= layered
-        return due, layered, self.compact(sorted(due)) if due else None
+        due = sorted(by_files | layered)
+        decision = {
+            "buckets": due,
+            "due_by_files": len(by_files),
+            "due_by_layers": len(layered),
+            "compact_files": thr,
+            "max_delete_layers": max_layers,
+        }
+        return decision, self.compact(due) if due else None
 
     def maintain(self) -> dict:
         """One property-driven maintenance pass (the reference's TTL
@@ -2353,11 +2363,11 @@ class SnapshotTable:
           the layers: read amplification from lazy deletes stays
           bounded without the caller tracking them."""
         report: dict = {}
-        due, layered, _ = self._compact_due()
-        if layered:
-            report["delete_layers_drained_buckets"] = len(layered)
-        if due:
-            report["compacted_buckets"] = len(due)
+        due, _ = self._compact_due()
+        if due["due_by_layers"]:
+            report["delete_layers_drained_buckets"] = due["due_by_layers"]
+        if due["buckets"]:
+            report["compacted_buckets"] = len(due["buckets"])
         props = self.snapshot()["properties"]
         ttl = props.get("retention.snapshot_ttl_sec")
         keep = int(props.get("retention.keep_last", 2))

@@ -1,46 +1,59 @@
 """Change-log tailer: the Structured-Streaming replacement for the
 reference's Airflow sensor + load DAG loop.
 
-Two drive modes over the same ``apply_changes`` core:
+Two drive modes over the same ``apply_changes`` core, and one batch
+reader: each batch's own data files are read with pyarrow on the
+driver, with the schema in their own footers, and applied as Arrow,
+with no Spark job (with a DataFrame hook on — ``transform``,
+``quarantine``, ``track_ndv`` — the same files are read with Spark and
+that schema instead). Both modes therefore handle mid-stream schema
+evolution, also within one batch whose files differ (read with the
+union schema).
 
   * ``run_stream`` — ``readStream`` file source over the feed directory
     (the file source IS the reference's GCSObjectExistenceSensor,
     build_load_dag.py:83-91) with ``foreachBatch`` + Spark checkpoint.
+    Spark senses new files, admits them per trigger, checkpoints the
+    offsets and numbers the batches; the micro-batch DataFrame itself
+    is never executed: its file list is taken from its planned scan
+    (``_micro_batch_files``) and read as above.
     Exactly-once = Spark checkpoint (offset tracking) + snapshot epoch
     fencing (a batch replayed after crash-recovery is skipped by the
     sink — the Iceberg (app_id, epoch) pattern, SURVEY §2.10).
   * ``replay_batches`` — deterministic batch loop over
     ``feed/batch_id=N`` directories (the reference's daily ``ds``
-    cadence). Each batch is read with pyarrow on the driver and applied
-    as Arrow, with no Spark job. Resume needs no extra state: the
-    table's last committed epoch is the checkpoint, so restarting from
-    batch 0 fast-skips applied epochs without reading them. Handles
-    mid-stream schema evolution (each batch directory is read with its
-    own schema).
+    cadence). Resume needs no extra state: the table's last committed
+    epoch is the checkpoint, so restarting from batch 0 fast-skips
+    applied epochs without reading them.
 
 Every applied batch appends one lineage row (source offset range,
-event counts, snapshot version, wall time, events/sec) to an
-append-only parquet sink — the reference's load_metadata table
-(build_load_dag.py:236-268, S12).
+event counts, snapshot version, wall time, events/sec, the compaction
+decision) to an append-only parquet sink — the reference's
+load_metadata table (build_load_dag.py:236-268, S12).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 
 from pyspark.sql import SparkSession
 
-from ethereum_etl_airflow_spark.operators.cdc import SPARK_ROW_METADATA, apply_changes
+from ethereum_etl_airflow_spark.operators.cdc import (
+    SPARK_ROW_METADATA,
+    apply_changes,
+    arrow_spark_schema,
+)
 from ethereum_etl_airflow_spark.sinks.snapshot_table import SnapshotTable
 
 
 #: ``run_stream`` admits at most ``spark.driver.maxResultSize`` / this
 #: many feed bytes per trigger unless the caller sets a limit. A
-#: micro-batch gathered as Arrow measured 2.0-2.4x its zstd feed bytes
-#: on the benchmark feed (10k-120k events); 16 leaves room for feeds
-#: that compress better.
+#: micro-batch read with pyarrow measured 2.0-2.6x its zstd feed bytes
+#: in ``nbytes`` on the benchmark feed (10k and 120k events); 16 leaves
+#: room for feeds that compress better.
 TRIGGER_BYTES_DIVISOR = 16
 
 
@@ -48,6 +61,75 @@ def _byte_size(spark: SparkSession, size: int | str) -> int:
     """Bytes in a Spark size string ("1g", "512m", "4096")."""
     utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
     return int(utils.byteStringAsBytes(str(size)))
+
+
+def _data_files(root: str):
+    """Data files under ``root`` in path order, skipping the names
+    Spark's file source skips (``_*`` and ``.*``)."""
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        yield from (os.path.join(d, f) for f in sorted(files) if not f.startswith(("_", ".")))
+
+
+def _union_schema(schemas: list):
+    """The Arrow schema a batch whose files have these footer schemas
+    is read with: the shared schema, or, when the files differ (a
+    stream trigger that spans a schema evolution), the union of their
+    Spark schemas by the rule of ``SnapshotTable._evolve_schema``
+    (added columns nullable, int widened to long), with that union in
+    the footer key ``cdc.batch_schema`` reads. Each column keeps the
+    Arrow type of a file whose Spark type is the union's; pyarrow
+    casts the other files' columns to it and null-fills missing ones."""
+    import pyarrow as pa
+
+    if all(s.equals(schemas[0], check_metadata=True) for s in schemas[1:]):
+        return schemas[0]
+    spark_schemas = [arrow_spark_schema(s) for s in schemas]
+    union = functools.reduce(SnapshotTable._evolve_schema, spark_schemas, None)
+    fields = [
+        next(
+            s.field(f.name)
+            for s, ss in zip(schemas, spark_schemas)
+            if f.name in ss.names and ss[f.name].dataType == f.dataType
+        ).with_nullable(True)
+        for f in union.fields
+    ]
+    return pa.schema(fields, metadata={SPARK_ROW_METADATA: union.json()})
+
+
+def _micro_batch_files(batch_df) -> list[str]:
+    """The local paths of the files a streaming micro-batch planned to
+    read, taken on the driver without running it.
+
+    ``batch_df.inputFiles()`` cannot give them: ``foreachBatch`` wraps
+    the planned scan in a ``LogicalRDD``, so it returns ``[]``. The
+    scan's ``FileScanRDD`` is still in that ``LogicalRDD``'s RDD
+    lineage (taken from the plan as it is, so the batch is not planned
+    again); this walks ``dependencies()`` down to it and reads each of
+    its partitions' files (a split file is listed once). Raises when
+    no ``FileScanRDD`` is found: the batch is not a file-source
+    micro-batch."""
+    from urllib.parse import unquote, urlparse
+
+    plan = batch_df._jdf.queryExecution().logical()
+    is_rdd = plan.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD"
+    todo = [plan.rdd()] if is_rdd else []
+    while todo:
+        rdd = todo.pop()
+        if rdd.getClass().getName() == "org.apache.spark.sql.execution.datasources.FileScanRDD":
+            parts = rdd.filePartitions()
+            uris = {
+                f.urlEncodedPath()
+                for i in range(parts.length())
+                for f in parts.apply(i).files()
+            }
+            return sorted(unquote(urlparse(u).path) for u in uris)
+        deps = rdd.dependencies()
+        todo.extend(deps.apply(i).rdd() for i in range(deps.length()))
+    raise RuntimeError(
+        "micro-batch plan holds no FileScanRDD: run_stream reads a file "
+        "source's micro-batches only"
+    )
 
 
 #: from_json schema for the canonical JSON change envelope (the
@@ -483,11 +565,7 @@ class ChangeLogTailer:
         for batch_id, path in batch_dirs:
             if batch_id < start or (end is not None and batch_id > end):
                 continue
-            if not self._needs_dataframe() and batch_id <= self._staged().last_epoch(
-                self.app_id
-            ):
-                continue  # fenced: skipped before the batch is read
-            lineage = self._apply_batch(self._read_batch(path), self.app_id, batch_id)
+            lineage = self._apply_files(list(_data_files(path)), self.app_id, batch_id)
             if lineage is not None:
                 results.append(lineage)
         return results
@@ -497,31 +575,34 @@ class ChangeLogTailer:
         ``transform``, ``quarantine`` and ``track_ndv``."""
         return bool(self.transform is not None or self.quarantine is not None or self.track_ndv)
 
-    def _read_batch(self, path: str):
-        """One feed batch directory, as a ``pyarrow.Table`` read on the
+    def _apply_files(self, files: list[str], app_id: str, epoch: int) -> dict | None:
+        """One feed batch, given as its data files, in either drive
+        mode: a fenced epoch is skipped before its files are read
+        (with a DataFrame hook on, the read is lazy and the apply's
+        own fence skips it)."""
+        if not self._needs_dataframe() and epoch <= self._staged().last_epoch(app_id):
+            return None
+        return self._apply_batch(self._read_batch(files), app_id, epoch)
+
+    def _read_batch(self, files: list[str]):
+        """A feed batch's data files, as a ``pyarrow.Table`` read on the
         driver (no Spark job; the Spark schema in its footers rides in
         the table's schema metadata, see ``cdc.batch_schema``).
 
-        With a DataFrame hook on, it is a Spark read instead, with the
-        Spark schema in its first data file's footer: the footer
-        Spark's own inference reads (the files of a batch share one
-        schema), so no inference job runs."""
+        With a DataFrame hook on, it is a Spark read instead, with that
+        same Spark schema (``cdc.arrow_spark_schema``), so no inference
+        job runs. Files whose schemas differ — a stream trigger that
+        admits files from before and after a schema evolution — are
+        read with their union (``_union_schema``)."""
         import pyarrow.parquet as pq
-        from pyspark.sql import types as T
 
-        files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
         if not files:
-            raise FileNotFoundError(f"feed batch {path} holds no data files")
+            raise FileNotFoundError("a feed batch holds no data files")
+        schema = _union_schema([pq.read_schema(f) for f in files])
         if not self._needs_dataframe():
-            return pq.read_table([os.path.join(path, f) for f in files])
+            return pq.read_table(files, schema=schema)
         # the DataFrame hooks: transform, quarantine and track_ndv
-        meta = pq.read_metadata(os.path.join(path, files[0])).metadata
-        row_schema = (meta or {}).get(SPARK_ROW_METADATA)
-        if row_schema is None:
-            # written by another parquet writer: Spark infers the schema
-            return self.spark.read.parquet(path)
-        schema = T.StructType.fromJson(json.loads(row_schema))
-        return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.schema(arrow_spark_schema(schema)).parquet(*files)
 
     # ---------------------------------------------------------- streaming
 
@@ -535,10 +616,25 @@ class ChangeLogTailer:
     ):
         """Structured Streaming drive: file source -> foreachBatch apply.
 
+        Spark's file source senses new feed files, admits them per
+        trigger, and keeps the offsets in the checkpoint. The
+        micro-batch DataFrame ``foreachBatch`` hands over is not
+        executed: its file list is taken on the driver from its planned
+        scan (``_micro_batch_files``), the epoch fence is checked, and
+        the files are read with the batch reader ``replay_batches``
+        uses (``_read_batch``: pyarrow, or Spark with the files' footer
+        schema when a DataFrame hook is on). Each micro-batch is thus
+        read with its own files' schema, and one that spans a schema
+        evolution with their union. The stream's own schema comes from
+        the first data file's footer; an empty feed directory raises.
+        Because the source's rows are never read through Spark,
+        ``StreamingQueryProgress.numInputRows`` reads 0; the lineage
+        ``events_in`` is the count.
+
         Backpressure / rate limiting (the admission control a
-        10^10-event backlog replay needs: each micro-batch's delta is
-        gathered to the driver as Arrow, so one trigger must stay
-        within ``spark.driver.maxResultSize``):
+        10^10-event backlog replay needs: each micro-batch is read to
+        the driver as Arrow, so one trigger must stay within
+        ``spark.driver.maxResultSize``):
 
         * ``max_files_per_trigger`` — cap source files admitted per
           micro-batch (file-count shaped feeds);
@@ -549,9 +645,9 @@ class ChangeLogTailer:
         * with neither, admission defaults to
           ``spark.driver.maxResultSize / TRIGGER_BYTES_DIVISOR`` feed
           bytes per trigger (none when the result size is unlimited).
-          A batch that still gathers past the limit fails before its
-          commit publishes anything; a smaller explicit limit then
-          lets the replay through;
+          A batch whose Arrow table still exceeds the limit fails
+          before its commit publishes anything; a smaller explicit
+          limit then lets the replay through;
         * ``processing_time`` — follow-mode cadence (e.g. "30 seconds"):
           the trigger interval is the reference's sensor poke_interval
           analogue (build_load_dag.py sensor cadence).
@@ -565,8 +661,15 @@ class ChangeLogTailer:
         same winner), so fencing only avoids re-work — correctness
         never depends on it.
         """
-        sample = self.spark.read.option("recursiveFileLookup", "true").parquet(self.feed_dir)
-        reader = self.spark.readStream.schema(sample.schema)
+        import pyarrow.parquet as pq
+
+        # the source's schema, from the first data file's footer (no
+        # inference job); each micro-batch is read with its own files'
+        # schema
+        first = next(_data_files(self.feed_dir), None)
+        if first is None:
+            raise FileNotFoundError(f"feed {self.feed_dir} holds no data files")
+        reader = self.spark.readStream.schema(arrow_spark_schema(pq.read_schema(first)))
         if not (max_files_per_trigger or max_bytes_per_trigger):
             limit = _byte_size(
                 self.spark,
@@ -606,7 +709,9 @@ class ChangeLogTailer:
 
         writer = (
             stream.writeStream.foreachBatch(
-                lambda batch_df, epoch_id: self._apply_batch(batch_df, stream_app, epoch_id)
+                lambda batch_df, epoch_id: self._apply_files(
+                    _micro_batch_files(batch_df), stream_app, epoch_id
+                )
             )
             .option("checkpointLocation", checkpoint_dir)
         )

@@ -5,7 +5,8 @@ check that the Arrow-written files read back exactly the rows
 committed, for every column type the package's tables write and across
 schema evolution; that an empty delta publishes only its epoch fence;
 that a non-compacting apply is one labelled Spark job with no shuffle
-and no Spark parquet write, and a replayed one (read with pyarrow) runs
+and no Spark parquet write, and a replayed or streamed one (read with
+pyarrow, a micro-batch from the files walked from its planned scan) runs
 no Spark job at all; that the run count follows the batch and the
 driver, not the cluster; and that the driver-side batch is bounded: a
 batch over ``spark.driver.maxResultSize`` publishes nothing, in both
@@ -365,6 +366,78 @@ def test_replayed_batch_runs_no_spark_job(spark, tmp_path):
     assert list(tracker.getJobIdsForTag("cdc:rjobs:1:flush")) == []
 
 
+def test_streamed_batch_runs_no_spark_job(spark, tmp_path):
+    """``run_stream`` reads a micro-batch's own files with pyarrow and
+    never runs the micro-batch's DataFrame, so a non-compacting stream
+    batch runs no Spark job: none in the query's job group, none under
+    the commit's ``cdc:<app>:stream:<batch>:flush`` label."""
+    cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=2)
+    feed = str(tmp_path / "feed")
+    write_feed(spark, cfg, feed, batches=range(0, 1))
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="sjobs", num_buckets=8
+    )
+    cp = str(tmp_path / "cp")
+    tailer.run_stream(checkpoint_dir=cp, available_now=True)
+    write_feed(spark, cfg, feed, batches=range(1, 2))
+    q = tailer.run_stream(checkpoint_dir=cp, available_now=True)
+
+    li = tailer.applied[-1]
+    assert li["epoch"] == 1 and li["compacted_buckets"] == 0
+    assert li["events_in"] == cfg.events_per_batch + cfg.dup_tail
+    sc = spark.sparkContext
+    assert list(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == []
+    tracker = sc._jsc.sc().statusTracker()
+    assert list(tracker.getJobIdsForTag("cdc:sjobs:stream:1:flush")) == []
+
+
+def test_micro_batch_file_walk(spark, tmp_path, monkeypatch):
+    """The files walked from each micro-batch's scan are the files
+    ``input_file_name()`` reports for the same micro-batch, as local
+    paths (the feed directory's name holds a space, so the URIs must
+    be decoded); under ``maxFilesPerTrigger`` the micro-batches cover
+    every feed file once, and their ``events_in`` sum to the feed's
+    events."""
+    from urllib.parse import unquote, urlparse
+
+    cfg = FeedConfig(n_docs=300, events_per_batch=400, n_batches=3, dup_tail=30)
+    feed = str(tmp_path / "feed dir")
+    write_feed(spark, cfg, feed)
+    walked: list[list[str]] = []
+    walk = tailer_mod._micro_batch_files
+
+    def recording_walk(batch_df):
+        files = walk(batch_df)
+        read = {
+            unquote(urlparse(r[0]).path)
+            for r in batch_df.select(F.input_file_name()).distinct().collect()
+        }
+        assert set(files) == read
+        walked.append(files)
+        return files
+
+    monkeypatch.setattr(tailer_mod, "_micro_batch_files", recording_walk)
+    tailer = tailer_mod.ChangeLogTailer(
+        spark, feed, str(tmp_path / "t"), app_id="walk", num_buckets=8
+    )
+    tailer.run_stream(
+        checkpoint_dir=str(tmp_path / "cp"), available_now=True, max_files_per_trigger=2
+    )
+    feed_files = sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(feed)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    assert len(walked) == len(tailer.applied) > 1
+    assert all(len(files) <= 2 for files in walked)
+    assert sorted(f for files in walked for f in files) == feed_files
+    events = cfg.n_batches * cfg.events_per_batch + (cfg.n_batches - 1) * cfg.dup_tail
+    assert sum(li["events_in"] for li in tailer.applied) == events
+    with pytest.raises(RuntimeError, match="no FileScanRDD"):
+        walk(spark.range(3))
+
+
 def test_replay_reads_the_schema_spark_infers(spark, tmp_path):
     """On a ``bulk_backfill``-shaped feed (duplicated tails, the last
     batch adding ``lang`` and widening ``n_tok``), with one batch
@@ -385,9 +458,12 @@ def test_replay_reads_the_schema_spark_infers(spark, tmp_path):
     tailer = tailer_mod.ChangeLogTailer(
         spark, feed, str(tmp_path / "t"), app_id="fschema", num_buckets=8
     )
+    def read(path):
+        return tailer._read_batch(list(tailer_mod._data_files(path)))
+
     for path in paths:
-        assert batch_schema(tailer._read_batch(path)) == spark.read.parquet(path).schema
-    last = batch_schema(tailer._read_batch(paths[-1]))
+        assert batch_schema(read(path)) == spark.read.parquet(path).schema
+    last = batch_schema(read(paths[-1]))
     assert last["lang"].dataType.typeName() == "string"
     assert last["n_tok"].dataType.typeName() == "long"
     assert last["ts"].dataType.typeName() == "timestamp_ntz"

@@ -262,6 +262,45 @@ def test_crash_between_delta_and_compaction_commits(spark, tmp_path, monkeypatch
     assert_state_matches(t.table, spark, cfg, 2)
 
 
+def test_apply_lineage_records_the_compaction_decision(spark, tmp_path):
+    """Each apply's lineage names how many buckets were due for
+    compaction by file count and by delete-layer depth, and the two
+    thresholds it used, whether or not a compaction ran."""
+    cfg = FeedConfig(n_docs=200, events_per_batch=400, n_batches=4, dup_tail=20)
+    table = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4, compact_files=3)
+    for b in range(2):
+        li = apply_changes(table, generate_batch(spark, cfg, b), "dec", epoch=b)
+        assert li["compaction"] == {
+            "due_by_files": 0,
+            "due_by_layers": 0,
+            "compact_files": 3,
+            "max_delete_layers": 4,
+        }
+        assert li["compacted_buckets"] == 0
+    li = apply_changes(table, generate_batch(spark, cfg, 2), "dec", epoch=2)
+    assert li["compaction"]["due_by_files"] == li["compacted_buckets"] == 4
+    assert li["compaction"]["due_by_layers"] == 0
+
+    table.update_properties({"retention.compact_files": "10", "retention.max_delete_layers": "2"})
+    keys = sorted(r.doc_id for r in table.read().select("doc_id").collect())
+    table.delete_keys_lazy(keys[:8])
+    table.delete_keys_lazy(keys[8:16])
+    layers: dict = {}
+    for lay in table.snapshot()["delete_layers"]:
+        for b in lay["files"]:
+            layers[b] = layers.get(b, 0) + 1
+    deep = sum(c >= 2 for c in layers.values())
+    assert deep >= 1
+    li = apply_changes(table, generate_batch(spark, cfg, 3), "dec", epoch=3)
+    assert li["compaction"] == {
+        "due_by_files": 0,
+        "due_by_layers": deep,
+        "compact_files": 10,
+        "max_delete_layers": 2,
+    }
+    assert li["compacted_buckets"] == deep
+
+
 def test_commit_conflict_detection(spark, tmp_path):
     """Optimistic concurrency: a commit whose base snapshot is stale,
     or raced by a lock holder, must fail with CommitConflictError
