@@ -5,6 +5,25 @@ AQE on (runtime re-plan + skew-join), Arrow on (vectorized pandas UDF
 transfer), shuffle partitions sized to cores instead of the 200
 default, UTC session timezone so results compare bit-for-bit against
 the DuckDB oracle.
+
+Streaming checkpoints are written by Spark's
+``FileSystemBasedCheckpointFileManager`` instead of its default
+``FileContextBasedCheckpointFileManager``. pip-installed PySpark ships
+no ``libhadoop``, so Hadoop's local file system cannot call
+``NativeIO`` and forks a process for file metadata: ``chmod`` for each
+file it creates, and, through the FileContext API, ``readlink`` for
+each status check in a checkpoint rename. A Java Flight Recorder run of
+a followed feed counted about 32 forks per data trigger on the stream
+thread (100 ``chmod`` and 384 ``readlink`` over 15 triggers). The
+FileSystem-based manager writes a temp file and renames it with
+``File.renameTo``, which forks nothing: ``readlink`` went 384 -> 0,
+and a 35-trigger drain of a feed forked 29.5 processes per trigger
+instead of 78.5. On a followed feed (10k-event batches, 100 ms trigger,
+``local[4]``) the medians of Spark's ``latestOffset`` / ``walCommit`` /
+``commitOffsets`` went from about 40 / 35 / 35 ms to 15 / 9 / 9 ms.
+Checksums stay: ``fs.file.impl`` is left alone, so every checkpoint
+file keeps its ``.crc`` sidecar. See ``streaming.tailer.run_stream``
+for what the manager changes about exactly-once.
 """
 
 from __future__ import annotations
@@ -14,6 +33,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+#: the checkpoint manager every streaming query of the session uses
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 #: ceiling of the derived driver heap, in GiB
 MAX_DRIVER_MEM_GB = 32
@@ -88,6 +113,12 @@ def get_spark(
         )
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
+        # no libhadoop in a pip install: the default FileContext manager
+        # forks readlink per status check and chmod per file, about 32
+        # processes per trigger; this one renames with File.renameTo.
+        # The .crc checksums stay (fs.file.impl untouched). The class
+        # sits in ...streaming.checkpointing from Spark 4.1 on.
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -428,7 +428,7 @@ class ChangeLogTailer:
         path = os.path.join(self.lineage_dir, f"epoch-{app}-{lineage['epoch']:012d}.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(lineage, f)
+            f.write(json.dumps(lineage))  # the C encoder, as for manifests
         os.replace(tmp, path)
         self.applied.append(lineage)
 
@@ -660,6 +660,23 @@ class ChangeLogTailer:
         itself is idempotent at event level (same (doc_id, seq) ->
         same winner), so fencing only avoids re-work — correctness
         never depends on it.
+
+        The checkpoint's logs (``offsets/``, ``commits/``,
+        ``sources/0/``) are written by the session's
+        ``FileSystemBasedCheckpointFileManager`` (``session.get_spark``):
+        each entry is a ``.<n>.<uuid>.tmp`` file renamed into place, so a
+        crash leaves at worst a stray temp file, which the logs ignore on
+        restart. A crash after the table commit and before Spark's
+        ``commits/<n>`` makes Spark re-run batch ``n``; the fence skips
+        it and no table version is added. The trade against Spark's
+        default FileContext manager: that one renames without
+        overwrite, so a second process writing the same batch file
+        fails, while this one checks that the target is absent and then
+        renames, and a local rename overwrites, so check and rename are
+        not one atomic step. Two writers of one checkpoint are still
+        kept apart: inside one session Spark allows one active run per
+        checkpoint, and the table's ``(app_id, epoch)`` fence, taken
+        under the commit lock, admits one commit per epoch.
         """
         import pyarrow.parquet as pq
 

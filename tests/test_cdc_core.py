@@ -8,6 +8,10 @@ table state after the engine's incremental per-batch MERGE applies.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 
 from ethereum_etl_airflow_spark.operators.cdc import apply_changes
@@ -136,6 +140,23 @@ def test_tailer_replay_and_resume(spark, tmp_path):
     lin = tailer2.lineage()
     assert lin.count() == 4
     assert set(lin.columns) >= {"epoch", "events_in", "offset_range", "snapshot_version"}
+
+
+def test_manifest_and_lineage_bytes_are_compact_json(spark, tmp_path):
+    """Manifests and lineage rows are written as ``json.dumps`` output
+    (the C encoder, with the default separators): each file's bytes
+    equal ``json.dumps`` of its own parsed content."""
+    feed = str(tmp_path / "feed")
+    write_feed(spark, CFG, feed, batches=range(0, 2))
+    tailer = ChangeLogTailer(spark, feed, str(tmp_path / "t"), app_id="js", num_buckets=16)
+    assert len(tailer.replay_batches()) == 2
+    manifests = glob.glob(os.path.join(str(tmp_path / "t"), "_meta", "snapshot-*.json"))
+    lineage = glob.glob(os.path.join(tailer.lineage_dir, "epoch-*.json"))
+    assert len(manifests) >= 2 and len(lineage) == 2
+    for path in manifests + lineage:
+        with open(path) as f:
+            text = f.read()
+        assert text == json.dumps(json.loads(text)), path
 
 
 def test_streaming_tailer_available_now(spark, tmp_path):
