@@ -50,8 +50,9 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      thread — amortized O(log) rewrite like an LSM tree, and the
      Iceberg ``rewrite_data_files`` shape: an ingest commit only ever
      appends, so change-feed readers never tell an append from a
-     rewrite. Compaction sets its size from the table, not the batch,
-     so it runs a distributed Spark write.
+     rewrite. Compaction sets its size from the table, not the batch:
+     one Spark job groups the folded rows by bucket, and each bucket's
+     Python task writes its L1 file with the delta's pyarrow writer.
   4. **exactly-once**: the delta commit is fenced by (app_id, epoch)
      in the snapshot manifest; a replayed epoch is skipped before any
      work. A crash between the delta and the compaction commit leaves

@@ -72,6 +72,12 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back
     to ``local[*]``) so the bench harness can pin core counts for the
     N-vs-4N scaling measurement.
+
+    A live session is returned with only what the caller passed
+    applied to it (``shuffle_partitions`` when given, and
+    ``extra_conf``): PySpark's ``getOrCreate`` re-applies every builder
+    option to a running session, so the defaults would reset whatever
+    the session was started or since set with.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -86,6 +92,10 @@ def get_spark(
     if repo not in os.environ.get("PYTHONPATH", ""):
         os.environ["PYTHONPATH"] = repo + os.pathsep + os.environ.get("PYTHONPATH", "")
     builder = SparkSession.builder
+    if SparkSession.getActiveSession() is not None:
+        if shuffle_partitions:
+            builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        return builder.config(map=extra_conf or {}).getOrCreate()
     if master is not None:
         builder = builder.master(master)
     builder = (
@@ -120,9 +130,7 @@ def get_spark(
         # sits in ...streaming.checkpointing from Spark 4.1 on.
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = builder.config(map=extra_conf or {}).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

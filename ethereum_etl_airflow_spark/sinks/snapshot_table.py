@@ -24,9 +24,10 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
     bucket with one hash aggregation (``max_by(row, (_seq, _epoch))``
     = last-writer-wins). When a bucket accumulates ``compact_files``
     files, it is compacted back to a single level-1 (L1) file of its
-    own by a separate ``compact`` commit, a distributed Spark write
-    (amortized O(log) rewrites — the Hudi-MOR / Paimon pattern, and
-    Iceberg's ``rewrite_data_files`` snapshot). The
+    own by a separate ``compact`` commit, whose Spark job groups the
+    rows by bucket and writes each group with the same pyarrow writer
+    in a Python task (amortized O(log) rewrites — the Hudi-MOR / Paimon
+    pattern, and Iceberg's ``rewrite_data_files`` snapshot). The
     physical file need not follow the logical bucket (Jigsaw's point):
     a file's rows count only for the buckets whose list still names it
     (``file_buckets`` records the bucket set of every multi-bucket
@@ -132,6 +133,43 @@ def _driver_cores() -> int:
     return os.cpu_count() or 1
 
 
+def _write_parquet(table, path: str, codec: str):
+    """Write one data file with pyarrow — every file of the table goes
+    through here, on the driver or in a Spark task. Returns the
+    writer's own footer metadata (no file is reopened), None when the
+    writer hands back none."""
+    import pyarrow.parquet as pq
+
+    footers: list = []
+    pq.write_table(table, path, compression=codec, metadata_collector=footers)
+    return footers[0] if footers else None
+
+
+#: salts of the 3 Bloom probes of a key
+_BLOOM_SEEDS = (1, 2, 3)
+
+
+def _bloom_words(buckets, doc_ids, bits: int) -> dict[str, list[int]]:
+    """Per-bucket Bloom words of an Arrow key column: bit p % 64 of
+    signed 64-bit word p // 64 is set for each probe position
+    ``p = pmod(xxhash64(doc_id, lit(s)), bits)`` that
+    :meth:`SnapshotTable.plan_lookup` checks, hashed with the numpy
+    XXH64 (each seed a 4-byte int hashed with the key's hash as its
+    seed, as Spark chains them)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ethereum_etl_airflow_spark.functions.hashing import xxhash64_arrow
+
+    h = xxhash64_arrow(doc_ids)
+    held, row = np.unique(buckets, return_inverse=True)
+    bitmap = np.zeros((len(held), bits), dtype=bool)
+    for s in _BLOOM_SEEDS:
+        bitmap[row, xxhash64_arrow(pa.array(np.full(len(h), s, np.int32)), seeds=h) % bits] = True
+    words = np.packbits(bitmap, axis=1, bitorder="little").view("<i8")
+    return {str(b): w.tolist() for b, w in zip(held, words)}
+
+
 class SnapshotTable:
     """A keyed, snapshot-versioned, merge-on-read table on a
     Hadoop-compatible FS."""
@@ -154,10 +192,9 @@ class SnapshotTable:
         before blooms were enabled (or under a different bloom_bits)
         simply have no bloom entry and are always scanned, so coverage
         is correct by construction — enabling blooms on a table with
-        existing data never hides pre-existing keys. A delta commit
-        computes the probe positions inside its gather job and ORs the
-        words on the driver; a rewriting commit costs one extra O(batch)
-        aggregation — enable for tables serving point lookups.
+        existing data never hides pre-existing keys. The probes are
+        hashed where the rows are written (on the driver for a delta,
+        in each bucket's task for a rewrite), with no extra Spark job.
 
         ``stats_cols`` lists payload columns whose per-file [min, max]
         is recorded in the manifest from the parquet footers at commit
@@ -948,7 +985,7 @@ class SnapshotTable:
                         all(
                             words[p // 64] & (1 << (p % 64))
                             for p in (
-                                spark_xxhash64(d, s) % bits for s in cls._BLOOM_SEEDS
+                                spark_xxhash64(d, s) % bits for s in _BLOOM_SEEDS
                             )
                         )
                         for d in keys_here
@@ -1235,9 +1272,10 @@ class SnapshotTable:
           one fails before anything is published;
         * a commit that replaces buckets (:meth:`compact`,
           :meth:`delete_where`, :meth:`rewrite_sorted`, rebucket, reorg
-          rewinds) sets its size from the table, not one batch, and
-          runs a distributed Spark write of one level-1 (L1) file per
-          bucket (see :meth:`_write_rewrite`).
+          rewinds) sets its size from the table, not one batch: one
+          Spark job groups ``out_df`` by ``_bucket`` and a Python task
+          writes each bucket as one level-1 (L1) file with the same
+          pyarrow writer (see :meth:`_write_buckets`).
 
         Every file is listed in ``bucket_files[b]`` for each bucket b it
         holds (``bucket_rows_written`` is exact), and manifests record
@@ -1290,11 +1328,7 @@ class SnapshotTable:
             t0 = time.perf_counter()
             with self._job_label(app_id, epoch, "rewrite" if rewrite else "flush"):
                 if rewrite:
-                    evidence = self._footer_evidence(
-                        self._write_rewrite(out_df, out_dir, sort_cols)
-                    )
-                    if self.bloom_bits:
-                        bucket_words = self._commit_bloom_words(out_df)
+                    evidence, bucket_words = self._write_buckets(out_df, out_dir, sort_cols)
                 else:
                     evidence, bucket_words = self._write_runs(
                         out_df, out_dir, sort_cols, phase, _on_gather
@@ -1312,6 +1346,8 @@ class SnapshotTable:
         # entry is exact)
         new_bloom_entries: dict[str, dict[str, list[int]]] = {}
         for f, (counts, md) in evidence.items():
+            if md is None:
+                raise RuntimeError(f"parquet writer returned no footer for {f}")
             for b, n in counts.items():
                 written.setdefault(b, []).append(f)
                 bucket_rows[b] = bucket_rows.get(b, 0) + n
@@ -1533,6 +1569,11 @@ class SnapshotTable:
     # pyarrow write runs on the driver) and one per bucket
     _RUN_ROWS = 1 << 15
 
+    def _parquet_codec(self) -> str:
+        """pyarrow's name for the session's parquet codec."""
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        return {"uncompressed": "none"}.get(codec, codec)
+
     def _write_runs(
         self, out, out_dir: str, sort_cols: list[str] | None, phase, on_gather
     ) -> tuple[dict[str, tuple[dict[str, int], object]], dict[str, list[int]]]:
@@ -1548,21 +1589,17 @@ class SnapshotTable:
         ``ceil(rows / _RUN_ROWS)`` capped at the driver's cores and the
         bucket count, so the layout follows the batch and the machine
         that writes it. Each run is sorted by ``(_bucket, doc_id)``
-        (``sort_cols`` replaces doc_id) and written by pyarrow on a pool
-        of P threads with the codec of
-        ``spark.sql.parquet.compression.codec``.
+        (``sort_cols`` replaces doc_id) and written by
+        :func:`_write_parquet` on a pool of P threads.
 
-        Returns each file's per-bucket row counts and the writer's own
-        footer metadata (no file is reopened), and with blooms on each
-        bucket's Bloom words, from probe positions hashed on the driver
-        (:meth:`_bloom_positions_arrow`). A batch larger than
-        ``spark.driver.maxResultSize`` fails in the gather (a Table:
-        before it), before any file is written."""
+        Returns each file's per-bucket row counts and footer, and with
+        blooms on each bucket's Bloom words, hashed on the driver. A
+        batch larger than ``spark.driver.maxResultSize`` fails in the
+        gather (a Table: before it), before any file is written."""
         from concurrent.futures import ThreadPoolExecutor
 
         import numpy as np
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         t = time.perf_counter()
         if isinstance(out, DataFrame):
@@ -1576,7 +1613,7 @@ class SnapshotTable:
             phase["check"] = time.perf_counter() - t - phase["gather"]
         buckets = batch.column("_bucket").to_numpy()
         bucket_words = (
-            self._bloom_words(buckets, self._bloom_positions_arrow(batch.column("doc_id")))
+            _bloom_words(buckets, batch.column("doc_id"), self.bloom_bits)
             if self.bloom_bits
             else {}
         )
@@ -1585,8 +1622,7 @@ class SnapshotTable:
             1,
             min(-(-batch.num_rows // self._RUN_ROWS), _driver_cores(), self.num_buckets),
         )
-        codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
-        codec = {"uncompressed": "none"}.get(codec, codec)
+        codec = self._parquet_codec()
         sort_keys = ["_bucket", *(sort_cols or ["doc_id"])]
         order = [(c, "ascending") for c in sort_keys]
         # one stable split of the batch into runs: run r is
@@ -1604,17 +1640,9 @@ class SnapshotTable:
             keys = batch.select(sort_keys).take(rows)
             rows = rows[pc.sort_indices(keys, sort_keys=order).to_numpy()]
             rel = os.path.join(rel_dir, f"run-{r:05d}.parquet")
-            footers: list = []
-            pq.write_table(
-                batch.take(rows),
-                os.path.join(self.root, rel),
-                compression=codec,
-                metadata_collector=footers,
-            )
-            if not footers:
-                raise RuntimeError(f"parquet writer returned no footer for {rel}")
+            md = _write_parquet(batch.take(rows), os.path.join(self.root, rel), codec)
             held, counts = np.unique(buckets[rows], return_counts=True)
-            return rel, ({str(b): int(n) for b, n in zip(held, counts)}, footers[0])
+            return rel, ({str(b): int(n) for b, n in zip(held, counts)}, md)
 
         if batch.num_rows:
             os.makedirs(out_dir)
@@ -1622,47 +1650,52 @@ class SnapshotTable:
             runs = [e for e in pool.map(write, range(n_runs)) if e is not None]
         return dict(runs), bucket_words
 
-    def _write_rewrite(
+    def _write_buckets(
         self, out_df: DataFrame, out_dir: str, sort_cols: list[str] | None
-    ) -> dict[str, str]:
-        """Distributed Spark write of a commit that replaces buckets:
-        every bucket's rows land in one L1 file of its own (``_run`` =
-        bucket, ``_bucket`` kept as a column). Returns each written
-        file's bucket."""
-        n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        # sort within each file: parquet column min/max stats then let
-        # scans skip whole row groups (Iceberg sort-order analogue).
-        # Default key = doc_id (point lookups); ``sort_cols`` overrides
-        # for layout rewrites (e.g. a Z-order key for 2-D pruning, or
-        # _seq for replay-range scans).
-        sort_keys = ["_run", *(sort_cols or ["doc_id"])]
-        out_df.repartition(n_out, "_bucket").withColumn(
-            "_run", F.col("_bucket")
-        ).sortWithinPartitions(*sort_keys).write.partitionBy("_run").parquet(out_dir)
-        file_bucket: dict[str, str] = {}
-        if os.path.isdir(out_dir):
-            for entry in sorted(os.listdir(out_dir)):
-                if not entry.startswith("_run="):
-                    continue
-                rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-                for fn in sorted(os.listdir(os.path.join(out_dir, entry))):
-                    if fn.endswith(".parquet"):
-                        file_bucket[os.path.join(rel_dir, fn)] = entry.split("=", 1)[1]
-        return file_bucket
+    ) -> tuple[dict[str, tuple[dict[str, int], object]], dict[str, list[int]]]:
+        """Write a commit that replaces buckets: one Spark job groups
+        ``out_df`` by ``_bucket`` and hands each bucket to a Python task
+        as Arrow, which sorts it by ``sort_cols`` (default doc_id, for
+        point lookups; a layout rewrite passes e.g. a Z-order key), so
+        parquet min/max stats let scans skip row groups, and writes it
+        as one L1 file with :func:`_write_parquet`, keeping ``_bucket``
+        as a column. Each task returns its file, row count,
+        pickled footer and, with blooms on, the bucket's Bloom words;
+        the result is the same evidence :meth:`_write_runs` returns."""
+        import pickle
 
-    def _footer_evidence(
-        self, file_bucket: dict[str, str]
-    ) -> dict[str, tuple[dict[str, int], object]]:
-        """Row count and footer metadata of each single-bucket file
-        already on disk, read with pyarrow on the driver (no Spark
-        job). A failed read raises."""
-        import pyarrow.parquet as pq
+        root, codec, bits = self.root, self._parquet_codec(), self.bloom_bits
+        rel_dir = os.path.relpath(out_dir, self.root)
+        order = [(c, "ascending") for c in (sort_cols or ["doc_id"])]
 
-        out: dict[str, tuple[dict[str, int], object]] = {}
-        for f, b in file_bucket.items():
-            md = pq.ParquetFile(os.path.join(self.root, f)).metadata
-            out[f] = ({b: md.num_rows}, md)
-        return out
+        def write_bucket(key, table):
+            import pyarrow as pa
+
+            b = key[0].as_py()
+            rel = os.path.join(rel_dir, f"bucket-{b:05d}.parquet")
+            os.makedirs(os.path.join(root, rel_dir), exist_ok=True)
+            md = _write_parquet(table.sort_by(order), os.path.join(root, rel), codec)
+            words = (
+                _bloom_words(table.column("_bucket").to_numpy(), table.column("doc_id"), bits)[str(b)]
+                if bits
+                else None
+            )
+            return pa.table({
+                "file": [rel],
+                "bucket": [b],
+                "rows": [table.num_rows],
+                "footer": pa.array([None if md is None else pickle.dumps(md)], pa.binary()),
+                "bloom": pa.array([words], pa.list_(pa.int64())),
+            })
+
+        schema = "file string, bucket long, rows long, footer binary, bloom array<long>"
+        written = out_df.groupBy("_bucket").applyInArrow(write_bucket, schema).toArrow().to_pylist()
+        evidence = {
+            w["file"]: ({str(w["bucket"]): w["rows"]}, w["footer"] and pickle.loads(w["footer"]))
+            for w in written
+        }
+        words = {str(w["bucket"]): w["bloom"] for w in written if w["bloom"] is not None}
+        return evidence, words
 
     def rebucket(self, new_num_buckets: int, app_id: str = "maintenance") -> dict:
         """Online partition-spec evolution: rewrite the table into a new
@@ -1691,79 +1724,6 @@ class SnapshotTable:
                 "to_buckets": new_num_buckets,
             },
         )
-
-    # ------------------------------------------------------------- blooms
-
-    _BLOOM_SEEDS = (1, 2, 3)
-
-    def _bloom_positions(self, doc_id_col) -> list:
-        """Bit positions for a key — the same 3 salted-xxhash64 probes
-        on write and lookup."""
-        return [
-            F.pmod(F.xxhash64(doc_id_col, F.lit(s)), F.lit(self.bloom_bits))
-            for s in self._BLOOM_SEEDS
-        ]
-
-    def _bloom_positions_arrow(self, doc_ids) -> list:
-        """The same probe positions as :meth:`_bloom_positions`, hashed
-        on the driver over an Arrow key column (numpy arrays): each
-        seed ``s`` is a 4-byte int hashed with the key's hash as its
-        seed, as ``xxhash64(doc_id, lit(s))`` chains them."""
-        import numpy as np
-        import pyarrow as pa
-
-        from ethereum_etl_airflow_spark.functions.hashing import xxhash64_arrow
-
-        h = xxhash64_arrow(doc_ids)
-        return [
-            xxhash64_arrow(pa.array(np.full(len(h), s, np.int32)), seeds=h) % self.bloom_bits
-            for s in self._BLOOM_SEEDS
-        ]
-
-    def _commit_bloom_words(self, out_df: DataFrame) -> dict[str, list[int]]:
-        """Per-bucket Bloom words for THIS commit's rows only (one hash
-        aggregation; map-side combine collapses each partition first).
-        The caller attaches them to the files the commit wrote."""
-        n_words = self.bloom_bits // 64
-        tmp = out_df.select(
-            "_bucket",
-            *[
-                p.alias(f"pos{si}")
-                for si, p in enumerate(self._bloom_positions(F.col("doc_id")))
-            ],
-        )
-        aggs = []
-        for si in range(len(self._BLOOM_SEEDS)):
-            word = F.floor(F.col(f"pos{si}") / 64).cast("int")
-            # shiftleft needs a column shift amount -> SQL expression form
-            bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos{si} % 64 AS INT))")
-            for w in range(n_words):
-                aggs.append(
-                    F.bit_or(F.when(word == w, bit).otherwise(0)).alias(f"s{si}w{w}")
-                )
-        rows = tmp.groupBy("_bucket").agg(*aggs).collect()
-        out: dict[str, list[int]] = {}
-        for r in rows:
-            words = [0] * n_words
-            for si in range(len(self._BLOOM_SEEDS)):
-                for w in range(n_words):
-                    words[w] |= r[f"s{si}w{w}"] or 0
-            out[str(r["_bucket"])] = words
-        return out
-
-    def _bloom_words(self, buckets, positions: list) -> dict[str, list[int]]:
-        """Per-bucket Bloom words from numpy probe positions — the same
-        words :meth:`_commit_bloom_words` aggregates in Spark (signed
-        64-bit, bit p % 64 of word p // 64), ORed on the driver."""
-        import numpy as np
-
-        bits = self.bloom_bits
-        n_buckets = int(buckets.max()) + 1 if len(buckets) else 0
-        bitmap = np.zeros((n_buckets, bits), dtype=bool)
-        for pos in positions:
-            bitmap[buckets, pos] = True
-        words = np.packbits(bitmap, axis=1, bitorder="little").view("<i8")
-        return {str(b): words[b].tolist() for b in np.unique(buckets)}
 
     # -------------------------------------------------------- maintenance
 
@@ -2258,13 +2218,14 @@ class SnapshotTable:
         }
         if not scope:
             return {"buckets_scoped": 0, "version": snap["version"]}
-        rel_dir = os.path.join("data", f"eqdel-{uuid.uuid4().hex}")
-        key_df.coalesce(1).write.parquet(os.path.join(self.root, rel_dir))
-        key_file = next(
-            os.path.join(rel_dir, fn)
-            for fn in os.listdir(os.path.join(self.root, rel_dir))
-            if fn.endswith(".parquet")
+        # one key file, written by the table's one writer as a single
+        # group (its _bucket column is a constant, not a table bucket)
+        evidence, _ = self._write_buckets(
+            key_df.withColumn("_bucket", F.lit(0)),
+            os.path.join(self._data, f"eqdel-{uuid.uuid4().hex}"),
+            None,
         )
+        (key_file,) = evidence
         result = self.commit(
             None,
             replace_buckets=set(),

@@ -478,9 +478,9 @@ class ChangeLogTailer:
         out = out.withColumn(
             "_bucket", bucket_expr(F.col("doc_id"), self.table.num_buckets)
         )
-        # a bulk load is written as a rewrite of the (empty) table: a
-        # distributed write of one L1 file per bucket, never a gather of
-        # the whole state to the driver
+        # a bulk load is written as a rewrite of the (empty) table: each
+        # bucket's task writes its L1 file, never a gather of the whole
+        # state to the driver
         snap = self.table.commit(
             out,
             replace_buckets=set(),

@@ -1,11 +1,12 @@
 """Pure-delta commits are written by pyarrow on the driver as level-0
 sorted runs (a DataFrame batch is first gathered as Arrow); commits
-that replace buckets keep the distributed Spark write. These tests
-check that the Arrow-written files read back exactly the rows
-committed, for every column type the package's tables write and across
-schema evolution; that an empty delta publishes only its epoch fence;
-that a non-compacting apply is one labelled Spark job with no shuffle
-and no Spark parquet write, and a replayed or streamed one (read with
+that replace buckets write each bucket with the same pyarrow writer in
+a grouped Arrow task. These tests check that the Arrow-written files
+read back exactly the rows committed, for every column type the
+package's tables write (through a delta, a compaction and a rebucket)
+and across schema evolution; that an empty delta publishes only its
+epoch fence; that a non-compacting apply is one labelled Spark job
+with no shuffle and no Spark parquet write, and a replayed or streamed one (read with
 pyarrow, a micro-batch from the files walked from its planned scan) runs
 no Spark job at all; that the run count follows the batch and the
 driver, not the cluster; and that the driver-side batch is bounded: a
@@ -117,11 +118,18 @@ def test_arrow_delta_reads_back_every_column_type(spark, tmp_path):
     )
     files = {f for fs in snap["added_files"].values() for f in fs}
     assert files and _pyarrow_written(t, files)
-    got = t.read_seq_range()
-    assert [f.dataType for f in got.schema.fields] == [
-        f.dataType for f in df.schema.fields
-    ]
-    _assert_same_rows(got, df)
+    # the rewrite path writes every type too: a compaction keeps the
+    # buckets, a rebucket moves every row to a new one
+    for rewrite in (t.compact, lambda: t.rebucket(4)):
+        snap = rewrite()
+        files = {f for fs in snap["bucket_files"].values() for f in fs}
+        assert files and _pyarrow_written(t, files)
+        assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
+        got = t.read_seq_range()
+        assert [f.dataType for f in got.schema.fields] == [
+            f.dataType for f in df.schema.fields
+        ]
+        _assert_same_rows(got, df)
 
 
 def test_arrow_delta_reads_back_across_schema_evolution(spark, tmp_path):
@@ -174,9 +182,9 @@ def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeyp
     """A non-compacting apply on a DataFrame source runs exactly one
     Spark job, tagged ``cdc:<app>:<epoch>:flush``, without a
     repartition or a Spark parquet write; a compacting apply runs the
-    same one flush job, then its compaction as a commit of its own on
-    the Spark write path, under the ``cdc:maintenance:<n>:rewrite``
-    label."""
+    same one flush job, then its compaction as a commit of its own,
+    under the ``cdc:maintenance:<n>:rewrite`` label, whose bucket tasks
+    write with pyarrow, not Spark's parquet writer."""
     cfg = FeedConfig(n_docs=300, events_per_batch=500, n_batches=3)
     t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, compact_files=3)
     apply_changes(t, generate_batch(spark, cfg, 0), "jobs", epoch=0)
@@ -186,18 +194,18 @@ def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeyp
     batch = generate_batch(spark, cfg, 1)
 
     def forbidden(*a, **kw):
-        raise AssertionError("a pure-delta commit must not shuffle or use Spark's writer")
+        raise AssertionError("no commit may use Spark's writer, nor a pure delta shuffle")
 
-    monkeypatch.setattr(type(batch), "repartition", forbidden)
     monkeypatch.setattr(DataFrameWriter, "parquet", forbidden)
     group = f"apply-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        li = apply_changes(t, batch, "jobs", epoch=1)
+        with monkeypatch.context() as mp:
+            mp.setattr(type(batch), "repartition", forbidden)
+            li = apply_changes(t, batch, "jobs", epoch=1)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    monkeypatch.undo()
     assert li["compacted_buckets"] == 0
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 1
@@ -214,6 +222,7 @@ def test_non_compacting_apply_is_one_labelled_spark_job(spark, tmp_path, monkeyp
     assert len(tracker.getJobIdsForTag(f"cdc:maintenance:{n}:rewrite")) >= 1
     assert t.snapshot()["lineage"]["op"] == "compact"
     assert t.snapshot(li["snapshot_version"])["lineage"] == {"op": "cdc_apply", "epoch": 2}
+    assert _pyarrow_written(t, _data_files(t))
 
 
 @pytest.mark.parametrize("codec", ["snappy", "zstd"])

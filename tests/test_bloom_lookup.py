@@ -17,6 +17,36 @@ def _frame(spark, table, keys, seq):
     ).withColumn("_bucket", bucket_expr(F.col("doc_id"), table.num_buckets))
 
 
+def _spark_bloom_words(df, bits: int) -> dict[str, list[int]]:
+    """Reference Bloom words per bucket of ``df``'s rows, aggregated in
+    Spark: probe ``s`` of a key is bit ``pmod(xxhash64(doc_id, s),
+    bits)``, bit p % 64 of signed 64-bit word p // 64."""
+    seeds = (1, 2, 3)
+    n_words = bits // 64
+    tmp = df.select(
+        "_bucket",
+        *[
+            F.pmod(F.xxhash64(F.col("doc_id"), F.lit(s)), F.lit(bits)).alias(f"pos{si}")
+            for si, s in enumerate(seeds)
+        ],
+    )
+    aggs = []
+    for si in range(len(seeds)):
+        word = F.floor(F.col(f"pos{si}") / 64).cast("int")
+        # shiftleft needs a column shift amount -> SQL expression form
+        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos{si} % 64 AS INT))")
+        for w in range(n_words):
+            aggs.append(F.bit_or(F.when(word == w, bit).otherwise(0)).alias(f"s{si}w{w}"))
+    out: dict[str, list[int]] = {}
+    for r in tmp.groupBy("_bucket").agg(*aggs).collect():
+        words = [0] * n_words
+        for si in range(len(seeds)):
+            for w in range(n_words):
+                words[w] |= r[f"s{si}w{w}"] or 0
+        out[str(r["_bucket"])] = words
+    return out
+
+
 def _write(spark, table, keys, seq, replace=False):
     df = _frame(spark, table, keys, seq)
     table.commit(
@@ -158,7 +188,7 @@ def test_bloom_words_of_arrow_delta_match_spark_aggregation(spark, tmp_path):
         pq.read_metadata(str(tmp_path / "t" / f)).created_by.startswith("parquet-cpp-arrow")
         for f in files
     )
-    expected = t._commit_bloom_words(_frame(spark, t, keys, seq=1))
+    expected = _spark_bloom_words(_frame(spark, t, keys, seq=1), 4096)
     got = {b: words for entry in snap["file_blooms"].values() for b, words in entry.items()}
     assert got == expected
     for f in files:
@@ -179,10 +209,37 @@ def test_bloom_words_of_arrow_delta_match_spark_aggregation(spark, tmp_path):
         rows = spark.read.parquet(os.path.join(feed, f"batch-{li['epoch']:06d}")).withColumn(
             "_bucket", bucket_expr(F.col("doc_id"), 8)
         )
-        expected = tailer.table._commit_bloom_words(rows)
+        expected = _spark_bloom_words(rows, 4096)
         added = {f for fs in snap["added_files"].values() for f in fs}
         got = {b: w for f in added for b, w in snap["file_blooms"][f].items()}
         assert got == expected
         for f in added:
             for k in pq.read_table(os.path.join(tailer.table.root, f), columns=["doc_id"]).column(0).to_pylist():
                 assert f in SnapshotTable.plan_lookup(snap, [k]), k
+
+
+def test_bloom_words_of_compacted_files_match_spark_aggregation(spark, tmp_path):
+    """A compaction writes each bucket's L1 file and its Bloom words in
+    the bucket's own Arrow task; the words equal the Spark aggregation
+    over the folded rows, and every key is still found."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=8, bloom_bits=4096)
+    for seq in range(1, 4):
+        _write(spark, t, [f"key-{seq}-{i}" for i in range(150)] + ["shared"], seq=seq)
+    t.compact(app_id="bl-maint")
+    snap = t.snapshot()
+    assert snap["lineage"]["op"] == "compact"
+    files = {f for fs in snap["bucket_files"].values() for f in fs}
+    assert all(len(fs) == 1 for fs in snap["bucket_files"].values())
+    assert all(
+        pq.read_metadata(str(tmp_path / "t" / f)).created_by.startswith("parquet-cpp-arrow")
+        for f in files
+    )
+    folded = t.read_raw().withColumn("_bucket", bucket_expr(F.col("doc_id"), 8))
+    got = {b: words for f in files for b, words in snap["file_blooms"][f].items()}
+    assert got == _spark_bloom_words(folded, 4096)
+    for f in files:
+        for k in pq.read_table(str(tmp_path / "t" / f), columns=["doc_id"]).column(0).to_pylist():
+            assert SnapshotTable.plan_lookup(snap, [k]) == [f], k
+    assert SnapshotTable.plan_lookup(snap, ["absent-1", "absent-2"]) == []

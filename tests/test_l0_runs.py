@@ -14,6 +14,7 @@ import os
 import time
 from collections import Counter
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
@@ -260,7 +261,8 @@ def test_cdf_follow_emits_each_change_once(spark, tmp_path):
 def test_failed_footer_read_publishes_nothing(spark, tmp_path, monkeypatch):
     """Both write paths fail before publishing when a file's footer
     evidence is missing: a delta commit whose parquet writer hands back
-    no footer, and a rewriting commit whose footer read fails."""
+    no footer, and a rewriting commit whose bucket tasks' results reach
+    the driver without one."""
     t = _table(spark, tmp_path)
     batches = _batches()
     _apply(spark, t, batches[0], 0)
@@ -277,12 +279,20 @@ def test_failed_footer_read_publishes_nothing(spark, tmp_path, monkeypatch):
         _apply(spark, t, batches[1], 1)
     monkeypatch.undo()
 
-    class Broken:
-        def __init__(self, *a, **kw):
-            raise OSError("footer unreadable")
+    # the writer runs in Python workers, out of a monkeypatch's reach:
+    # drop the footers from the task results the driver collects
+    frame = type(spark.range(0))
+    to_arrow = frame.toArrow
 
-    monkeypatch.setattr(pq, "ParquetFile", Broken)
-    with pytest.raises(OSError, match="footer unreadable"):
+    def footers_lost(df):
+        got = to_arrow(df)
+        if "footer" not in got.column_names:
+            return got
+        i = got.column_names.index("footer")
+        return got.set_column(i, "footer", pa.nulls(got.num_rows, pa.binary()))
+
+    monkeypatch.setattr(frame, "toArrow", footers_lost)
+    with pytest.raises(RuntimeError, match="no footer"):
         t.compact(app_id="l0-maint")
     monkeypatch.undo()
     # no manifest without seq evidence was published

@@ -2,12 +2,14 @@
 MemTotal, whole GiB, between 1g and 32g; hosts without /proc/meminfo
 get the 32g ceiling. Streaming checkpoints are written by Spark's
 FileSystem-based checkpoint manager unless ``extra_conf`` says
-otherwise."""
+otherwise. ``get_spark`` on a live session applies only what its caller
+passed."""
 
 import pytest
 
 from ethereum_etl_airflow_spark.session import (
     CHECKPOINT_FILE_MANAGER,
+    DEFAULT_SHUFFLE_PARTITIONS,
     default_driver_memory,
     get_spark,
 )
@@ -57,7 +59,8 @@ def _checkpoint_manager(spark, path) -> str:
 @pytest.fixture
 def conf_restored(spark):
     """The shared session, with every conf put back as it was after the
-    test (``get_spark`` on a live session re-applies its options to it)."""
+    test (``get_spark`` on a live session applies the caller's
+    ``shuffle_partitions`` and ``extra_conf`` to it)."""
     before = dict(spark.conf.getAll)
     yield spark
     for k, v in dict(spark.conf.getAll).items():
@@ -88,3 +91,20 @@ def test_extra_conf_overrides_the_checkpoint_manager(conf_restored, tmp_path):
     assert same is spark
     assert spark.conf.get(CHECKPOINT_KEY) == FILE_CONTEXT_MANAGER
     assert _checkpoint_manager(spark, tmp_path / "cp") == FILE_CONTEXT_MANAGER
+
+
+def test_live_session_keeps_its_conf(conf_restored):
+    """A bare ``get_spark()`` leaves a live session's conf as it is,
+    not reset to the defaults (shuffle partitions, codec); the caller's
+    ``shuffle_partitions`` and ``extra_conf`` still apply."""
+    spark = conf_restored
+    spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS + 3))
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
+    before = dict(spark.conf.getAll)
+    assert get_spark() is spark
+    assert dict(spark.conf.getAll) == before
+    tz = {"spark.sql.session.timeZone": "Asia/Tokyo"}
+    assert get_spark(shuffle_partitions=3, extra_conf=tz) is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "snappy"
